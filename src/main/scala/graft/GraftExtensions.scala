@@ -16,12 +16,9 @@ import graft.functions.{CosineSim, HyperplaneSig, MinHashSig, SimHash64}
   * then `SELECT simhash64(split(text, ' ')), cosine_sim(a, b),
   * minhash_sig(toks, 16, 3) FROM ...` work in plain SQL.
   *
-  * Also injects the [[graft.plans.RewriteTopOneToMaxBy]] optimizer rule
-  * (row_number()=1 dedup → max_by aggregate — sort-free plan shape, time-
-  * neutral at local scale; kill-switch `spark.graft.rewriteTopOne=false`).
-  * Parity with the
-  * reference needs no planner `Strategy` (SURVEY.md §4) — the rule is a
-  * pure plan-quality optimization, not new semantics. */
+  * Functions only: parity with the reference needs no optimizer rule or
+  * planner `Strategy` (SURVEY.md §4). The `row_number() = 1` dedup idiom
+  * is left to Spark's own `InferWindowGroupLimit`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String, usage: String) =
@@ -29,7 +26,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "", "", "", "", "", "", "scala_udf")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => graft.plans.RewriteTopOneToMaxBy)
     ext.injectFunction((FunctionIdentifier("simhash64"),
       info("simhash64", "simhash64(array<string>) - 64-bit SimHash"),
       (args: Seq[Expression]) => SimHash64(args.head)))
@@ -129,16 +125,9 @@ object GraftExtensions {
     e.eval().asInstanceOf[Number].intValue()
   }
 
-  /** Register the same functions + optimizer rule on an already-built
-    * session (extensions normally apply at build time; this covers
-    * driver-owned sessions). The rule lands in the "User Provided
-    * Optimizers" batch, which runs after `InsertWindowGroupLimit` — the
-    * rule's matcher handles the already-inserted group-limit node. */
+  /** Register the same functions on an already-built session (extensions
+    * normally apply at build time; this covers driver-owned sessions). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteTopOneToMaxBy)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RewriteTopOneToMaxBy
-    }
     val reg: FunctionRegistry = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("simhash64",
       (args: Seq[Expression]) => SimHash64(args.head), "scala_udf")

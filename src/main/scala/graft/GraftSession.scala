@@ -50,8 +50,7 @@ object GraftSession {
 
   /** Apply the engine's session-level SQL configs to an externally-built
     * session (e.g. the driver's). Idempotent; runtime-settable confs plus
-    * the graft extensions (SQL functions + the top-one rewrite rule,
-    * which registers post-hoc via experimental.extraOptimizations). */
+    * the graft SQL functions. */
   def tune(spark: SparkSession): SparkSession = {
     GraftExtensions.register(spark)
     spark.conf.set("spark.sql.ansi.enabled", "false")

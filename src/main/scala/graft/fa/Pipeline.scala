@@ -22,7 +22,6 @@ import graft.ops.Sources
   */
 class Pipeline(spark: SparkSession, inputDir: String,
                names: Schemas.FamilyNames = Schemas.FamilyNames(),
-               deterministicRanks: Boolean = true,
                partitionByFips: Boolean = false,
                logFile: Option[String] = None) {
 
@@ -115,8 +114,7 @@ class Pipeline(spark: SparkSession, inputDir: String,
     val raw = classifyRaw()
 
     val deedClean = stage("Deed")(Stages.cleanSales(readFamily(raw(names.deed))))
-    val rankedDeed = stageNoPart("ranked_Deed")(
-      Stages.rankSales(deedClean, randomTies = !deterministicRanks))
+    val rankedDeed = stageNoPart("ranked_Deed")(Stages.rankSales(deedClean))
     val prop = stage(names.annual)(Stages.cleanProp(readFamily(raw(names.annual))))
     val taxHist = stageNoPart(names.taxHist)(
       Stages.cleanTaxHist(readFamily(raw(names.taxHist))))

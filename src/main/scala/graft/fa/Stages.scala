@@ -1,6 +1,6 @@
 package graft.fa
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.ops.{Exprs, Joins, Windows}
@@ -41,19 +41,16 @@ object Stages {
   /** Deed rank (fa-etl.py:96-106): keep the latest arms-length sale per
     * (RecordingYear, PropertyID). The reference breaks equal-date ties
     * randomly (rank(method="random", seed=1)); engines can't share a seeded
-    * RNG, so the default tie-break is a deterministic total order
-    * (SURVEY.md §5) and `randomTies=true` restores reference-compatible
-    * behavior for parity experiments. */
-  def rankSales(cleaned: DataFrame, randomTies: Boolean = false): DataFrame = {
-    val ties: Seq[Column] =
-      if (randomTies) Seq(rand(1))
-      else Seq(col("SaleAmt").desc, col("SaleDate").desc_nulls_last)
+    * RNG, so the tie-break is a deterministic total order (SURVEY.md §5).
+    * Spark plans the rank filter with a `WindowGroupLimit` pre-reduction
+    * before the exchange, so the shuffle carries ~|groups| rows. */
+  def rankSales(cleaned: DataFrame): DataFrame =
     Windows.topOnePerGroup(
         cleaned.filter(col("SaleFlag") === 1),
         Seq(col("RecordingYear"), col("PropertyID")),
-        col("RecordingDate").desc +: ties)
+        Seq(col("RecordingDate").desc, col("SaleAmt").desc,
+          col("SaleDate").desc_nulls_last))
       .select(col("PropertyID"), col("SaleAmt"), col("RecordingYear"))
-  }
 
   /** Prop/Annual clean (fa-etl.py:161-176): residential filter, geo
     * zero→null, zero-padded keys, geo-status whitelist, strict concat with
@@ -131,20 +128,15 @@ object Stages {
     * one Exchange per side and reuses the fact side's partitioning across
     * the three joins (verified in PLANS.md).
     *
-    * `validateCardinality` enforces the reference's `validate='m:1'` intent
-    * (fa-etl.py:464) on the prop join: a duplicated PropertyID in prop
-    * would silently fan out the panel, so it aborts instead — LAZILY
+    * The prop join enforces the reference's `validate='m:1'` intent
+    * (fa-etl.py:464): a duplicated PropertyID in prop would silently fan
+    * out the panel, so it aborts instead — LAZILY
     * (Joins.withUniqueKeyGuard rides the join's execution), keeping this
     * function's pure-plan-construction contract: building the plan runs
-    * zero jobs. */
+    * zero jobs. Prop rows with a NULL PropertyID match nothing and pass. */
   def unifiedJoin(rankedValHist: DataFrame, prop: DataFrame,
-                  rankedDeed: DataFrame, taxHist: DataFrame,
-                  broadcastProp: Boolean = false,
-                  validateCardinality: Boolean = true): DataFrame =
-    (if (validateCardinality)
-       Joins.leftJoinValidated(rankedValHist, prop, Seq("PropertyID"),
-         expect = "m:1", broadcastRight = broadcastProp)
-     else Joins.leftJoin(rankedValHist, prop, Seq("PropertyID"), broadcastProp))
+                  rankedDeed: DataFrame, taxHist: DataFrame): DataFrame =
+    Joins.leftJoinValidated(rankedValHist, prop, Seq("PropertyID"), expect = "m:1")
       .transform(d => Joins.leftJoinRenamed(d, rankedDeed,
         Seq("PropertyID" -> "PropertyID", "Year" -> "RecordingYear")))
       .transform(d => Joins.leftJoinRenamed(d, taxHist,

@@ -38,33 +38,24 @@ object Joins {
     leftJoin(left, renamed, keyMap.map(_._1), broadcastRight)
   }
 
-  /** Fail fast unless `df` is unique on `keys` — the reusable half of the
-    * reference's join-cardinality intent (`validate='m:1'`, fa-etl.py:464)
-    * and its ad-hoc uniqueness asserts (fa-etl.py:348-349). One aggregation
-    * pass (map-side combine, then only the >1 groups survive the filter),
-    * so at scale it costs a fraction of the join it protects. */
-  def assertUnique(df: DataFrame, keys: Seq[String], side: String = "input"): Unit = {
-    val dups = df.groupBy(keys.map(col): _*)
-      .count().filter(col("count") > 1).limit(3).collect()
-    if (dups.nonEmpty)
-      throw new IllegalArgumentException(
-        s"$side is not unique on (${keys.mkString(", ")}): " +
-          s"e.g. ${dups.map(_.toString).mkString("; ")}")
-  }
-
-  /** LAZY uniqueness guard: returns `df` with its first key column wrapped
+  /** LAZY uniqueness guard — the reference's join-cardinality intent
+    * (`validate='m:1'`, fa-etl.py:464) and its ad-hoc uniqueness asserts
+    * (fa-etl.py:348-349): returns `df` with its first key column wrapped
     * so that any duplicated key RAISES when the plan executes. Plan
-    * construction triggers zero jobs (the eager [[assertUnique]] ran a
-    * collect-terminated aggregation even when the caller never executed
-    * the join); the check rides the join's own execution — a per-key
-    * window count on the guarded side, and the join key itself carries
-    * the `raise_error`, so column pruning can never silently drop the
-    * guard (the join must evaluate its keys).
+    * construction triggers zero jobs; the check rides the join's own
+    * execution — a per-key window count on the guarded side, and the join
+    * key itself carries the `raise_error`, so column pruning can never
+    * silently drop the guard (the join must evaluate its keys).
+    *
+    * A key with ANY NULL column passes however often it repeats: an
+    * equi-join never matches it, so it cannot fan out the other side (an
+    * extract with several unparseable keys is damaged input, not a
+    * cardinality violation).
     *
     * Cost model: one extra hash shuffle of the GUARDED side on the join
-    * keys (the window), replacing the eager variant's full extra
-    * scan + aggregation job. The guarded side of an m:1 contract is the
-    * dimension side, so at 100 TB this is the cheap side either way.
+    * keys (the window), instead of a separate scan + aggregation job. The
+    * guarded side of an m:1 contract is the dimension side, so at 100 TB
+    * this is the cheap side either way.
     *
     * CAVEAT — the guard sees the side AS RETURNED, not as scanned: the
     * window counts keys in this DataFrame's result, and Catalyst pushes
@@ -73,14 +64,15 @@ object Joins {
     * before the count runs — duplicates on pruned keys go undetected
     * (the surviving key's own duplicates still raise). A contract over
     * the FULL table needs the guard applied before such filters are
-    * possible, or the eager [[assertUnique]]. */
+    * possible. */
   def withUniqueKeyGuard(df: DataFrame, keys: Seq[String],
                          side: String = "input"): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
     val k0 = keys.head
     df.withColumn("__graft_keycnt", count(lit(1)).over(w))
       .withColumn(k0,
-        when(col("__graft_keycnt") <= 1, col(k0))
+        when(col("__graft_keycnt") <= 1 || keys.map(k => col(k).isNull).reduce(_ || _),
+          col(k0))
           .otherwise(raise_error(concat(
             lit(s"$side is not unique on (${keys.mkString(", ")}): e.g. key="),
             concat_ws(",", keys.map(k => col(k).cast("string")): _*)))))
@@ -96,8 +88,7 @@ object Joins {
     *
     * Enforcement is LAZY ([[withUniqueKeyGuard]]): building the plan runs
     * nothing; the first action over the join raises on a contract
-    * violation. Pipelines that want the old scan-before-join behavior can
-    * still call [[assertUnique]] as an explicit phase. */
+    * violation. NULL keys never match, so they never violate it. */
   def leftJoinValidated(left: DataFrame, right: DataFrame, keys: Seq[String],
                         expect: String,
                         broadcastRight: Boolean = false): DataFrame = {

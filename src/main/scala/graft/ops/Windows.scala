@@ -52,8 +52,8 @@ object Windows {
     * 8 g heap the same wide shape drives BOTH forms into executor-killing
     * spill OOMs (sorter and hash-agg buffers alike hold whole wide rows),
     * so the real wide-row lever at scale is partition sizing, not
-    * window-vs-agg. Keep whichever reads better; this one survives as the
-    * A1 plan-shape alternative.
+    * window-vs-agg. This is the explicit A1 form; window-idiom callers
+    * (`topOnePerGroup`) are planned by Spark's `WindowGroupLimit`.
     * `ordering` must be a struct column whose lexicographic
     * MAX picks the winner (negate numeric components for ascending
     * tie-breaks); ties must be impossible for determinism. Returns the

@@ -92,6 +92,23 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("WindowGroupLimit"), p)
   }
 
+  test("fa rankSales keeps the WindowGroupLimit pre-reduction below its " +
+    "exchange; no aggregate rewrite") {
+    import spark.implicits._
+    val raw = Seq(
+      ("1", "100000", "20200115", "36061", "20230101", "1X", "2", "20200110"),
+      ("1", "120000", "20200320", "36061", "20230101", "6Y", "3", "20200315"))
+      .toDF("PropertyID", "SaleAmt", "RecordingDate", "FIPS", "FATimeStamp",
+        "FATransactionID", "TransactionType", "SaleDate")
+    val p = graft.fa.Stages.rankSales(graft.fa.Stages.cleanSales(raw))
+      .queryExecution.executedPlan.toString
+    // the partial group-limit must sit under the shuffle, so the exchange
+    // carries ~|groups| rows rather than every sale
+    val exchange = p.indexOf("Exchange hashpartitioning")
+    assert(exchange >= 0 && p.indexOf("row_number(), 1, Partial") > exchange, p)
+    assert(!p.contains("max_by"), p)
+  }
+
   test("q50/q52: batch-vs-corpus probes broadcast; no cartesian anywhere") {
     for (q <- Seq("q50_incremental_dedup", "q52_leakage_flags")) {
       val p = plan(q)

@@ -26,7 +26,8 @@ class FaPipelineSpec extends AnyFunSuite {
     zos.closeEntry(); zos.close()
   }
 
-  private def buildFixture(): String = {
+  /** `extraProp` appends rows to the Prop extract (e.g. damaged keys). */
+  private def buildFixture(extraProp: Seq[String] = Nil): String = {
     val base = Files.createTempDirectory("fa_fixture")
     val raw = Files.createDirectories(base.resolve("raw"))
     // Deed: P1 two 2020 sales (latest wins) + one 2021; P2 only
@@ -55,7 +56,7 @@ class FaPipelineSpec extends AnyFunSuite {
         "2|R|20230101|0|0|2 Oak Ave|New York|NY|10002|36061||0200|Z",
         "3|C|20230101|40.8|-73.8|3 Pine Rd|New York|NY|10003|36061|54321|300|B",
         "4|R|20230101|40.9|-73.7|4 Elm Ct|New York|NY|10004|36061|11111|400|5",
-      ))
+      ) ++ extraProp)
     writeZip(raw, "TaxHist36061",
       "PropertyID|TaxYear|TaxAmt",
       Seq("1|2020|123456", "1|2021|200000", "2|2020|50000", "3|2019|99999"))
@@ -111,6 +112,21 @@ class FaPipelineSpec extends AnyFunSuite {
     // (P3, 2019): prop filtered out (class C) -> null prop attributes.
     assert(rows(2) == ((3L, 2019L, 450000L, Some(400000L), None,
       50000L, Some(99999L), Some(999.99), None, None, None)))
+  }
+
+  test("damaged Prop keys: unparseable PropertyIDs drop out instead of " +
+    "tripping the m:1 guard") {
+    // residential rows whose PropertyID casts to NULL — several of them, so
+    // they share one NULL key
+    val damaged = Seq(
+      "1x|R|20230101|40.1|-73.1|5 Bad St|New York|NY|10005|36061|22222|500|A",
+      "N/A|R|20230101|40.2|-73.2|6 Bad St|New York|NY|10006|36061|33333|600|A",
+      "#|R|20230101|40.3|-73.3|7 Bad St|New York|NY|10007|36061|44444|700|A")
+    def panel(dir: String): Seq[String] =
+      new Pipeline(spark, dir).run().collect().map(_.toString).toSeq.sorted
+    val clean = panel(buildFixture())
+    assert(clean.length == 3)
+    assert(panel(buildFixture(damaged)) == clean)
   }
 
   test("idempotent restage: second run reuses staging, same result") {

@@ -70,6 +70,28 @@ class OpsSpec extends AnyFunSuite {
     assert(Joins.leftJoinValidated(factsU, dimOk, Seq("k"), "1:1").count() == 2)
   }
 
+  test("leftJoinValidated m:1: NULL right keys pass the guard and match " +
+    "nothing; a real duplicate still raises") {
+    val facts = Seq((Some(1L), "a"), (Some(2L), "b"), (None, "c")).toDF("k", "v")
+    val dimNulls = Seq((Some(1L), 10L), (None, 11L), (None, 12L),
+      (Some(2L), 20L)).toDF("k", "d")
+    val got = Joins.leftJoinValidated(facts, dimNulls, Seq("k"), "m:1")
+      .orderBy("v").select("v", "d").collect()
+      .map(r => (r.getString(0), Option(r.get(1))))
+    assert(got.sameElements(Array(("a", Some(10L)), ("b", Some(20L)), ("c", None))))
+    // composite keys: a NULL in any key column exempts the row
+    val factsYk = Seq((1L, Some(2020L), "a")).toDF("k", "y", "v")
+    val dimYk = Seq((1L, Option.empty[Long], 1L), (1L, Option.empty[Long], 2L),
+      (1L, Some(2020L), 3L)).toDF("k", "y", "d")
+    assert(Joins.leftJoinValidated(factsYk, dimYk, Seq("k", "y"), "m:1")
+      .select("d").as[Long].collect().toSeq == Seq(3L))
+    val dimDup = dimNulls.union(Seq((Some(2L), 21L)).toDF("k", "d"))
+    val e = intercept[Exception] {
+      Joins.leftJoinValidated(facts, dimDup, Seq("k"), "m:1").collect()
+    }
+    assert(messageChain(e).exists(_.contains("not unique on (k)")))
+  }
+
   test("unifiedJoin: plan construction runs zero jobs; dup-PropertyID prop aborts on action") {
     val sc = TestSpark.spark.sparkContext
     val rankedValHist = Seq((1L, 2020L, 500L))

@@ -32,6 +32,16 @@ SPARK_DRIVER_MEM=14g sbt -batch "runMain graft.tools.Stress /root/testdata/sf0.1
 # == one county's files), no nested-loop/cartesian in the merged plan
 sbt -batch "runMain graft.tools.FaScale 8 20000 --gate"
 
+# gated benchmark end to end: fa_etl also runs Pipeline.run over a corpus
+# with damaged Prop keys and checks its panel against DuckDB; the last
+# stdout line is a JSON summary that must report correct with no failures
+bench=$(python3 perfbench/run.py --workload fa_etl --seed 1 --seconds 12 --trace 0)
+echo "$bench"
+echo "$bench" | tail -n 1 | python3 -c '
+import json, sys
+r = json.loads(sys.stdin.read())
+sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)'
+
 echo "CI_OK"
 # Bench artifact contract (r11 judge nit): the driver's BENCH_r*.json
 # keeps only a byte-limited stdout slice and has parsed as null; the
