@@ -1,7 +1,10 @@
 package graft.fa
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.util.UUID
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException,
+  ExecutorCompletionService, Executors, ThreadFactory, TimeUnit}
 import scala.jdk.CollectionConverters._
 import graft.ops.Sources
 
@@ -15,10 +18,14 @@ import graft.ops.Sources
   * checkpoints with idempotent skip (S6), so a national re-run resumes
   * where it stopped.
   *
-  * Scale: with thousands of county files, every stage is a single job over
-  * a multi-file CSV scan; the unified join shuffles on PropertyID once.
-  * Set `partitionByFips=true` to hive-partition staging output by FIPS for
-  * county-pruned downstream reads.
+  * Scale: with thousands of county files, every stage is a multi-file CSV
+  * scan; the unified join shuffles on PropertyID once. The four families
+  * are independent until that join, so they convert as four concurrent
+  * driver-side branches (Deed → ranked_Deed, Prop, TaxHist, ValHist →
+  * ranked_ValHist) on a pool of four threads. Their jobs share the cores
+  * through Spark's FIFO scheduler, and the join waits only for the slowest
+  * branch. Set `partitionByFips=true` to hive-partition staging output by
+  * FIPS for county-pruned downstream reads.
   */
 class Pipeline(spark: SparkSession, inputDir: String,
                names: Schemas.FamilyNames = Schemas.FamilyNames(),
@@ -82,7 +89,12 @@ class Pipeline(spark: SparkSession, inputDir: String,
     * used heap and process RSS. (Round 1 logged the status tracker's
     * on-heap STORAGE memory, which is ~0 unless something is cached —
     * a telemetry line with no signal.) Lines also tee to `logFile` for
-    * parity with the reference's --log_file. */
+    * parity with the reference's --log_file.
+    *
+    * The four family branches run at once, so stage wall times overlap:
+    * a line is written when its stage ends, `wall` covers that stage
+    * alone, and lines of different branches interleave. Each line is one
+    * write under a lock, so concurrent stages never split a line. */
   private def logged(name: String)(body: => DataFrame): DataFrame = {
     val t0 = System.nanoTime()
     val out = body
@@ -92,10 +104,10 @@ class Pipeline(spark: SparkSession, inputDir: String,
       f"heapUsedMb=$heapMb rssMb=$rssMb"
     log.info(line)
     logFile.foreach { f =>
-      Files.writeString(Paths.get(f),
-        s"${java.time.Instant.now()} $line\n",
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+      synchronized {
+        Files.writeString(Paths.get(f), s"${java.time.Instant.now()} $line\n",
+          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+      }
     }
     out
   }
@@ -107,26 +119,72 @@ class Pipeline(spark: SparkSession, inputDir: String,
   private def stageNoPart(name: String)(compute: => DataFrame): DataFrame =
     logged(name)(Sources.stageParquet(spark, s"$stagingDir/$name")(compute))
 
-  /** Phases 3–5: convert all families, then the unified join. Returns the
-    * merged panel (also written to unified/merged.parquet). */
+  /** Phases 3–5: convert the four families as concurrent branches, then
+    * the unified join once all four are staged. Returns the merged panel
+    * (also written to unified/merged.parquet). */
   def run(): DataFrame = {
     scaffold()
     val raw = classifyRaw()
+    def read(family: String): DataFrame = readFamily(raw(family))
 
-    val deedClean = stage("Deed")(Stages.cleanSales(readFamily(raw(names.deed))))
-    val rankedDeed = stageNoPart("ranked_Deed")(Stages.rankSales(deedClean))
-    val prop = stage(names.annual)(Stages.cleanProp(readFamily(raw(names.annual))))
-    val taxHist = stageNoPart(names.taxHist)(
-      Stages.cleanTaxHist(readFamily(raw(names.taxHist))))
-    val valHistClean = stageNoPart(names.valueHistory)(
-      Stages.cleanValHist(readFamily(raw(names.valueHistory))))
-    val rankedValHist = stageNoPart(s"ranked_${names.valueHistory}")(
-      Stages.rankValHist(valHistClean))
+    val Seq(rankedDeed, prop, taxHist, rankedValHist) = concurrently(Seq(
+      () => {
+        val deedClean = stage("Deed")(Stages.cleanSales(read(names.deed)))
+        stageNoPart("ranked_Deed")(Stages.rankSales(deedClean))
+      },
+      () => stage(names.annual)(Stages.cleanProp(read(names.annual))),
+      () => stageNoPart(names.taxHist)(Stages.cleanTaxHist(read(names.taxHist))),
+      () => {
+        val valHistClean = stageNoPart(names.valueHistory)(
+          Stages.cleanValHist(read(names.valueHistory)))
+        stageNoPart(s"ranked_${names.valueHistory}")(
+          Stages.rankValHist(valHistClean))
+      }))
 
     val merged = Stages.unifiedJoin(rankedValHist, prop, rankedDeed, taxHist)
     val out = Sources.sinkParquet(merged, s"$unifiedDir/merged.parquet")
     cleanup()
     out
+  }
+
+  /** Runs the branches at once, one thread each of a pool made here, so
+    * the threads inherit the caller's Spark local properties (job group,
+    * description, tags); returns their results in order. If a branch
+    * throws, the jobs of the others are cancelled through a job tag of
+    * this run, and that branch's exception is rethrown once every branch
+    * has ended: no job of the run is left writing under staging/, and no
+    * pool thread outlives the call. */
+  private def concurrently(branches: Seq[() => DataFrame]): Seq[DataFrame] = {
+    val sc = spark.sparkContext
+    val tag = s"fa-pipeline-${UUID.randomUUID()}"
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(branches.size, new ThreadFactory {
+      def newThread(r: Runnable): Thread = {
+        val t = new Thread(r, s"fa-pipeline-${threads.size + 1}")
+        threads.add(t)
+        t
+      }
+    })
+    val done = new ExecutorCompletionService[DataFrame](pool)
+    var failed = true
+    try {
+      // the tag lands in the pool thread's own copy of the properties
+      val futures = branches.map(b => done.submit { () => sc.addJobTag(tag); b() })
+      futures.foreach { _ =>
+        try done.take().get()
+        catch { case e: ExecutionException => throw e.getCause }
+      }
+      failed = false
+      futures.map(_.get())
+    } finally {
+      pool.shutdown()
+      if (failed) sc.cancelJobsWithTag(tag)
+      // re-cancel until the pool drains: a branch between two stages may
+      // still submit a job after the first cancellation
+      while (!pool.awaitTermination(100, TimeUnit.MILLISECONDS))
+        if (failed) sc.cancelJobsWithTag(tag)
+      threads.forEach(_.join())
+    }
   }
 
   /** Phase 6 (fa-etl.py:592-595): drop unzipped texts. */

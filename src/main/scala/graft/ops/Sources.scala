@@ -108,8 +108,11 @@ object Sources {
   }
 
   /** S1 (fa-etl.py:49-55): extract all entries of a `.zip` into `destDir`;
-    * returns extracted file paths. Driver-side ingest utility (the
-    * reference's unzip is also single-process); for distributed unzip at
+    * returns extracted file paths. Driver-side ingest utility: one call
+    * unzips one file on the calling thread (the reference's unzip is also
+    * single-process). `fa.Pipeline` unzips its four families concurrently,
+    * one branch thread each, into one shared `destDir`; the zip-stem
+    * prefix below keeps their outputs apart. For distributed unzip at
     * scale, feed the zips through `spark.read.format("binaryFile")` and
     * decode per-partition instead. */
   def unzip(zipPath: String, destDir: String): Seq[String] = {

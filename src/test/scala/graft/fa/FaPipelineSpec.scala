@@ -1,7 +1,9 @@
 package graft.fa
 
-import java.nio.file.{Files, Path}
-import java.util.zip.{ZipEntry, ZipOutputStream}
+import java.nio.file.{Files, Path, Paths}
+import java.util.zip.{ZipEntry, ZipException, ZipOutputStream}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.GraftTestBus
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -75,6 +77,16 @@ class FaPipelineSpec extends AnyFunSuite {
     base.toString
   }
 
+  private def panel(dir: String): Seq[String] =
+    new Pipeline(spark, dir).run().collect().map(_.toString).toSeq.sorted
+
+  /** Overwrites a raw zip with bytes that are not a zip file. */
+  private def corruptZip(dir: String, name: String): Unit =
+    Files.writeString(Paths.get(dir, "raw", s"$name.txt.zip"), "not a zip file")
+
+  private val stageNames =
+    Seq("Deed", "ranked_Deed", "Prop", "TaxHist", "ValHist", "ranked_ValHist")
+
   test("full pipeline: golden merged panel") {
     val dir = buildFixture()
     val merged = new Pipeline(spark, dir).run().cache()
@@ -122,8 +134,6 @@ class FaPipelineSpec extends AnyFunSuite {
       "1x|R|20230101|40.1|-73.1|5 Bad St|New York|NY|10005|36061|22222|500|A",
       "N/A|R|20230101|40.2|-73.2|6 Bad St|New York|NY|10006|36061|33333|600|A",
       "#|R|20230101|40.3|-73.3|7 Bad St|New York|NY|10007|36061|44444|700|A")
-    def panel(dir: String): Seq[String] =
-      new Pipeline(spark, dir).run().collect().map(_.toString).toSeq.sorted
     val clean = panel(buildFixture())
     assert(clean.length == 3)
     assert(panel(buildFixture(damaged)) == clean)
@@ -138,6 +148,51 @@ class FaPipelineSpec extends AnyFunSuite {
     // cleaned, so a recompute attempt would fail -> skipping is observable.
     val second = new Pipeline(spark, dir).run().count()
     assert(first == second)
+  }
+
+  test("a failing branch: its own exception, after the other branches' " +
+    "jobs have ended, with no pool thread left") {
+    val dir = buildFixture()
+    corruptZip(dir, "TaxHist36061")
+    intercept[ZipException] { new Pipeline(spark, dir).run() }
+    // the status tracker learns of job ends through the listener bus
+    GraftTestBus.flush(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName.startsWith("fa-pipeline-") && t.isAlive))
+  }
+
+  test("stage log: one whole line per stage while the branches overlap") {
+    val dir = buildFixture()
+    val logFile = Paths.get(dir, "pipeline.log")
+    new Pipeline(spark, dir, logFile = Some(logFile.toString)).run()
+    val StageLine =
+      """^(\S+) stage=(\S+) wall=([0-9.]+)s heapUsedMb=-?\d+ rssMb=-?\d+$""".r
+    val logged = Files.readAllLines(logFile).asScala.toSeq.map {
+      case StageLine(at, name, _) => java.time.Instant.parse(at); name
+      case other => fail(s"not a stage line: $other")
+    }
+    assert(logged.length == 6)
+    assert(logged.sorted == stageNames.sorted)
+    // within a branch the stages still run in order
+    assert(logged.indexOf("Deed") < logged.indexOf("ranked_Deed"))
+    assert(logged.indexOf("ValHist") < logged.indexOf("ranked_ValHist"))
+  }
+
+  test("resume: a lost _SUCCESS marker recomputes only that family") {
+    val dir = buildFixture()
+    val first = panel(dir)
+    val staging = Paths.get(dir, "staging")
+    def mtime(st: String) = Files.getLastModifiedTime(staging.resolve(st))
+    val before = stageNames.map(st => st -> mtime(st)).toMap
+    Files.delete(staging.resolve("TaxHist/_SUCCESS"))
+    // a family unzipped again would now fail: its zip is no zip any more
+    Seq("Deed36061", "Prop36061", "ValHist36061").foreach(corruptZip(dir, _))
+    assert(panel(dir) == first)
+    stageNames.filterNot(_ == "TaxHist")
+      .foreach(st => assert(mtime(st) == before(st), s"$st was rewritten"))
+    assert(mtime("TaxHist") != before("TaxHist"), "TaxHist was not recomputed")
+    assert(Files.exists(staging.resolve("TaxHist/_SUCCESS")))
   }
 
   test("Annual/ValueHistory filename variant (fa-etl.sbatch:28-29 naming)") {
