@@ -21,63 +21,56 @@ import graft.functions.{CosineSim, HyperplaneSig, MinHashSig, SimHash64}
   * is left to Spark's own `InferWindowGroupLimit`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
-      "", "", "", "", "", "", "scala_udf")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(array<string>) - 64-bit SimHash"),
-      (args: Seq[Expression]) => SimHash64(args.head)))
-    ext.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(array<double>, array<double>) - cosine similarity"),
-      (args: Seq[Expression]) => CosineSim(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(array<string>, k, n) - MinHash signature over word n-shingles"),
-      (args: Seq[Expression]) => MinHashSig(args(0),
-        GraftExtensions.literalInt(args(1), "minhash_sig", "k"),
-        GraftExtensions.literalInt(args(2), "minhash_sig", "shingleSize"))))
-    ext.injectFunction((FunctionIdentifier("hyperplane_sig"),
-      info("hyperplane_sig", "hyperplane_sig(array, nBits, dim) - seeded random-hyperplane LSH signature; raises on dim mismatch"),
-      GraftExtensions.hyperplaneSigBuilder))
-    // Spark ships these two for AQE runtime filters but does NOT register
-    // them in the SQL registry — expose them so SQL users get the explicit
-    // bloom build/probe path (see Sketches.bloomAgg/mightContain)
-    ext.injectFunction((FunctionIdentifier("bloom_filter_agg"),
-      info("bloom_filter_agg", "bloom_filter_agg(xxhash64(key), estItems, numBits) - mergeable bloom filter binary"),
-      GraftExtensions.bloomAggBuilder))
-    ext.injectFunction((FunctionIdentifier("might_contain"),
-      info("might_contain", "might_contain(bloom, xxhash64(key)) - bloom membership probe; bloom must be constant or scalar subquery"),
-      GraftExtensions.mightContainBuilder))
-    ext.injectFunction((FunctionIdentifier("word_shingles"),
-      info("word_shingles", "word_shingles(array<string>, n) - word n-gram shingles (whole doc when shorter)"),
-      (args: Seq[Expression]) => graft.functions.WordShingles(args(0),
-        GraftExtensions.literalInt(args(1), "word_shingles", "n"))))
-    ext.injectFunction((FunctionIdentifier("repetition_stats"),
-      info("repetition_stats", "repetition_stats(array<string>) - struct(top_uni, top_bi, dup_tri) repetition counts"),
-      (args: Seq[Expression]) => graft.functions.RepetitionStats(args.head)))
-    ext.injectFunction((FunctionIdentifier("char_entropy"),
-      info("char_entropy", "char_entropy(string) - Shannon entropy (nats) of the code-point distribution"),
-      (args: Seq[Expression]) => graft.functions.CharEntropy(args.head)))
-    ext.injectFunction((FunctionIdentifier("int8_scale"),
-      info("int8_scale", "int8_scale(array<double>) - round(max|x|/127, 6) symmetric quantization scale"),
-      (args: Seq[Expression]) => graft.functions.Int8Scale(args.head)))
-    ext.injectFunction((FunctionIdentifier("int8_quant"),
-      info("int8_quant", "int8_quant(array<double>, scale) - clamp(round(x/scale), +-127) int array"),
-      (args: Seq[Expression]) => graft.functions.Int8Quant(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("int8_max_err"),
-      info("int8_max_err", "int8_max_err(array<double>, scale) - round-6 max reconstruction error"),
-      (args: Seq[Expression]) => graft.functions.Int8MaxErr(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("int8_dot"),
-      info("int8_dot", "int8_dot(array<int>, array<int>) - exact integer dot product"),
-      (args: Seq[Expression]) => graft.functions.Int8Dot(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("jaro_winkler"),
-      info("jaro_winkler", "jaro_winkler(string, string) - byte-level Jaro-Winkler similarity (DuckDB parity)"),
-      (args: Seq[Expression]) => graft.functions.JaroWinkler(args(0), args(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, usage, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
+          "", "", "", "", "", "", "scala_udf"),
+        builder))
+    }
 }
 
 object GraftExtensions {
+
+  private type Builder = Seq[Expression] => Expression
+
+  /** Every SQL function graft exposes, as (name, usage, builder): the one
+    * list both [[GraftExtensions.apply]] (build-time injection) and
+    * [[register]] (an already-built session) install. */
+  private def functions: Seq[(String, String, Builder)] = Seq(
+    ("simhash64", "simhash64(array<string>) - 64-bit SimHash",
+      args => SimHash64(args.head)),
+    ("cosine_sim", "cosine_sim(array<double>, array<double>) - cosine similarity",
+      args => CosineSim(args(0), args(1))),
+    ("minhash_sig", "minhash_sig(array<string>, k, n) - MinHash signature over word n-shingles",
+      args => MinHashSig(args(0), literalInt(args(1), "minhash_sig", "k"),
+        literalInt(args(2), "minhash_sig", "shingleSize"))),
+    ("hyperplane_sig", "hyperplane_sig(array, nBits, dim) - seeded random-hyperplane LSH signature; raises on dim mismatch",
+      hyperplaneSigBuilder),
+    // Spark ships these two for AQE runtime filters but does NOT register
+    // them in the SQL registry — expose them so SQL users get the explicit
+    // bloom build/probe path (see Sketches.bloomAgg/mightContain)
+    ("bloom_filter_agg", "bloom_filter_agg(xxhash64(key), estItems, numBits) - mergeable bloom filter binary",
+      bloomAggBuilder),
+    ("might_contain", "might_contain(bloom, xxhash64(key)) - bloom membership probe; bloom must be constant or scalar subquery",
+      mightContainBuilder),
+    ("word_shingles", "word_shingles(array<string>, n) - word n-gram shingles (whole doc when shorter)",
+      args => graft.functions.WordShingles(args(0),
+        literalInt(args(1), "word_shingles", "n"))),
+    ("repetition_stats", "repetition_stats(array<string>) - struct(top_uni, top_bi, dup_tri) repetition counts",
+      args => graft.functions.RepetitionStats(args.head)),
+    ("char_entropy", "char_entropy(string) - Shannon entropy (nats) of the code-point distribution",
+      args => graft.functions.CharEntropy(args.head)),
+    ("int8_scale", "int8_scale(array<double>) - round(max|x|/127, 6) symmetric quantization scale",
+      args => graft.functions.Int8Scale(args.head)),
+    ("int8_quant", "int8_quant(array<double>, scale) - clamp(round(x/scale), +-127) int array",
+      args => graft.functions.Int8Quant(args(0), args(1))),
+    ("int8_max_err", "int8_max_err(array<double>, scale) - round-6 max reconstruction error",
+      args => graft.functions.Int8MaxErr(args(0), args(1))),
+    ("int8_dot", "int8_dot(array<int>, array<int>) - exact integer dot product",
+      args => graft.functions.Int8Dot(args(0), args(1))),
+    ("jaro_winkler", "jaro_winkler(string, string) - byte-level Jaro-Winkler similarity (DuckDB parity)",
+      args => graft.functions.JaroWinkler(args(0), args(1))))
 
   /** SQL builder for hyperplane_sig — applies the same array<double> cast
     * and wrong-dim fail-fast as the Scala API
@@ -129,43 +122,8 @@ object GraftExtensions {
     * normally apply at build time; this covers driver-owned sessions). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg: FunctionRegistry = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64",
-      (args: Seq[Expression]) => SimHash64(args.head), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim",
-      (args: Seq[Expression]) => CosineSim(args(0), args(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      (args: Seq[Expression]) => MinHashSig(args(0),
-        GraftExtensions.literalInt(args(1), "minhash_sig", "k"),
-        GraftExtensions.literalInt(args(2), "minhash_sig", "shingleSize")), "scala_udf")
-    reg.createOrReplaceTempFunction("hyperplane_sig",
-      GraftExtensions.hyperplaneSigBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("bloom_filter_agg",
-      GraftExtensions.bloomAggBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("might_contain",
-      GraftExtensions.mightContainBuilder, "scala_udf")
-    reg.createOrReplaceTempFunction("word_shingles",
-      (args: Seq[Expression]) => graft.functions.WordShingles(args(0),
-        GraftExtensions.literalInt(args(1), "word_shingles", "n")), "scala_udf")
-    reg.createOrReplaceTempFunction("repetition_stats",
-      (args: Seq[Expression]) => graft.functions.RepetitionStats(args.head),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("char_entropy",
-      (args: Seq[Expression]) => graft.functions.CharEntropy(args.head),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("int8_scale",
-      (args: Seq[Expression]) => graft.functions.Int8Scale(args.head),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("int8_quant",
-      (args: Seq[Expression]) => graft.functions.Int8Quant(args(0), args(1)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("int8_max_err",
-      (args: Seq[Expression]) => graft.functions.Int8MaxErr(args(0), args(1)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("int8_dot",
-      (args: Seq[Expression]) => graft.functions.Int8Dot(args(0), args(1)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("jaro_winkler",
-      (args: Seq[Expression]) => graft.functions.JaroWinkler(args(0), args(1)),
-      "scala_udf")
+    functions.foreach { case (name, _, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 }

@@ -93,14 +93,16 @@ class Pipeline(spark: SparkSession, inputDir: String,
     *
     * The four family branches run at once, so stage wall times overlap:
     * a line is written when its stage ends, `wall` covers that stage
-    * alone, and lines of different branches interleave. Each line is one
-    * write under a lock, so concurrent stages never split a line. */
+    * alone (in milliseconds, so a stage's span is [end − wall, end] to
+    * the millisecond), and lines of different branches interleave. Each
+    * line is one write under a lock, so concurrent stages never split a
+    * line. */
   private def logged(name: String)(body: => DataFrame): DataFrame = {
     val t0 = System.nanoTime()
     val out = body
     val rt = Runtime.getRuntime
     val heapMb = (rt.totalMemory() - rt.freeMemory()) >> 20
-    val line = f"stage=$name wall=${(System.nanoTime() - t0) / 1e9}%.1fs " +
+    val line = f"stage=$name wall=${(System.nanoTime() - t0) / 1e9}%.3fs " +
       f"heapUsedMb=$heapMb rssMb=$rssMb"
     log.info(line)
     logFile.foreach { f =>

@@ -112,7 +112,10 @@ object Sources {
     * unzips one file on the calling thread (the reference's unzip is also
     * single-process). `fa.Pipeline` unzips its four families concurrently,
     * one branch thread each, into one shared `destDir`; the zip-stem
-    * prefix below keeps their outputs apart. For distributed unzip at
+    * prefix below keeps their outputs apart. Entry folders are dropped, so
+    * two entries of one zip with the same file name in different folders
+    * raise `IllegalStateException` naming both, before anything is
+    * written. For distributed unzip at
     * scale, feed the zips through `spark.read.format("binaryFile")` and
     * decode per-partition instead. */
   def unzip(zipPath: String, destDir: String): Seq[String] = {
@@ -121,17 +124,26 @@ object Sources {
       .replaceAll("\\.zip$", "")
     val zf = new ZipFile(zipPath)
     try {
-      zf.entries().asScala.filterNot(_.isDirectory).map { e =>
-        // prefix with the zip's own name: two county zips may carry the
-        // same inner entry name, and a flat shared destDir would silently
-        // overwrite one county with another (REPLACE_EXISTING)
-        val out: Path = Paths.get(destDir,
+      // prefix with the zip's own name: two county zips may carry the
+      // same inner entry name, and a flat shared destDir would silently
+      // overwrite one county with another (REPLACE_EXISTING)
+      val targets = zf.entries().asScala.filterNot(_.isDirectory).map { e =>
+        e -> Paths.get(destDir,
           s"${zipStem}__${Paths.get(e.getName).getFileName.toString}")
+      }.toList
+      // entries in different folders of one zip flatten to the same file;
+      // refuse before writing rather than keep only the last of them
+      targets.groupBy(_._2).collectFirst { case (out, clash) if clash.size > 1 =>
+        throw new IllegalStateException(s"$zipPath: entries " +
+          clash.map(c => s"'${c._1.getName}'").mkString(" and ") +
+          s" would both unzip to $out")
+      }
+      targets.map { case (e, out) =>
         val in = zf.getInputStream(e)
         try Files.copy(in, out, StandardCopyOption.REPLACE_EXISTING)
         finally in.close()
         out.toString
-      }.toList
+      }
     } finally zf.close()
   }
 }

@@ -169,7 +169,10 @@ class FaPipelineSpec extends AnyFunSuite {
     val StageLine =
       """^(\S+) stage=(\S+) wall=([0-9.]+)s heapUsedMb=-?\d+ rssMb=-?\d+$""".r
     val logged = Files.readAllLines(logFile).asScala.toSeq.map {
-      case StageLine(at, name, _) => java.time.Instant.parse(at); name
+      case StageLine(at, name, wall) =>
+        java.time.Instant.parse(at)
+        assert(wall.matches("""\d+\.\d{3}"""), s"$name: wall=$wall is not in ms")
+        name
       case other => fail(s"not a stage line: $other")
     }
     assert(logged.length == 6)
@@ -193,6 +196,24 @@ class FaPipelineSpec extends AnyFunSuite {
       .foreach(st => assert(mtime(st) == before(st), s"$st was rewritten"))
     assert(mtime("TaxHist") != before("TaxHist"), "TaxHist was not recomputed")
     assert(Files.exists(staging.resolve("TaxHist/_SUCCESS")))
+  }
+
+  test("unzip refuses two entries that flatten to the same file") {
+    val base = Files.createTempDirectory("fa_unzip_clash")
+    val zipPath = base.resolve("Deed36061.txt.zip")
+    val zos = new ZipOutputStream(Files.newOutputStream(zipPath))
+    Seq("a/x.txt" -> "first", "b/x.txt" -> "second").foreach { case (n, body) =>
+      zos.putNextEntry(new ZipEntry(n))
+      zos.write(body.getBytes("UTF-8"))
+      zos.closeEntry()
+    }
+    zos.close()
+    val dest = base.resolve("unzipped")
+    val e = intercept[IllegalStateException] {
+      graft.ops.Sources.unzip(zipPath.toString, dest.toString)
+    }
+    assert(e.getMessage.contains("'a/x.txt'") && e.getMessage.contains("'b/x.txt'"))
+    assert(!Files.exists(dest.resolve("Deed36061.txt__x.txt")), "wrote a clashing entry")
   }
 
   test("Annual/ValueHistory filename variant (fa-etl.sbatch:28-29 naming)") {
