@@ -14,30 +14,39 @@ import org.apache.spark.sql.SparkSession
   *   (local[N] ⇒ N), not the 200 default.
   */
 object GraftSession {
+
+  /** The runtime-settable SQL confs every graft session carries, applied
+    * by both the builder and [[tune]].
+    *
+    * Broadcast threshold stays at the 10 MB default: raising it to 64 MB
+    * was measured to HURT in the 8 GB local driver (multi-10MB broadcasts
+    * churned the heap; later queries slowed 5×) without speeding the
+    * mid-size joins it targeted — see PLANS.md race table. */
+  private val sqlConfs: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // events.parquet carries TIMESTAMP(NANOS) which Spark's reader
+    // rejects; read as long nanos and convert (ops.Events.load)
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // partition-column values are NOT type-inferred on read-back:
+    // zero-padded keys (FIPS=01001) must stay strings, not become 1001
+    "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false")
+
   def apply(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
             shufflePartitions: Option[Int] = None,
             appName: String = "graft"): SparkSession = {
     val parts = shufflePartitions.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    val spark = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // broadcast threshold stays at the 10 MB default: raising it to 64 MB
-      // was measured to HURT in the 8 GB local driver (multi-10MB broadcasts
-      // churned the heap; later queries slowed 5×) without speeding the
-      // mid-size joins it targeted — see PLANS.md race table
-      // partition-column values are NOT type-inferred on read-back:
-      // zero-padded keys (FIPS=01001) must stay strings, not become 1001
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    sqlConfs.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // getOrCreate silently returns a pre-existing session and IGNORES the
     // builder configs above — re-apply every runtime-settable conf (incl.
@@ -53,15 +62,7 @@ object GraftSession {
     * the graft SQL functions. */
   def tune(spark: SparkSession): SparkSession = {
     GraftExtensions.register(spark)
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // events.parquet carries TIMESTAMP(NANOS) which Spark's reader rejects;
-    // read as long nanos and convert (ops.Events.load).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    sqlConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     spark
   }
 }

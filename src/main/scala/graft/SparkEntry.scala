@@ -229,7 +229,7 @@ object SparkEntry {
       element_at(from_json(col("props"), MapType(StringType, LongType)),
         "k").as("k_map"))
 
-  /** Event-time tumbling window aggregation (streaming-shaped batch op). */
+  /** Event-time tumbling window aggregation. */
   private def qTimeWindow(s: SparkSession, dir: String): DataFrame =
     Events.hourlyAgg(Events.load(s, dir))
 
@@ -1287,8 +1287,7 @@ object SparkEntry {
       "embedding", m = 8, k = 64, trainIters = 3, trainStride = 4)
 
   /** The per-user funnel TRACE (q116's relation one level down):
-    * (user, step_idx, step, conversion instant) — the convergence
-    * target of the streaming funnel repair path, here oracle-checked
+    * (user, step_idx, step, conversion instant), oracle-checked
     * directly. */
   private def qFunnelTrace(s: SparkSession, dir: String): DataFrame =
     Events.funnelTrace(Events.load(s, dir), "user_id", "ts",
@@ -2516,11 +2515,8 @@ object SparkEntry {
         Events.jsonField(col("props"), "$.k"))
         .filter(expr("(src * 31 + dst) % 5 < 1")))
 
-  /** The stream-stream interval join's BATCH face, oracle-checked:
-    * clicks joined to same-user purchases within 1 h after. The
-    * streaming face (two-sided watermarks, built-in join) is pinned
-    * equal to this relation by StreamStreamJoinSpec — registering the
-    * batch face puts the op under the contract, not just the suite. */
+  /** Interval join, oracle-checked: clicks joined to same-user
+    * purchases within 1 h after. */
   private def qIntervalJoin(s: SparkSession, dir: String): DataFrame =
     Events.intervalJoin(Events.load(s, dir), "user_id", "ts", "event_id",
       "event_type", leftType = "click", rightType = "purchase",

@@ -27,8 +27,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * default signature — the same CodegenFallback cost class whose
   * measurement forced the [[CosineSim]] escalation). Here the whole
   * signature is one inlined nested loop in the enclosing
-  * WholeStageCodegen stage. Measured (`tools/SigRace`, 500k × 64-dim
-  * vectors, local[32]): signature stage 0.28 s vs 2.77 s HOF (~10×); q30
+  * WholeStageCodegen stage. Measured (500k × 64-dim vectors,
+  * local[32]): signature stage 0.28 s vs 2.77 s HOF (~10×); q30
   * end-to-end ~1.16× (its bucketed pair join dominates — PLANS.md).
   *
   * The planes ride along as a reference object (driver-computed constants

@@ -394,7 +394,9 @@ object Dedup {
   /** SimHash near-duplicates, end to end: pigeonhole-banded candidates for
     * hamming ≤ maxHamming, then exact n-gram Jaccard verification.
     * `maxHamming` is the recall dial: every true pair must sit within it
-    * for the exact-verify stage to be complete (HammingProbe calibrates).
+    * for the exact-verify stage to be complete (calibrate it against the
+    * exact `jaccardPairs` sweep: 14 covers the observed true-pair max of
+    * 13 on the documents corpus, PLANS.md).
     *
     * `featureShingle` picks the signature features: 1 = unigram tokens,
     * n>1 = word n-gram shingles. Shingled features are the scale lever on
@@ -1838,12 +1840,9 @@ object Dedup {
 
   /** The O(2^k) EM TAIL of [[fellegiSunterEm]], factored over the
     * PATTERN-COUNT relation `pat` = one row per observed agreement
-    * pattern `(g_0 … g_{k-1}, n)` — shared with the streaming face
-    * ([[graft.streaming.StreamingFellegiSunter]]), whose archive
-    * stores per-batch pattern partials (counts are increment-monotone:
-    * long sums merge exactly under any batch split) and replays this
-    * tail per trigger. Arithmetic contract identical to the batch
-    * face: exact-micros posteriors before every M-step sum, clamps,
+    * pattern `(g_0 … g_{k-1}, n)` (counts are long sums, so pattern
+    * partials merge exactly under any split). Arithmetic contract:
+    * exact-micros posteriors before every M-step sum, clamps,
     * fixed unrolled `iters`. Corpus size never appears — the tail is
     * O(2^k) per iteration regardless of how many pairs fed `pat`. */
   private[graft] def fellegiSunterEmFromPatterns(pat: DataFrame,

@@ -7,10 +7,6 @@ import org.apache.spark.sql.types._
 
 /** Event-stream operators (extension surface — SURVEY.md §2.9 notes the
   * reference is batch-only; the `events` testdata table drives these).
-  *
-  * All operators here are expressed so the exact same code runs in batch
-  * and under Structured Streaming (`window`/watermark-compatible shapes);
-  * `Streaming.scala` wires the streaming entry points.
   */
 object Events {
 
@@ -42,8 +38,8 @@ object Events {
   def jsonField(c: Column, path: String, as: DataType = LongType): Column =
     get_json_object(c, path).try_cast(as)
 
-  /** Tumbling-window aggregation over event time — the batch form of the
-    * streaming windowed agg (same `window()` op used in Streaming.scala). */
+  /** Tumbling-window aggregation over event time (the built-in
+    * `window()` grouping). */
   def hourlyAgg(events: DataFrame): DataFrame =
     events
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -741,14 +737,10 @@ object Events {
       .agg(sum(round(col(valCol) * 100).cast("long")).as("x")), groupCol)
 
   /** [[hooverIndex]]'s dev ladder over an already-rolled-up
-    * per-(group, entity) exact-cents relation `(groupCol, entity, x)`
-    * — shared byte-identically with the streaming face
-    * ([[graft.streaming.StreamingHoover]]), whose archive stores
-    * per-batch partial cent sums (long addition is associative, so
-    * summing partials equals summing raw rows exactly). The stats
-    * join-back is NULL-SAFE (`<=>`): groupBy keeps a NULL group (SQL
-    * standard), so a plain equi-join here would silently drop that
-    * group's card while the aggregation path kept its rows. */
+    * per-(group, entity) exact-cents relation `(groupCol, entity, x)`.
+    * The stats join-back is NULL-SAFE (`<=>`): groupBy keeps a NULL
+    * group (SQL standard), so a plain equi-join here would silently drop
+    * that group's card while the aggregation path kept its rows. */
   private[graft] def hooverFromCents(per: DataFrame, groupCol: String)
       : DataFrame = {
     val st = per.groupBy(col(groupCol))
@@ -1711,12 +1703,9 @@ object Events {
   }
 
   /** [[groupSequential]]'s ladder tail over an already-rolled-up
-    * `(grp, day, treated, n, x)` day-cell relation — shared
-    * byte-identically with the streaming face
-    * ([[graft.streaming.StreamingGroupSequential]]), whose archive
-    * stores per-batch PARTIAL day cells (count/sum are associative, so
-    * summing partials equals summing raw rows exactly — the
-    * increment-monotone contract the moment-archive pattern needs). */
+    * `(grp, day, treated, n, x)` day-cell relation (count/sum are
+    * associative, so cells summed from partial rollups give the same
+    * ladder as cells from raw rows). */
   private[graft] def groupSequentialFromCells(byDay: DataFrame,
                                               looks: Int, c: Double)
       : DataFrame = {
@@ -2388,21 +2377,16 @@ object Events {
         .agg(sum(valCol.cast("long")).as("x")), groupCol)
 
   /** [[theilDecomposition]]'s tail over an already-rolled-up
-    * per-(group, entity) exact-integer relation `(g, <entity>, x)` —
-    * shared byte-identically with the streaming face
-    * ([[graft.streaming.StreamingHoover.currentTheil]], which feeds
-    * it the SAME per-entity cent rollup its Hoover archive already
-    * stores: two inequality cards, one archive, zero extra state —
-    * the archive-as-shared-substrate property long sums give us). */
+    * per-(group, entity) exact-integer relation `(g, <entity>, x)`. */
   private[graft] def theilFromPerEntity(per: DataFrame,
                                         groupCol: String): DataFrame = {
     val gt = per.groupBy(col("g"))
       .agg(count(lit(1)).as("ng"), sum(col("x")).as("sg"))
       .localCheckpoint(eager = false)
     val tot = gt.agg(sum(col("ng")).as("nn"), sum(col("sg")).as("ss"))
-    // null-safe stats join-back (the hooverFromCents contract): the
-    // streaming substrate can carry a NULL group; a plain equi-join
-    // here would starve that group's term sum and drop its card row
+    // null-safe stats join-back (the hooverFromCents contract): groupBy
+    // keeps a NULL group; a plain equi-join here would starve that
+    // group's term sum and drop its card row
     val tw = per.join(
         broadcast(gt.select(col("g").as("__g"), col("ng"), col("sg"))),
         col("g") <=> col("__g")).drop("__g")
@@ -2417,9 +2401,8 @@ object Events {
       (col("sg").cast("double") / col("ss")) *
         log((col("sg").cast("double") * col("nn")) /
           (col("ss").cast("double") * col("ng")))).otherwise(lit(0.0))
-    // null-safe group join (the hooverFromCents contract): the
-    // streaming substrate can carry a NULL group, and a plain
-    // equi-join would silently drop its card row
+    // null-safe group join (the hooverFromCents contract): a plain
+    // equi-join would silently drop the NULL group's card row
     gt.join(tw.withColumnRenamed("g", "__g"),
         col("g") <=> col("__g")).drop("__g")
       .join(broadcast(tot), lit(true))
@@ -4180,15 +4163,11 @@ object Events {
     out
   }
 
-  /** BATCH face of the native stream-stream interval join (q157): left
-    * events joined to SAME-user right events strictly after and within
-    * `windowSeconds` — the click→purchase-within-1h shape. The streaming
-    * face is the IDENTICAL join condition under two-sided watermarks
-    * (`StreamStreamJoinSpec` pins stream == this face on an in-order
-    * replay; watermark − interval bounds the join state, which is what
-    * makes the stream runnable forever). Spark plans the user equi-key
-    * as a hash join with the time range as residual — both sides
-    * shuffle once on user_id, no range explosion. */
+  /** Interval join (q157): left events joined to SAME-user right events
+    * strictly after and within `windowSeconds` — the
+    * click→purchase-within-1h shape. Spark plans the user equi-key as a
+    * hash join with the time range as residual — both sides shuffle once
+    * on user_id, no range explosion. */
   def intervalJoin(events: DataFrame, userCol: String, tsCol: String,
                    idCol: String, typeCol: String, leftType: String,
                    rightType: String, windowSeconds: Long): DataFrame = {
@@ -4212,11 +4191,8 @@ object Events {
     * step_idx, step, ts = that user's step-k conversion instant), the
     * same stage recurrence (step-k time = min ts of step-k events
     * strictly after the step-(k−1) time) exposed as a relation instead
-    * of aggregated to counts. This is the convergence target of the
-    * streaming repair path ([[graft.streaming.FunnelReconcile]]):
-    * [[graft.streaming.StreamingFunnel]]'s in-order trace equals it row
-    * for row, and `funnel`'s counts are its per-step aggregation.
-    * Scale shape identical to [[funnel]]. */
+    * of aggregated to counts: `funnel`'s counts are its per-step
+    * aggregation. Scale shape identical to [[funnel]]. */
   def funnelTrace(events: DataFrame, userCol: String, tsCol: String,
                   typeCol: String, steps: Seq[String],
                   maxGapSeconds: Option[Long] = None): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,19 +11,14 @@ import org.apache.spark.sql.types._
   * use (payloads inline for small media; at scale the payload column holds
   * a pointer + byte-range and the same operators apply after a fetch step).
   *
-  * IMAGE decode/resample is REAL: `javax.imageio` ships with the JDK, so
+  * IMAGE decode is REAL: `javax.imageio` ships with the JDK, so
   * JPEG/PNG/BMP/GIF payloads get true dimensions, a real luminance
-  * histogram feature, and a real nearest-neighbor downsample re-encoded
-  * as PNG. AUDIO decode is REAL for JDK-parseable formats:
-  * `javax.sound.sampled` reads WAV/AIFF/AU PCM payloads into true sample
-  * rate, channel count, duration and an RMS envelope feature. VIDEO
-  * container metadata is REAL for MP4/QuickTime payloads: a pure
-  * header-arithmetic atom walk reads duration, track count and track
-  * resolution (frame decode would need codecs this container lacks).
-  * Payloads no decoder can parse (the testdata's text-bytes stand-ins,
-  * compressed audio, non-MP4 video) fall back to a deterministic fake
-  * (clearly marked STUB below).
-  * Everything Spark-side is real either way: schema, partition-preserving
+  * histogram and a perceptual hash. AUDIO windows are decoded REAL for 16-bit PCM WAV/AIFF/AU
+  * payloads through `javax.sound.sampled`. VIDEO frames are REAL for
+  * MJPEG-AVI payloads: a pure container walk splits the frames and
+  * ImageIO decodes them; [[sampleFrames]] keeps a byte-chunk stand-in
+  * for arbitrary payloads.
+  * Everything Spark-side is real: schema, partition-preserving
   * mapPartitions, batch shape, column pruning (metadata-only queries
   * never touch payload bytes thanks to parquet column projection).
   */
@@ -52,15 +47,11 @@ object Multimodal {
         octet_length(encode(col("text"), "UTF-8")).cast(LongType).as("n_bytes"),
         md5(encode(col("text"), "UTF-8")).as("checksum")).as("meta"))
 
-  /** Extracted-feature row produced by the decode step. */
-  case class MediaFeatures(media_id: Long, kind: String, n_bytes: Long,
-                           width: Int, height: Int, feature: Array[Float])
-
   /** REAL image decode via the JDK's javax.imageio: true width/height and
     * an 8-bin normalized luminance histogram as the feature vector
     * (deterministic — integer Rec.601 luma, fixed binning). Returns None
     * for null payloads and for byte streams ImageIO does not recognize
-    * (text stand-ins, audio, video) — callers fall back to [[stubDecode]].
+    * (text stand-ins, audio, video).
     *
     * Scale note: per-pixel getRGB is fine for thumbnail-class media; a
     * 100 TB pipeline feeding large images should read the Raster data
@@ -97,230 +88,6 @@ object Multimodal {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** REAL image downsample: decode, nearest-neighbor sample every
-    * `factor`-th pixel, re-encode as PNG (ImageIO's PNG writer is
-    * deterministic for a given raster). None when the payload isn't a
-    * decodable image. */
-  private[ops] def resizeImage(payload: Array[Byte],
-                               factor: Int): Option[Array[Byte]] = {
-    if (payload == null) return None
-    try {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(payload))
-      if (img == null) None
-      else {
-        val nw = math.max(1, img.getWidth / factor)
-        val nh = math.max(1, img.getHeight / factor)
-        val out = new java.awt.image.BufferedImage(nw, nh,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < nh) {
-          var x = 0
-          while (x < nw) {
-            out.setRGB(x, y, img.getRGB(x * factor, y * factor))
-            x += 1
-          }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(out, "png", bos)
-        Some(bos.toByteArray)
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** REAL audio decode via the JDK's javax.sound.sampled (WAV/AIFF/AU
-    * containers, 8/16-bit PCM — no native codecs needed). Returns
-    * `(sampleRate, channels, feature)` where the 8-dim feature is
-    * `[duration_sec, overall RMS, RMS of 6 equal time slices]` over the
-    * mono mixdown normalized to [-1, 1] — deterministic (integer sample
-    * math, fixed slicing), so the RMS envelope doubles as a cheap
-    * audio fingerprint for dedup. None for null payloads, non-audio byte
-    * streams, and compressed (non-PCM) encodings — callers fall back to
-    * [[stubDecode]].
-    *
-    * Scale note: like [[decodeImage]] this is partition-local and
-    * allocation-light (one pass over the frames, no sample buffer). */
-  private[ops] def decodeAudio(payload: Array[Byte])
-      : Option[(Int, Int, Array[Float])] = {
-    if (payload == null) return None
-    try {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      try {
-        val fmt = ais.getFormat
-        val enc = fmt.getEncoding
-        val bits = fmt.getSampleSizeInBits
-        val signed = enc == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED
-        val unsigned = enc == javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED
-        if ((!signed && !unsigned) || (bits != 8 && bits != 16)) return None
-        val bytes = ais.readAllBytes()
-        val channels = fmt.getChannels
-        val frameBytes = fmt.getFrameSize
-        val nFrames = bytes.length / frameBytes
-        if (nFrames == 0) return None
-        val big = fmt.isBigEndian
-        // mono mixdown in [-1, 1] for frame i
-        def sample(i: Int): Double = {
-          var c = 0
-          var acc = 0.0
-          while (c < channels) {
-            val off = i * frameBytes + c * (bits / 8)
-            val raw =
-              if (bits == 8) {
-                if (signed) bytes(off).toInt else (bytes(off) & 0xFF) - 128
-              } else {
-                val (b0, b1) = if (big) (bytes(off), bytes(off + 1))
-                               else (bytes(off + 1), bytes(off))
-                // high byte sign-extends only for signed PCM
-                val hi = if (signed) b0.toInt else b0 & 0xFF
-                val v = (hi << 8) | (b1 & 0xFF)
-                if (signed) v else v - 32768
-              }
-            acc += raw / (if (bits == 8) 128.0 else 32768.0)
-            c += 1
-          }
-          acc / channels
-        }
-        // one pass: total sum-of-squares + 6 equal-slice sums
-        val slices = 6
-        val sliceSq = new Array[Double](slices)
-        val sliceN = new Array[Long](slices)
-        var i = 0
-        while (i < nFrames) {
-          val s = sample(i)
-          val slice = math.min(slices - 1, (i.toLong * slices / nFrames).toInt)
-          sliceSq(slice) += s * s
-          sliceN(slice) += 1
-          i += 1
-        }
-        val totalSq = sliceSq.sum
-        val feat = new Array[Float](8)
-        feat(0) = (nFrames / fmt.getSampleRate.toDouble).toFloat
-        feat(1) = math.sqrt(totalSq / nFrames).toFloat
-        var k = 0
-        while (k < slices) {
-          feat(2 + k) =
-            if (sliceN(k) == 0) 0f else math.sqrt(sliceSq(k) / sliceN(k)).toFloat
-          k += 1
-        }
-        Some((math.round(fmt.getSampleRate), channels, feat))
-      } finally ais.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** REAL video CONTAINER metadata via an MP4/QuickTime atom walk — no
-    * codec needed (the JDK has none): boxes are `[u32 size][4cc type]`
-    * (size 1 ⇒ 64-bit size follows; size 0 ⇒ to end of stream), nested
-    * for containers. The walk finds `moov`, reads `mvhd` (timescale +
-    * duration ⇒ duration seconds) and each `trak`'s `tkhd` (16.16
-    * fixed-point width/height; audio tracks carry 0×0), and returns
-    * `(width, height, feature)` with the max track dimensions and
-    * feature = [duration_sec, n_tracks, timescale, 0…]. Deterministic
-    * (pure header arithmetic). None for null payloads and anything that
-    * is not a well-formed MP4 container — those keep the [[stubDecode]]
-    * fallback, now only for genuinely unparseable formats. */
-  private[ops] def decodeVideo(payload: Array[Byte])
-      : Option[(Int, Int, Array[Float])] = {
-    if (payload == null || payload.length < 16) return None
-    // MJPEG-AVI: real frames, real pixels (container split + ImageIO
-    // JPEG decode — no codec). feature = [duration_sec, n_frames,
-    // fps, mean luma of the FIRST decodable frame (0..1), 0…]
-    splitAviFrames(payload) match {
-      case Some((usPerFrame, frames)) =>
-        val decoded = frames.iterator.map(decodeImage).collectFirst {
-          case Some(d) => d
-        }
-        val feat = new Array[Float](8)
-        feat(0) =
-          if (usPerFrame > 0) frames.size * usPerFrame / 1e6f else 0f
-        feat(1) = frames.size.toFloat
-        feat(2) = if (usPerFrame > 0) 1e6f / usPerFrame else 0f
-        decoded match {
-          case Some((w, h, hist)) =>
-            // histogram bins are luma/32 buckets; mean bin center / 8
-            feat(3) = hist.zipWithIndex
-              .map { case (p, i) => p * (i + 0.5f) / 8f }.sum
-            return Some((w, h, feat))
-          case None if frames.nonEmpty =>
-            // real container, undecodable frames (foreign codec in an
-            // AVI shell): keep metadata, no dimensions
-            return Some((0, 0, feat))
-          case None => // empty movi: fall through to the MP4 walk
-        }
-      case None =>
-    }
-    def u32(off: Int): Long =
-      ((payload(off) & 0xFFL) << 24) | ((payload(off + 1) & 0xFFL) << 16) |
-        ((payload(off + 2) & 0xFFL) << 8) | (payload(off + 3) & 0xFFL)
-    def u64(off: Int): Long = (u32(off) << 32) | u32(off + 4)
-    def fourcc(off: Int): String =
-      new String(payload, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-    // yields (type, contentStart, contentEnd) for each box in [from, to)
-    def boxes(lo: Long, hi: Long): Iterator[(String, Long, Long)] =
-      new Iterator[(String, Long, Long)] {
-        private var pos = lo
-        def hasNext: Boolean = pos + 8 <= hi
-        def next(): (String, Long, Long) = {
-          val size0 = u32(pos.toInt)
-          val typ = fourcc(pos.toInt + 4)
-          val (hdr, size) =
-            if (size0 == 1L && pos + 16 <= hi) (16L, u64(pos.toInt + 8))
-            else if (size0 == 0L) (8L, hi - pos)
-            else (8L, size0)
-          if (size < hdr || pos + size > hi) { pos = hi; ("", 0L, 0L) }
-          else { val r = (typ, pos + hdr, pos + size); pos += size; r }
-        }
-      }
-    try {
-      val top = boxes(0L, payload.length.toLong).toList
-      // an MP4 leads with ftyp (or a QuickTime-style moov-first layout);
-      // require a recognizable top-level structure, not just 8 bytes that
-      // happen to parse
-      if (!top.exists(_._1 == "moov") ||
-          !top.headOption.exists(b => b._1 == "ftyp" || b._1 == "moov"))
-        return None
-      val (_, ms, me) = top.find(_._1 == "moov").get
-      var durationSec = 0f
-      var timescale = 0f
-      var nTracks = 0
-      var w = 0
-      var h = 0
-      boxes(ms, me).foreach {
-        case ("mvhd", cs, _) =>
-          val c = cs.toInt
-          val v = payload(c) & 0xFF
-          if (v == 1) {
-            timescale = u32(c + 20).toFloat
-            if (timescale > 0) durationSec = u64(c + 24) / timescale
-          } else {
-            timescale = u32(c + 12).toFloat
-            if (timescale > 0) durationSec = u32(c + 16) / timescale
-          }
-        case ("trak", cs, ce) =>
-          nTracks += 1
-          boxes(cs, ce).foreach {
-            case ("tkhd", tcs, _) =>
-              val c = tcs.toInt
-              val v = payload(c) & 0xFF
-              val base = if (v == 1) c + 88 else c + 76
-              // 16.16 fixed point; integer part only
-              val tw = (u32(base) >> 16).toInt
-              val th = (u32(base + 4) >> 16).toInt
-              w = math.max(w, tw)
-              h = math.max(h, th)
-            case _ =>
-          }
-        case _ =>
-      }
-      val feat = new Array[Float](8)
-      feat(0) = durationSec
-      feat(1) = nTracks.toFloat
-      feat(2) = timescale
-      Some((w, h, feat))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
   /** Pure-JVM MJPEG-AVI frame splitter — CONTAINER parsing only, no
     * codec (the r10–r12 video-decode carry closed the honest way):
     * RIFF/AVI is a little-endian chunk walk, and an MJPEG AVI's
@@ -329,9 +96,8 @@ object Multimodal {
     * REAL frame extraction and REAL pixel decode with zero native
     * dependencies. Returns (microSecPerFrame, frame payloads) — frames
     * inside one level of LIST-'rec ' grouping included (the spec's
-    * interleave layout); None when the payload isn't a RIFF AVI (MP4
-    * metadata stays [[decodeVideo]]'s box walk; other codecs' frames
-    * simply won't ImageIO-decode and degrade to the stub). */
+    * interleave layout); None when the payload isn't a RIFF AVI (other
+    * codecs' frames simply won't ImageIO-decode). */
   private[ops] def splitAviFrames(payload: Array[Byte])
       : Option[(Long, Vector[Array[Byte]])] = {
     if (payload == null || payload.length < 12) return None
@@ -383,55 +149,6 @@ object Multimodal {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** ======================== STUB ========================
-    * Deterministic FAKE decoder for payloads none of the real decoders
-    * can parse (the testdata's media payloads are text-byte stand-ins;
-    * MJPEG-AVI video gets REAL frame decode via [[splitAviFrames]] +
-    * ImageIO; MP4 container METADATA is real via [[decodeVideo]]; only
-    * codec-compressed frame data this JVM cannot decode lands here):
-    * derives "dimensions" and a
-    * fixed-size "feature vector" purely from the payload bytes so tests
-    * are exact. The Spark plumbing around it is final. */
-  private def stubDecode(mediaId: Long, kind: String,
-                         payload: Array[Byte]): MediaFeatures = {
-    val n = if (payload == null) 0L else payload.length.toLong
-    // STUB: fake width/height from byte stats, fake 8-dim feature from a
-    // rolling byte hash — deterministic, replaces real pixel decoding.
-    var h = 1125899906842597L
-    var i = 0
-    while (i < n) { h = 31 * h + payload(i.toInt); i += 1 }
-    val feat = Array.tabulate(8)(j => ((h >>> (j * 8)) & 0xFF).toFloat / 255f)
-    MediaFeatures(mediaId, kind, n, (n % 640).toInt + 1, (n % 480).toInt + 1, feat)
-  }
-
-  /** Decode/feature-extract over the media table: partition-preserving
-    * `mapPartitions` (the Scala analogue of `mapInPandas` batch UDFs) —
-    * each task decodes its partition's payloads without any shuffle.
-    * Image payloads get the REAL javax.imageio decode (true dimensions +
-    * luminance histogram feature); audio payloads the REAL
-    * javax.sound.sampled PCM decode (width := sample rate Hz,
-    * height := channels, feature := duration + RMS envelope — see
-    * [[decodeAudio]]); unparseable payloads and video fall back to the
-    * deterministic stub. */
-  def decodeFeatures(media: DataFrame): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "kind", "payload")
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions(_.map { case (id, kind, payload) =>
-        (kind match {
-          case "image" => decodeImage(payload)
-          case "audio" => decodeAudio(payload)
-          case "video" => decodeVideo(payload)
-          case _ => None
-        }) match {
-          case Some((w, h, feat)) =>
-            MediaFeatures(id, kind, payload.length.toLong, w, h, feat)
-          case None => stubDecode(id, kind, payload)
-        }
-      })
-  }
-
   /** Deterministic 16-bit signed mono PCM WAV through the REAL JDK
     * encoder (javax.sound.sampled): `sample(i)` supplies frame i's raw
     * 16-bit value. The encoder's WAV container round-trips PCM
@@ -473,9 +190,8 @@ object Multimodal {
     * identically in the oracle. 16-bit signed mono PCM only (the synth
     * contract); unparseable or other-format payloads contribute no rows.
     *
-    * Scale shape: partition-local mapPartitions decode (the
-    * [[decodeFeatures]] batch shape — no shuffle, payload bytes never
-    * leave the task); output is windows-per-payload rows, ~n/windowFrames
+    * Scale shape: partition-local decode (no shuffle, payload bytes
+    * never leave the task); output is windows-per-payload rows, ~n/windowFrames
     * per media row. */
   def audioWindowStats(media: DataFrame, idCol: String,
                        payloadCol: String, windowFrames: Int): DataFrame = {
@@ -534,34 +250,6 @@ object Multimodal {
         round(sqrt(col("sumsq").cast("double") / col("n_frames")), 6))
   }
 
-  /** Resize for image payloads: partition-local binary transform with
-    * metadata recomputed from the new payload (decode → resample →
-    * re-encode per partition, no shuffle). Decodable images get the REAL
-    * nearest-neighbor pixel downsample re-encoded as PNG
-    * ([[resizeImage]]); payloads ImageIO can't parse keep the
-    * deterministic byte-stride STUB so the testdata's text stand-ins
-    * still transform reproducibly. */
-  def resize(media: DataFrame, factor: Int): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    require(factor > 0)
-    media.select("media_id", "kind", "payload")
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions(_.map { case (id, kind, payload) =>
-        val out =
-          if (kind != "image" || payload == null) payload
-          else resizeImage(payload, factor).getOrElse(
-            payload.zipWithIndex.collect {
-              case (b, i) if i % factor == 0 => b }) // STUB fallback
-        (id, kind, out)
-      })
-      .toDF("media_id", "kind", "payload")
-      .withColumn("meta", struct(
-        lit(null).cast("string").as("source"),
-        octet_length(col("payload")).cast("long").as("n_bytes"),
-        md5(col("payload")).as("checksum")))
-  }
-
   /** PERCEPTUAL average-hash (aHash) of a decodable image: average-pool
     * the integer Rec.601 luma onto an 8×8 grid (cell boundaries by floor
     * division, every pixel in exactly one cell), threshold each cell mean
@@ -611,8 +299,8 @@ object Multimodal {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Per-image perceptual hashes: partition-local decode (same
-    * `mapPartitions` shape as [[decodeFeatures]] — no shuffle), one row
+  /** Per-image perceptual hashes: partition-local `mapPartitions`
+    * decode (no shuffle), one row
     * per DECODABLE image payload, (`media_id`, `ahash`). Undecodable or
     * sub-8×8 payloads are dropped (their near-dup story is the exact
     * checksum in `meta`, not a perceptual radius). */

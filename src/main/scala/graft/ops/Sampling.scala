@@ -461,22 +461,6 @@ object Sampling {
       .drop("__draw")
   }
 
-  /** Materialize [[shuffleShards]]'s placement: one `shard=K/` directory
-    * per shard, each holding exactly ONE parquet file whose physical row
-    * order is the shard's shuffled (pos) order — the layout a training
-    * loader streams sequentially. The repartition keys on the shard value
-    * itself, so every shard's rows land in a single task and a single
-    * file; `sortWithinPartitions` makes the in-file order the shuffle
-    * order without any global sort. Rerunning the writer on the same
-    * input reproduces byte-identical placement (every step is the
-    * deterministic draw). */
-  def writeShards(df: DataFrame, keyCol: String, nShards: Int,
-                  path: String): Unit =
-    shuffleShards(df, keyCol, nShards)
-      .repartition(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("pos"))
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
-
   /** NEYMAN (variance-optimal) stratified allocation (Neyman 1934): give
     * stratum h the share of `budget` proportional to N_h·S_h — strata
     * that are BIG or INTERNALLY VARIED earn more samples, because that is

@@ -362,9 +362,9 @@ object Sketches {
   }
 
   /** The (register, rank) projection of a non-null string-keyed
-    * relation `(k)` — shared by [[hllReplay]] and the streaming face
-    * ([[graft.streaming.StreamingHll]]) so both hash identically.
-    * Map-side only: one md5 + integer ops per row, no shuffle. */
+    * relation `(k)` for [[hllReplay]] — the ungrouped
+    * [[hllRegistersBy]], so every HLL face hashes identically. Map-side
+    * only: one md5 + integer ops per row, no shuffle. */
   private[graft] def hllRegisters(keyed: DataFrame, p: Int): DataFrame =
     hllRegistersBy(keyed, p, Nil)
 
@@ -485,9 +485,6 @@ object Sketches {
         (col("est") - col("cnt")).as("overest"))
   }
 
-  /** The [[cmsReplay]] bucket hash — shared with the streaming counter
-    * maintenance ([[graft.streaming.StreamingCms]]) so both faces
-    * bucket identically. */
   /** BLOOM FILTER REPLAY (Bloom 1970) — the ORACLE-CHECKED face of
     * the bloom family, completing the sketch quartet beside CMS
     * (q260), HLL (q299) and AMS F2 (q222): q57's semijoin rides
@@ -569,6 +566,8 @@ object Sketches {
             " div (n_probes - n_members)")).as("fpr_ppm"))
   }
 
+  /** The [[cmsReplay]] bucket hash — also the k-hash family of
+    * [[bloomReplay]]. */
   private[graft] def cmsBucket(i: Column, k: Column, width: Int): Column =
     conv(substring(md5(concat(i, lit("|"), k.cast("string"))), 1, 8),
       16, 10).cast("long") % width

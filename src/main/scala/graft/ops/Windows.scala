@@ -44,8 +44,8 @@ object Windows {
     * round-1 "3.2×" number was a count()-sink artifact: Catalyst pruned
     * the un-referenced max_by wholesale, timing a gutted plan.) The agg
     * form drops two per-partition sorts + the rank pass from the plan;
-    * round-5 wide-row measurement (`tools/WideRowRace`, 4M rows × 55
-    * columns incl. 26 strings, noop sink, 32 g heap) shows that does NOT
+    * round-5 wide-row measurement (4M rows × 55 columns incl. 26
+    * strings, noop sink, 32 g heap) shows that does NOT
     * buy wall-clock either: window 4.54 s vs agg 5.09 s min-of-3 — equal
     * within noise, because `InferWindowGroupLimit`'s per-partition
     * group-limit discards losers BEFORE the sort sees most rows. Under an

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.GraftTestBus
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.TestSpark.messageChain
 
 /** End-to-end golden test (SURVEY.md §5.4): synthetic 4-family FA fixture
   * (FIXTURES.md §A) through the full Pipeline; exact expected merged rows,
@@ -137,6 +138,17 @@ class FaPipelineSpec extends AnyFunSuite {
     val clean = panel(buildFixture())
     assert(clean.length == 3)
     assert(panel(buildFixture(damaged)) == clean)
+  }
+
+  test("a duplicated non-NULL Prop PropertyID aborts the run through " +
+    "the m:1 guard") {
+    // a second residential row for P1, which has sales in the panel
+    val dup = Seq(
+      "1|R|20230102|40.7|-73.9|1 Main St Apt 2|New York|NY|1001|36061|12345|100|A")
+    val e = intercept[Exception] { new Pipeline(spark, buildFixture(dup)).run() }
+    assert(messageChain(e).exists(_.contains(
+      "right side of m:1 join is not unique on (PropertyID): e.g. key=1")),
+      messageChain(e).mkString(" | "))
   }
 
   test("idempotent restage: second run reuses staging, same result") {

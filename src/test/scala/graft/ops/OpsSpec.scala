@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.TestSpark.messageChain
 import graft.functions.SimHash64.simhash64
 
 /** Windows / joins / dedup / similarity / text behavior on tiny exact
@@ -42,11 +43,6 @@ class OpsSpec extends AnyFunSuite {
         Option(row.get(2))))
     assert(got.sameElements(Array((1L, "a", Some(100L)), (2L, "b", None),
       (3L, "c", None))))
-  }
-
-  private def messageChain(t: Throwable): Seq[String] = {
-    val it = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10)
-    it.flatMap(x => Option(x.getMessage)).toSeq
   }
 
   test("leftJoinValidated enforces the declared cardinality contract") {
@@ -637,32 +633,6 @@ class OpsSpec extends AnyFunSuite {
     assert(got == Seq((1L, 2L, "a>b"), (2L, 1L, "c")))
   }
 
-  test("multimodal resize: image payloads stride-downsampled, meta recomputed") {
-    val docs = Seq((3L, "abcdefghij", "s", "en", 10L), (4L, "abcdefghij", "s", "en", 10L))
-      .toDF("doc_id", "text", "source", "lang", "n_chars")
-    val media = Multimodal.fromDocuments(docs) // doc 3 -> image, doc 4 -> audio
-    val out = Multimodal.resize(media, 2)
-      .select("media_id", "kind", "payload")
-      .collect().map(r => (r.getLong(0), r.getString(1),
-        r.getAs[Array[Byte]](2))).sortBy(_._1)
-    val (_, k3, p3) = out(0)
-    assert(k3 == "image" && new String(p3, "UTF-8") == "acegi") // every 2nd byte
-    val (_, k4, p4) = out(1)
-    assert(k4 == "audio" && new String(p4, "UTF-8") == "abcdefghij") // untouched
-  }
-
-  test("multimodal decodeFeatures is deterministic and payload-derived") {
-    val docs = Seq((1L, "hello world", "src", "en", 11L),
-      (2L, "hello world", "src", "en", 11L))
-      .toDF("doc_id", "text", "source", "lang", "n_chars")
-    val feats = Multimodal.decodeFeatures(Multimodal.fromDocuments(docs))
-      .collect().sortBy(_.media_id)
-    assert(feats.length == 2)
-    assert(feats(0).n_bytes == 11L)
-    assert(feats(0).feature.sameElements(feats(1).feature))
-    assert(feats(0).width == feats(1).width)
-  }
-
   /** A real PNG built in-process: 16x12 horizontal gradient (black→white),
     * encoded through ImageIO — an actual compressed PNG byte stream, not a
     * stand-in. */
@@ -680,17 +650,14 @@ class OpsSpec extends AnyFunSuite {
 
   test("multimodal: REAL PNG decode — true dimensions + luminance histogram") {
     val png = pngFixture()
-    val media = Seq((1L, "image", png), (2L, "audio", png))
-      .toDF("media_id", "kind", "payload")
-    val feats = Multimodal.decodeFeatures(media).collect().sortBy(_.media_id)
-    // image row: real decode — true 16x12, n_bytes = png length
-    assert(feats(0).width == 16 && feats(0).height == 12)
-    assert(feats(0).n_bytes == png.length.toLong)
+    val (w, h, hist) = Multimodal.decodeImage(png).get
+    assert(w == 16 && h == 12)
     // gradient spans all 8 luminance bins; histogram sums to 1
-    assert(feats(0).feature.length == 8 && feats(0).feature.forall(_ > 0f))
-    assert(math.abs(feats(0).feature.sum - 1f) < 1e-5)
-    // audio row carries the same bytes but takes the stub path (fake dims)
-    assert(feats(1).width == (png.length % 640) + 1)
+    assert(hist.length == 8 && hist.forall(_ > 0f))
+    assert(math.abs(hist.sum - 1f) < 1e-5)
+    // byte streams ImageIO does not recognize are not images
+    assert(Multimodal.decodeImage("hello world".getBytes("UTF-8")).isEmpty)
+    assert(Multimodal.decodeImage(null).isEmpty)
   }
 
   /** Like [[pngFixture]] but the gradient runs top→bottom — same pixel
@@ -816,112 +783,6 @@ class OpsSpec extends AnyFunSuite {
       .sameElements(Sampling.bernoulliByHash(df.repartition(7), "k", 1, 4)
         .collect().map(_.getLong(0)).sorted))
     assert(!kept.queryExecution.executedPlan.toString.contains("Exchange"))
-  }
-
-  /** A real WAV built in-process through the JDK encoder: 16-bit signed
-    * little-endian mono PCM at 8 kHz, constant amplitude 8192 (= 0.25
-    * normalized) — so every RMS, overall and per slice, is exactly 0.25. */
-  private def wavFixture(nFrames: Int = 4000, rate: Float = 8000f,
-                         amplitude: Short = 8192): Array[Byte] = {
-    import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
-    val pcm = new Array[Byte](nFrames * 2)
-    var i = 0
-    while (i < nFrames) {
-      pcm(2 * i) = (amplitude & 0xFF).toByte          // little-endian lo
-      pcm(2 * i + 1) = ((amplitude >> 8) & 0xFF).toByte // hi
-      i += 1
-    }
-    val fmt = new AudioFormat(rate, 16, 1, true, false)
-    val ais = new AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, nFrames.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos)
-    bos.toByteArray
-  }
-
-  test("multimodal: REAL WAV decode — sample rate, channels, duration, RMS") {
-    val wav = wavFixture() // 4000 frames @ 8 kHz = 0.5 s, RMS 0.25
-    val media = Seq((1L, "audio", wav), (2L, "video", wav))
-      .toDF("media_id", "kind", "payload")
-    val feats = Multimodal.decodeFeatures(media).collect().sortBy(_.media_id)
-    // audio row: real decode — width := sample rate, height := channels
-    assert(feats(0).width == 8000 && feats(0).height == 1)
-    assert(feats(0).n_bytes == wav.length.toLong)
-    assert(feats(0).feature.length == 8)
-    assert(math.abs(feats(0).feature(0) - 0.5f) < 1e-6, "duration_sec")
-    feats(0).feature.drop(1).foreach(r =>
-      assert(math.abs(r - 0.25f) < 1e-6, s"rms $r"))
-    // same bytes declared video: stub path (no JDK video decode)
-    assert(feats(1).width == (wav.length % 640) + 1)
-  }
-
-  /** A minimal but structurally valid MP4: ftyp + moov{mvhd v0 (108 B,
-    * timescale/duration) + trak{tkhd v0 (92 B, 16.16 width/height)}} —
-    * every box at its spec size, all multi-byte fields big-endian. */
-  private def mp4Fixture(timescale: Int = 600, duration: Int = 1800,
-                         width: Int = 640, height: Int = 360): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(16 + 216) // big-endian default
-    def fourcc(s: String): Unit = s.foreach(c => bb.put(c.toByte))
-    bb.putInt(16); fourcc("ftyp"); fourcc("isom"); bb.putInt(0)
-    bb.putInt(216); fourcc("moov")
-    bb.putInt(108); fourcc("mvhd")
-    bb.putInt(0)                   // version 0 + flags
-    bb.putInt(0); bb.putInt(0)     // ctime, mtime
-    bb.putInt(timescale); bb.putInt(duration)
-    bb.putInt(0x00010000)          // rate 1.0
-    bb.putShort(0x0100.toShort); bb.putShort(0) // volume, reserved
-    bb.putInt(0); bb.putInt(0)     // reserved
-    Seq(0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000).foreach(bb.putInt)
-    (1 to 6).foreach(_ => bb.putInt(0)) // pre_defined
-    bb.putInt(2)                   // next track id
-    bb.putInt(100); fourcc("trak")
-    bb.putInt(92); fourcc("tkhd")
-    bb.putInt(7)                   // version 0 + enabled flags
-    bb.putInt(0); bb.putInt(0)     // ctime, mtime
-    bb.putInt(1); bb.putInt(0)     // track id, reserved
-    bb.putInt(duration)
-    bb.putInt(0); bb.putInt(0)     // reserved
-    bb.putShort(0); bb.putShort(0); bb.putShort(0); bb.putShort(0)
-    Seq(0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000).foreach(bb.putInt)
-    bb.putInt(width << 16); bb.putInt(height << 16)
-    bb.array()
-  }
-
-  test("multimodal: REAL MP4 atom walk — duration, track count, resolution") {
-    val mp4 = mp4Fixture() // 1800/600 = 3 s, one 640x360 track
-    val direct = Multimodal.decodeVideo(mp4)
-    assert(direct.isDefined)
-    val (w, h, feat) = direct.get
-    assert(w == 640 && h == 360)
-    assert(feat(0) == 3.0f && feat(1) == 1.0f && feat(2) == 600.0f)
-    val media = Seq((1L, "video", mp4),
-        (2L, "video", "not an mp4 at all just text bytes".getBytes("UTF-8")))
-      .toDF("media_id", "kind", "payload")
-    val feats = Multimodal.decodeFeatures(media).collect().sortBy(_.media_id)
-    // real container metadata through the Spark path
-    assert(feats(0).width == 640 && feats(0).height == 360)
-    assert(feats(0).feature(0) == 3.0f)
-    // unparseable payload still degrades to the deterministic stub
-    val textLen = "not an mp4 at all just text bytes".getBytes("UTF-8").length
-    assert(feats(1).width == textLen % 640 + 1)
-    // corrupt headers (truncated box, lying size) must not throw
-    assert(Multimodal.decodeVideo(mp4.take(20)).isEmpty)
-    val lying = mp4.clone(); lying(3) = 0x7F.toByte // ftyp size -> huge
-    assert(Multimodal.decodeVideo(lying).isEmpty)
-  }
-
-  test("multimodal: REAL PNG resize — pixel downsample, re-encoded PNG") {
-    val png = pngFixture()
-    val media = Seq((1L, "image", png)).toDF("media_id", "kind", "payload")
-    val out = Multimodal.resize(media, 2)
-      .select("payload").collect()(0).getAs[Array[Byte]](0)
-    // output is itself a decodable PNG at half dimensions
-    val round = Multimodal.decodeImage(out)
-    assert(round.isDefined)
-    val (w2, h2, _) = round.get
-    assert(w2 == 8 && h2 == 6)
-    // PNG magic bytes — a real re-encode, not a byte stride
-    assert((out(0) & 0xFF) == 0x89 && out(1) == 'P' && out(2) == 'N')
   }
 
   test("asOfJoinForward attaches the FIRST right row at-or-after; nulls when none") {
@@ -1073,28 +934,6 @@ class OpsSpec extends AnyFunSuite {
     val got = TextAnalysis.vocabTopK(docs, "text", n = 2, k = 3)
       .as[(String, Long)].collect()
     assert(got.sameElements(Array(("a b", 3L), ("b a", 1L), ("b c", 1L))))
-  }
-
-  test("writeShards: one file per shard dir, in-file order is the shard's " +
-    "pos order") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards_")
-      .toString
-    try {
-      Sampling.writeShards((0L until 500L).toDF("id"), "id", 4, dir)
-      val shardDirs = new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("shard=")).sortBy(_.getName)
-      assert(shardDirs.length == 4, shardDirs.mkString(","))
-      shardDirs.foreach { d =>
-        val parts = d.listFiles().filter(_.getName.endsWith(".parquet"))
-        assert(parts.length == 1, s"${d.getName}: ${parts.length} files")
-        // single-file read preserves file order: pos must be 1..n in order
-        val pos = spark.read.parquet(parts(0).toString)
-          .select("pos").as[Long].collect()
-        assert(pos.sameElements(1L to pos.length), d.getName)
-      }
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
   }
 
   test("containmentPairs flags subset duplication that Jaccard misses") {

@@ -207,6 +207,31 @@ class Round16OpsSpec extends AnyFunSuite {
       one)
   }
 
+  test("hooverIndex and theilDecomposition: a NULL group gets its own " +
+    "card row, because both stats join-backs are null-safe — hand " +
+    "values") {
+    // NULL group {1,1,6} cents reads 5/12; A's equal split reads 0
+    val ev = Seq[(Option[String], Long, Double)](
+      (Some("A"), 1L, 0.02), (Some("A"), 2L, 0.02),
+      (None, 1L, 0.01), (None, 2L, 0.01), (None, 3L, 0.06))
+      .toDF("event_type", "user_id", "value")
+    val hoover = Events.hooverIndex(ev, "event_type", "user_id", "value")
+      .as[(Option[String], Long, Long, Option[Long])].collect().toSet
+    assert(hoover == Set((Some("A"), 2L, 4L, Some(0L)),
+      (None, 3L, 8L, Some(416666L))), hoover)
+    // the hand fixture of the test above with group B made NULL
+    val df = Seq[(Option[String], Long, Long)](
+      (Some("A"), 1L, 4L), (Some("A"), 2L, 4L), (None, 3L, 2L),
+      (None, 4L, 2L)).toDF("source", "doc_id", "v")
+    val theil = Events.theilDecomposition(df, "source", "doc_id",
+        col("v"))
+      .as[(Option[String], Long, Long, Long, Double, Double, Double)]
+      .collect().toSet
+    assert(theil == Set(
+      (Some("A"), 2L, 8L, 666666L, 0.0, 0.191788, 0.191788),
+      (None, 2L, 4L, 333333L, 0.0, -0.135155, -0.135155)), theil)
+  }
+
   test("ivfOperatingCurve: candidate mass and recall are monotone in " +
     "nProbe, and probing EVERY cell recovers the brute truth exactly " +
     "(recall_micros = 1000000)") {

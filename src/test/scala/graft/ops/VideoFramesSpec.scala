@@ -66,24 +66,6 @@ class VideoFramesSpec extends AnyFunSuite {
     assert(Multimodal.splitAviFrames(null).isEmpty)
   }
 
-  test("decodeFeatures on an MJPEG AVI yields REAL dimensions and the " +
-    "duration/frame-count/fps feature — not the stub — while garbage " +
-    "video payloads still degrade to the stub") {
-    val avi = mjpegAvi(Seq(jpegFrame(16, 8, 128), jpegFrame(16, 8, 128)))
-    val media = Seq(
-      (1L, "video", avi),
-      (2L, "video", "definitely not a container".getBytes)
-    ).toDF("media_id", "kind", "payload")
-    val got = Multimodal.decodeFeatures(media).collect()
-      .map(m => m.media_id -> m).toMap
-    assert(got(1L).width == 16 && got(1L).height == 8)
-    assert(got(1L).feature(1) == 2f) // n_frames
-    assert(math.abs(got(1L).feature(0) - 0.08f) < 1e-6) // 2 × 40ms
-    assert(math.abs(got(1L).feature(2) - 25f) < 1e-4) // fps
-    // the garbage payload keeps the stub's byte-derived dimensions
-    assert(got(2L).width == ("definitely not a container".length % 640) + 1)
-  }
-
   test("videoFrames: stride sampling over REAL decoded frames, " +
     "per-frame luma ordered by the frames' gray levels, non-AVI " +
     "payloads contribute zero rows") {

@@ -1,6 +1,6 @@
 #!/bin/bash
 # CI gate: unit/spec suite + correctness vs DuckDB oracle + stress budgets
-# + FA pipeline scale gate.
+# + FA pipeline scale gate + both gated perfbench workloads.
 # Any failure exits nonzero. From /root/repo:
 #   bash tools/ci.sh
 set -euo pipefail
@@ -36,6 +36,15 @@ sbt -batch "runMain graft.tools.FaScale 8 20000 --gate"
 # with damaged Prop keys and checks its panel against DuckDB; the last
 # stdout line is a JSON summary that must report correct with no failures
 bench=$(python3 perfbench/run.py --workload fa_etl --seed 1 --seconds 12 --trace 0)
+echo "$bench"
+echo "$bench" | tail -n 1 | python3 -c '
+import json, sys
+r = json.loads(sys.stdin.read())
+sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)'
+
+# second gated workload: the dedup, similarity and graph queries, each
+# output checked against DuckDB; same JSON summary contract as above
+bench=$(python3 perfbench/run.py --workload dedup_graph_queries --seed 11 --seconds 12 --trace 0)
 echo "$bench"
 echo "$bench" | tail -n 1 | python3 -c '
 import json, sys
