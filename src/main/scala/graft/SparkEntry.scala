@@ -803,8 +803,8 @@ object SparkEntry {
     * Deterministic end to end, so the oracle replays the identical
     * algorithm in SQL and the entry is hash-checked — the property
     * `percentile_approx`'s randomized KLL sketch can't offer
-    * (Sketches.approxPercentile remains for callers who want tighter
-    * error at the same memory). Median qty binned at 1.0, p90 price at
+    * (use `percentile_approx` directly for tighter error at the same
+    * memory). Median qty binned at 1.0, p90 price at
     * 100.0; SketchesSpec pins |estimate − exact nearest-rank| ≤ w/2. */
   private def qApproxPercentile(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
@@ -1533,8 +1533,8 @@ object SparkEntry {
   /** Oracle-checked Count-Min replay over lineitem part keys: the d×w
     * deterministic counter table probed for the exact top-10 keys,
     * pinning est >= exact cross-engine — the checkable face of the
-    * CMS family (Sketches.heavyHitters rides Spark's opaque binary
-    * sketch, which DuckDB cannot replay). See
+    * CMS family (Spark's `count_min_sketch` aggregate is an opaque
+    * binary sketch, which DuckDB cannot replay). See
     * [[graft.ops.Sketches.cmsReplay]]. */
   private def qCmsReplay(s: SparkSession, dir: String): DataFrame =
     Sketches.cmsReplay(t(s, dir, "lineitem"), col("l_partkey"),
@@ -3080,7 +3080,7 @@ object SparkEntry {
   /** Oracle-checked HyperLogLog over the corpus vocabulary (p=8, 256
     * registers): the distinct-token estimate beside the exact count
     * with realized error — the fixed-memory cardinality read the
-    * opaque DataSketches path (Sketches.approxDistinct) can't
+    * opaque DataSketches path (`hll_sketch_agg`) can't
     * hash-verify cross-engine. */
   private def qHllReplay(s: SparkSession, dir: String): DataFrame =
     graft.ops.Sketches.hllReplay(

@@ -2003,15 +2003,6 @@ object Dedup {
     Windows.topOneByAgg(records, Seq(col(entityCol)),
       strategy.key(idCol))
 
-  /** [[resolveEntities]] composed with [[survivors]] — the one-call
-    * face when a single strategy is wanted. */
-  def resolveEntitiesSurvivors(df: DataFrame, idCol: String,
-                               strCol: String, maxDist: Int,
-                               strategy: Survivorship.Strategy,
-                               maxIters: Int = 20): DataFrame =
-    survivors(resolveEntities(df, idCol, strCol, maxDist, maxIters)
-      .join(df, idCol), "entity_id", idCol, strategy)
-
   // ------------------------------------------------------------ simhash
 
   /** SimHash near-dup pairs with hamming distance ≤ maxHamming (≤ 31).
@@ -2032,13 +2023,12 @@ object Dedup {
   }
 
   /** Pigeonhole-banded hamming pairs over ANY 64-bit signature relation
-    * `sigs(doc_id, sh)` — the candidate engine behind [[simHashPairs]],
-    * reused verbatim by [[Multimodal.imageNearDups]]' perceptual hashes
+    * `sigs(doc_id, sh)` — the candidate engine behind [[simHashPairs]]
     * (banding is a property of the 64-bit code, not of how it was
     * computed). Complete for the requested radius: ≤ maxHamming
     * differing bits cannot touch all maxHamming+1 chunks. */
-  private[graft] def bandedHammingPairs(sigs: DataFrame,
-                                      maxHamming: Int): DataFrame = {
+  private def bandedHammingPairs(sigs: DataFrame,
+                                 maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 31, "maxHamming must be in [0, 31]")
     val nChunks = maxHamming + 1
     val baseWidth = 64 / nChunks

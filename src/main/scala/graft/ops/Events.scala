@@ -822,12 +822,14 @@ object Events {
       .agg(count(lit(1)).as("y"))
     val lags = daily.crossJoin(
       broadcast(Seq.range(1, maxLag + 1).toDF("lag")))
-    val b = daily.select(col(groupCol), col("day").as("day2"),
+    // b's group column is renamed: lags and b both derive from daily, so
+    // an equality on the same column of both would be trivially true
+    val b = daily.select(col(groupCol).as("__g2"), col("day").as("day2"),
       col("y").as("y2"))
     val joined = lags.join(b,
-      lags(groupCol) === b(groupCol) &&
+      col(groupCol) === col("__g2") &&
         col("day") + col("lag") === col("day2"))
-      .select(lags(groupCol), col("lag"), col("y").as("x"), col("y2"))
+      .select(col(groupCol), col("lag"), col("y").as("x"), col("y2"))
     val m = joined.groupBy(col(groupCol), col("lag"))
       .agg(count(lit(1)).as("n"),
         sum(col("x")).as("sx"), sum(col("y2")).as("sy"),
@@ -987,7 +989,7 @@ object Events {
       .agg(sum(col("dx").cast("decimal(38,0)") * col("dy")).as("cxy"))
     val spine = daily.sparkSession.range(-maxLag, maxLag + 1)
       .select(col("id").cast("int").as("lag"))
-    broadcast(spine)
+    spine
       .join(ch, Seq("lag"), "left")
       .join(broadcast(c0), lit(true))
       .select(col("lag").cast("long").as("lag"), col("n_days"),
@@ -3026,7 +3028,7 @@ object Events {
       .localCheckpoint(eager = false)
     val spine = shapleySpine(channels)
       .toDF("channel", "with_coal", "without_coal", "w_micros")
-    broadcast(spine)
+    spine
       .join(coalV.select(col("coal").as("with_coal"),
         col("v").as("vw")), Seq("with_coal"), "left")
       .join(coalV.select(col("coal").as("without_coal"),

@@ -35,19 +35,6 @@ object Sampling {
       .drop(skey)
   }
 
-  /** Deterministic Bernoulli-style sample at rate ≈ num/den: keeps rows
-    * whose md5(key) prefix, read as a number, falls under the rate. Same
-    * engine-portable determinism as [[stratifiedByHash]]; a pure map
-    * (no shuffle at all). */
-  def bernoulliByHash(df: DataFrame, keyCol: String,
-                      num: Int, den: Int): DataFrame = {
-    require(num >= 0 && den > 0 && num <= den, "rate must be in [0, 1]")
-    // first 8 hex chars of md5 → 32-bit value; keep if value*den < num*2^32
-    val v = conv(substring(md5(col(keyCol).cast("string")), 1, 8), 16, 10)
-      .cast("long")
-    df.filter(v * den < lit(num.toLong * 4294967296L))
-  }
-
   /** Deterministic WEIGHTED sample-without-replacement per group
     * (Efraimidis–Spirakis A-ES): priority = −ln(u)/w with u the row's own
     * md5 draw mapped into (0, 1]; the k SMALLEST priorities per group win,
@@ -93,8 +80,9 @@ object Sampling {
     * high-quality documents at high rates and boilerplate at low rates in
     * ONE shuffle-free pass, instead of a hard threshold.
     *
-    * Comparison is TRULY integerized per [[bernoulliByHash]]'s pattern:
-    * the clamped weight rounds to 6 decimals, converts to micro-units
+    * The draw v is the first 8 hex chars of md5(key) read as a 32-bit
+    * value, and the comparison is TRULY integerized: the clamped weight
+    * rounds to 6 decimals, converts to micro-units
     * (wMicros = round(w·10⁶), an exact long), and the keep test is all-long
     * `v·10⁶ < wMicros·2^32` — algebraically `v < w·2^32` in exact rational
     * arithmetic, with no float comparison at the boundary, so an oracle
@@ -619,7 +607,7 @@ object Sampling {
   /** HORVITZ–THOMPSON total estimate + honest error (Horvitz &
     * Thompson 1952) — the design-unbiased estimator every
     * sampled-corpus readout rests on: with rows kept by the
-    * [[bernoulliByHash]] design at inclusion probability π = num/den,
+    * md5-draw Bernoulli design at inclusion probability π = num/den,
     * the per-group total estimate is Σ_kept y/π, and this card scores
     * it against the TRUE total — the sampling-error exchange rate for
     * the q49/q63/q78 sampling family ("how wrong is a 10% readout"),
@@ -627,8 +615,9 @@ object Sampling {
     * corpus scale you run only the estimator half (one conditional
     * sum), the truth column is what makes this an eval card.
     *
-    * Determinism: the md5-draw keep test is [[bernoulliByHash]]'s
-    * all-long rational comparison; totals are exact cents; the HT
+    * Determinism: the keep test reads the first 8 hex chars of md5(key)
+    * as a 32-bit v and keeps v·den < num·2^32, an all-long rational
+    * comparison; totals are exact cents; the HT
     * blow-up is sign-symmetric exact division (den·|s|) div num with
     * the sign multiplied back (the q238 idiom — floor division never
     * sees a negative operand); err_micros = sign(ht−true)·

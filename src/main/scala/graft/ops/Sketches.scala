@@ -1,91 +1,27 @@
 package graft.ops
 
-import java.io.ByteArrayInputStream
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.sketch.CountMinSketch
 
 /** Sketch-based approximate operators — the fixed-memory path for
-  * cardinality and frequency questions a 100 TB pipeline asks constantly
-  * (how many distinct users/documents? which keys are hot?) where an
-  * exact groupBy would shuffle every key.
+  * cardinality, frequency and quantile questions a 100 TB pipeline asks
+  * constantly (how many distinct users/documents? which keys are hot?)
+  * where an exact groupBy would shuffle every key.
   *
-  * Both sketches are MERGEABLE: partitions build local sketches and the
-  * partial-aggregation merge is exact for the sketch (error bounds hold
-  * regardless of partitioning/ordering) — the property that makes them
-  * distributed-native. Built on Spark's codegen'd sketch aggregates
-  * (DataSketches HLL, CountMinSketch), no UDFs in the build path.
+  * Spark's own sketch aggregates (`hll_sketch_agg`, `count_min_sketch`,
+  * `percentile_approx`) are opaque or randomized, so DuckDB cannot replay
+  * them. Most operators here are their deterministic, oracle-checkable
+  * replays; [[bloomAgg]] surfaces Spark's native Bloom filter aggregate.
+  * Every sketch is MERGEABLE (partitions build local state and the
+  * partial-aggregation merge is exact for the sketch, so error bounds
+  * hold regardless of partitioning/ordering), with no UDFs in the build
+  * path.
   */
 object Sketches {
 
-  /** Approximate distinct count via DataSketches HLL.
-    * `lgConfigK` trades memory (2^lgConfigK buckets) for accuracy —
-    * 12 ⇒ ~±1.6% standard error in fixed 4 KB per sketch. */
-  def approxDistinct(df: DataFrame, keyCol: String,
-                     lgConfigK: Int = 12): Long =
-    df.agg(hll_sketch_estimate(hll_sketch_agg(col(keyCol), lgConfigK)))
-      .head().getLong(0)
-
-  /** Heavy hitters via CountMinSketch: keys whose estimated frequency is
-    * at least `minCount`. One pass builds the sketch (map-side mergeable
-    * aggregate); the distinct keys then probe a BROADCAST of the sketch
-    * per-partition (mapPartitions — the sketch is opaque binary, not a
-    * per-row SQL expression).
-    *
-    * CMS guarantees estimate ≥ true count, and with probability
-    * `confidence`: estimate ≤ true + eps·N. So the result is a SUPERSET
-    * of the true heavy hitters (recall 1; bounded false positives) —
-    * re-check candidates exactly when precision matters (the
-    * LSH-then-verify pattern again, in frequency space).
-    *
-    * Null keys are EXCLUDED: the count_min_sketch aggregate skips them,
-    * and `estimateCount(null)` would NPE on the probe side. */
-  def heavyHitters(df: DataFrame, keyCol: String, minCount: Long,
-                   eps: Double = 0.001, confidence: Double = 0.99): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // build and probe over the SAME string representation — the sketch
-    // hashes concrete values, so a type mismatch between the aggregated
-    // column and the probe key would silently estimate garbage
-    val nonNull = df.filter(col(keyCol).isNotNull)
-    val sketchBytes = nonNull
-      .agg(expr(s"count_min_sketch(cast($keyCol as string), " +
-        s"cast($eps as double), cast($confidence as double), 42)"))
-      .head().getAs[Array[Byte]](0)
-    val bc = spark.sparkContext.broadcast(sketchBytes)
-    val keys = nonNull.select(col(keyCol).cast("string")).distinct().as[String]
-    keys.mapPartitions { it =>
-      val cms = CountMinSketch.readFrom(new ByteArrayInputStream(bc.value))
-      it.map(k => (k, cms.estimateCount(k)))
-    }.toDF(keyCol, "est_count")
-      .filter(col("est_count") >= minCount)
-  }
-
-  /** Approximate percentiles with bounded memory — the scale path for
-    * the exact `percentile` aggregate (which buffers EVERY value of a
-    * group in the aggregation state: fine at test scale, an OOM class on
-    * a 100 TB fact table). Spark's `approx_percentile` rides a mergeable
-    * KLL-style quantile summary: state is O(1/accuracyError·log n),
-    * partials combine map-side, and the rank error is bounded by
-    * `accuracyError` = 1/accuracy (SketchesSpec pins the bound against
-    * the exact percentile on a known distribution).
-    *
-    * Not oracle-checked: DuckDB's approx_quantile is a different sketch
-    * — the checked q37 keeps the exact form, this is its documented
-    * at-scale replacement. */
-  def approxPercentile(df: DataFrame, valueCol: String, groupBy: Seq[String],
-                       probabilities: Seq[Double],
-                       accuracy: Int = 10000): DataFrame = {
-    val pcts = array(probabilities.map(lit): _*)
-    val agg = percentile_approx(col(valueCol), pcts, lit(accuracy))
-      .as("approx_pcts")
-    if (groupBy.isEmpty) df.agg(agg)
-    else df.groupBy(groupBy.map(col): _*).agg(agg)
-  }
-
   /** DETERMINISTIC bounded-memory percentile over fixed-width value bins
-    * — the oracle-checkable sibling of [[approxPercentile]] (whose KLL
-    * sketch DuckDB cannot replay). Values bin to `floor(v / binWidth)`,
+    * — the oracle-checkable sibling of Spark's `percentile_approx` (whose
+    * KLL sketch DuckDB cannot replay). Values bin to `floor(v / binWidth)`,
     * bins aggregate to counts (one hash shuffle, map-side combine, state
     * O(range/binWidth) per group — bounded and mergeable like any
     * sketch), a per-group cumulative walk over the SORTED bins finds the
@@ -248,8 +184,8 @@ object Sketches {
   }
 
   /** HYPERLOGLOG REPLAY (Flajolet, Fusy, Gandouet & Meunier 2007) —
-    * the ORACLE-CHECKED face of the HLL family: [[approxDistinct]]
-    * rides Spark's opaque DataSketches aggregate (which DuckDB cannot
+    * the ORACLE-CHECKED face of the HLL family: Spark's `hll_sketch_agg`
+    * is an opaque DataSketches aggregate (which DuckDB cannot
     * replay), so the cross-engine contract is carried here by a
     * deterministic m = 2^p register table built from the q222
     * md5-prefix hash: register = h mod m, rank ρ = leading zeros of
@@ -440,8 +376,8 @@ object Sketches {
   }
 
   /** COUNT–MIN SKETCH REPLAY — the ORACLE-CHECKED face of the CMS
-    * family: [[heavyHitters]] rides Spark's opaque binary sketch
-    * (which DuckDB cannot replay), so the cross-engine contract is
+    * family: Spark's `count_min_sketch` aggregate is an opaque binary
+    * sketch (which DuckDB cannot replay), so the cross-engine contract is
     * carried here by a deterministic d×w counter table built from the
     * q222 md5-prefix seed hash and probed for the exact top-`topK`
     * keys. What the oracle then pins is the sketch's DEFINING
@@ -460,7 +396,7 @@ object Sketches {
     * property — this is what replaces the full-key shuffle at 100 TB);
     * the probe is topK·d rows against the cell table. The exact top-K
     * here is the test-scale truth anchor; at scale the probe set comes
-    * from [[heavyHitters]] candidates instead. */
+    * from a sketch's candidates instead. */
   def cmsReplay(df: DataFrame, keyCol: Column, depth: Int = 4,
                 width: Int = 256, topK: Int = 10): DataFrame = {
     require(depth >= 1 && width >= 1 && topK >= 1,

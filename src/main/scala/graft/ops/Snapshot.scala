@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * shuffles once (SMJ), the per-row comparison is codegen'd column
   * equality, and nothing aggregates: cost is two scans + two exchanges
   * regardless of how many columns are compared. Snapshots bucketed by
-  * the key on disk ([[Bucketing]]) diff with no exchange at all. The
+  * the key on disk (Spark bucketed tables) diff with no exchange at all. The
   * output is itself narrow (keys + status + changed column names), so
   * downstream consumers (incremental refresh, alerting) never touch the
   * wide payloads again.

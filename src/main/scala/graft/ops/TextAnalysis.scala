@@ -156,13 +156,6 @@ object TextAnalysis {
   def contentFingerprint(text: Column): Column =
     md5(array_join(array_sort(array_distinct(tokens(text))), " "))
 
-  /** Rolling polynomial hash over the token sequence (order-sensitive
-    * fingerprint): acc = acc*31 + xxhash64(token), wrapping long
-    * arithmetic. Engine-native (xxhash64) — verified by ScalaTest, not
-    * the SQL oracle. */
-  def rollingFingerprint(text: Column): Column =
-    aggregate(tokens(text), lit(0L), (acc, t) => acc * 31L + xxhash64(t))
-
   /** Positions a packed (hash, pos) winnowing key can address: documents
     * must have fewer than 2^20 token positions (a 1M-token doc is ~4 MB
     * of text — chunk longer docs first, q51's operator). The packing
@@ -911,7 +904,7 @@ object TextAnalysis {
     *
     * Both hashes are md5 substrings (bucket = first 8 hex digits, sign =
     * the 9th), so any engine replays them exactly — same portability
-    * argument as [[Sampling.bernoulliByHash]].
+    * argument as [[Sampling.weightedByHash]]'s md5 draw.
     *
     * Scale shape: explode is narrow; ONE map-side-combinable aggregation
     * on (doc, bucket) — the same cost class as token counting. */

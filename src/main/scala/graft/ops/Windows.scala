@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 /** Window / dedup operators (SURVEY.md §2.4, reference fa-etl.py:99-105).
   *
   * The reference's only window shape is "rank within group, keep top-1"
-  * (latest sale per property-year). We generalize: deterministic top-k per
-  * group, plus the seeded-random tie-break compatibility variant.
+  * (latest sale per property-year). We generalize to deterministic top-k
+  * per group; the reference's seeded-random tie-break is not portable
+  * across engines (SURVEY.md §5), so ties break on a total order instead.
   *
   * Scale note: `row_number` over a partition key shuffles once on that key;
   * the subsequent `filter(rn <= k)` is evaluated inside the same stage. At
@@ -66,18 +67,6 @@ object Windows {
       .select(col("__w.*"))
     winner
   }
-
-  /** W1 exact-compat variant (fa-etl.py:99): Polars
-    * `rank(method="random", seed=1, descending=True)` — a strict random
-    * permutation among ties. Seeds are not portable across engines
-    * (SURVEY.md §5), so this is a documented compatibility op; verified
-    * queries use the deterministic form above. */
-  def rankRandomTieBreak(df: DataFrame, outCol: String,
-                         partitionBy: Seq[Column], orderDescBy: Column,
-                         seed: Long): DataFrame =
-    df.withColumn(outCol,
-      row_number().over(
-        Window.partitionBy(partitionBy: _*).orderBy(orderDescBy.desc, rand(seed))))
 
   /** Running aggregate over an ordered frame (generalization surface; the
     * reference has no frames — SURVEY.md §2.4 note). */

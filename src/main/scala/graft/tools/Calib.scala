@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Shared host calibration for the CI time budgets (Stress, FaScale):
+/** Host calibration for the CI time budgets of [[Stress]]:
   * times a fixed data-independent shape (hash CPU + one shuffle) in the
   * current warm JVM and scales every budget by how much slower this host
   * is than the reference host the absolute numbers were measured on.

@@ -89,9 +89,8 @@ object Stress {
     val big = replicate(docs).repartition(32).cache()
     println(s"DOCS=${big.count()} (distinct=${big.select("doc_id").distinct().count()})")
 
-    // Per-run budget normalization — shared with the FaScale gate
-    // ([[Calib]]): budgets scale by how much slower this host is than the
-    // reference host.
+    // Per-run budget normalization ([[Calib]]): budgets scale by how much
+    // slower this host is than the reference host.
     val budgetScale = Calib.budgetScale(spark)
     println(f"BUDGET_SCALE=$budgetScale%.2f")
 

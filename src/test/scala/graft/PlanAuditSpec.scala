@@ -587,12 +587,40 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("Join") && !p.contains("Window"), p.take(3000))
   }
 
-  test("fa unified join plans one co-partitioned exchange chain") {
-    val fixtures = graft.fa.Stages
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
-    // representative: q09's composite-key join must be an equi join
-    val p = plan("q09_join_composite")
-    assert(p.contains("SortMergeJoin") || p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
+  /** An all-string frame shaped like `fa.Pipeline`'s CSV read of one
+    * family: `header` and `rows` are pipe-separated, empty cells NULL. */
+  private def rawFamily(header: String, rows: String*): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val schema = StructType(header.split('|').toSeq.map(StructField(_, StringType)))
+    spark.createDataFrame(java.util.Arrays.asList(rows.map(r => Row.fromSeq(
+      r.split("\\|", -1).toSeq.map(v => if (v.isEmpty) null else v))): _*),
+      schema)
+  }
+
+  test("fa unified join plans equi joins only: no cartesian, no nested loop") {
+    import graft.fa.Stages
+    val valHist = Stages.rankValHist(Stages.cleanValHist(rawFamily(
+      "PropertyID|AssdTotalValue|AssdYear|MarketTotalValue|MarketValueYear|ApprTotalValue|ApprYear|TaxableYear",
+      "1|500000|2020|600000|2020|550000|2020|2020", "2|300000|2020|||||2020")))
+    val prop = Stages.cleanProp(rawFamily(
+      "PropertyID|PropertyClassID|FATimeStamp|SitusLatitude|SitusLongitude|SitusFullStreetAddress|SitusCity|SitusState|SitusZIP5|FIPS|SitusCensusTract|SitusCensusBlock|SitusGeoStatusCode",
+      "1|R|20230101|40.7|-73.9|1 Main St|New York|NY|1001|36061|12345|100|A"))
+    val deed = Stages.rankSales(Stages.cleanSales(rawFamily(
+      "PropertyID|SaleAmt|RecordingDate|FIPS|FATimeStamp|FATransactionID|TransactionType|SaleDate",
+      "1|120000|20200320|36061|20230101|6Y|3|20200315")))
+    val taxHist = Stages.cleanTaxHist(rawFamily(
+      "PropertyID|TaxYear|TaxAmt", "1|2020|123456"))
+    // national-scale sides exceed any broadcast threshold
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val p = Stages.unifiedJoin(valHist, prop, deed, taxHist)
+        .queryExecution.executedPlan.toString
+      // a lost join key shows up as a nested-loop or cartesian join long
+      // before it shows up as wall time
+      assert(!p.contains("CartesianProduct") &&
+        !p.contains("BroadcastNestedLoopJoin"), p)
+      assert(p.contains("SortMergeJoin"), p)
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 }

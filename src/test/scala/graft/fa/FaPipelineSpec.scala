@@ -210,6 +210,52 @@ class FaPipelineSpec extends AnyFunSuite {
     assert(Files.exists(staging.resolve("TaxHist/_SUCCESS")))
   }
 
+  test("partitionByFips: one FIPS directory per county, and a FIPS-filtered " +
+    "read of staged Prop scans only that county's parquet files") {
+    val dir = buildFixture()
+    val raw = Paths.get(dir, "raw")
+    // a second county (raw FIPS without its leading zero) beside 36061
+    writeZip(raw, "Deed06037",
+      "PropertyID|SaleAmt|RecordingDate|FIPS|FATimeStamp|FATransactionID|TransactionType|SaleDate",
+      Seq("7|210000|20200601|6037|20230101|1E|2|20200601"))
+    writeZip(raw, "Prop06037",
+      "PropertyID|PropertyClassID|FATimeStamp|SitusLatitude|SitusLongitude|SitusFullStreetAddress|SitusCity|SitusState|SitusZIP5|FIPS|SitusCensusTract|SitusCensusBlock|SitusGeoStatusCode",
+      Seq("7|R|20230101|34.0|-118.2|7 Palm Dr|Los Angeles|CA|90001|6037|22222|700|A"))
+    writeZip(raw, "TaxHist06037", "PropertyID|TaxYear|TaxAmt",
+      Seq("7|2020|300000"))
+    writeZip(raw, "ValHist06037",
+      "PropertyID|AssdTotalValue|AssdYear|MarketTotalValue|MarketValueYear|ApprTotalValue|ApprYear|TaxableYear",
+      Seq("7|800000|2020|||||2020"))
+    assert(new Pipeline(spark, dir, partitionByFips = true).run().count() == 4)
+
+    val prop = Paths.get(dir, "staging", "Prop")
+    def list(d: Path): Seq[Path] = {
+      val s = Files.list(d)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    def parquetFiles(d: Path): Long =
+      list(d).count(_.getFileName.toString.endsWith(".parquet")).toLong
+    val partitions = list(prop).filter(Files.isDirectory(_))
+    assert(partitions.map(_.getFileName.toString).toSet ==
+      Set("FIPS=36061", "FIPS=06037"))
+
+    // pruning checked physically: the scan's numFiles metric against the
+    // files in the county's partition directory, not the plan text
+    val pruned = spark.read.parquet(prop.toString)
+      .filter(org.apache.spark.sql.functions.col("FIPS") === "06037")
+    val plan = pruned.queryExecution.executedPlan
+    // one execution populates this plan instance's scan metrics
+    assert(plan.executeCollect().length == 1)
+    val scanned = plan.collectLeaves().collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.metrics("numFiles").value
+    }
+    val countyFiles = parquetFiles(prop.resolve("FIPS=06037"))
+    assert(countyFiles > 0 && scanned.contains(countyFiles),
+      s"scanned $scanned files; county 06037 has $countyFiles")
+    assert(countyFiles < partitions.map(parquetFiles).sum)
+  }
+
   test("unzip refuses two entries that flatten to the same file") {
     val base = Files.createTempDirectory("fa_unzip_clash")
     val zipPath = base.resolve("Deed36061.txt.zip")

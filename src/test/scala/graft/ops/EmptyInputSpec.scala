@@ -56,8 +56,6 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(Dedup.leakageFlags(corpus, emptyDocs, "doc_id", "text").count() == 0)
     assert(TextAnalysis.chunkTokens(emptyDocs, "doc_id", "text",
       chunkSize = 8, overlap = 2).count() == 0)
-    assert(Layout.interleaveBits(Seq(col("doc_id")), 8) != null &&
-      emptyDocs.select(Layout.interleaveBits(Seq(col("doc_id")), 8)).count() == 0)
   }
 
   test("round-6 family (cosine pairs/admission, scrub, canonical pick, " +

@@ -1903,14 +1903,6 @@ class NewOpsPropertySpec extends AnyFunSuite {
     // singleton's unlisted source still survives (it is alone)
     assert(pick(Survivorship.SourcePriority("src", Seq("erp", "crm"))) ==
       Map(10L -> 12L, 20L -> 20L))
-    // one-call face: resolution + survivorship compose (dist-1 chain
-    // collapses to one entity; survivor = most recent)
-    val one = Dedup.resolveEntitiesSurvivors(
-        Seq((1L, "aaaa", 5L), (2L, "aaab", 7L), (3L, "zzzz", 1L))
-          .toDF("id", "s", "ver"),
-        "id", "s", maxDist = 1, Survivorship.MostRecent("ver"))
-      .select("entity_id", "id").as[(Long, Long)].collect().toMap
-    assert(one == Map(1L -> 2L, 3L -> 3L))
   }
 
   test("averagePrecision: hand AP — front-loaded run outranks a buried " +

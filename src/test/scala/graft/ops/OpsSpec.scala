@@ -187,16 +187,6 @@ class OpsSpec extends AnyFunSuite {
     assert(kept.sameElements(Array(2L, 9L)))
   }
 
-  test("sampleFrames chunks video payloads and strides frames") {
-    val docs = Seq((2L, "x" * 100, "s", "en", 100L)) // doc 2 -> video (2%3=2)
-      .toDF("doc_id", "text", "source", "lang", "n_chars")
-    val media = Multimodal.fromDocuments(docs)
-    val frames = Multimodal.sampleFrames(media, frameBytes = 16, stride = 2)
-      .select("media_id", "frame_idx").as[(Long, Int)].collect()
-    assert(frames.nonEmpty)
-    assert(frames.forall(_._2 % 2 == 0), "only every 2nd frame kept")
-  }
-
   test("spanDedup keeps the global first occurrence of each span, removes " +
     "cross-doc AND intra-doc repeats, and reassembles in span order") {
     val docs = Seq(
@@ -599,14 +589,11 @@ class OpsSpec extends AnyFunSuite {
     assert(got.sameElements(Array("en", "es", "und")))
   }
 
-  test("contentFingerprint is token-order-insensitive; rolling is not") {
+  test("contentFingerprint is token-order-insensitive") {
     val df = Seq("a b c", "c b a", "a b d").toDF("t")
     val fp = df.select(TextAnalysis.contentFingerprint($"t").as("f"))
       .as[String].collect()
     assert(fp(0) == fp(1) && fp(0) != fp(2))
-    val roll = df.select(TextAnalysis.rollingFingerprint($"t").as("f"))
-      .as[Long].collect()
-    assert(roll(0) != roll(1))
   }
 
   test("sessionize splits on gaps > threshold") {
@@ -631,102 +618,6 @@ class OpsSpec extends AnyFunSuite {
       .select("session_seq", "n_events", "event_seq")
       .as[(Long, Long, String)].collect().toSeq
     assert(got == Seq((1L, 2L, "a>b"), (2L, 1L, "c")))
-  }
-
-  /** A real PNG built in-process: 16x12 horizontal gradient (black→white),
-    * encoded through ImageIO — an actual compressed PNG byte stream, not a
-    * stand-in. */
-  private def pngFixture(w: Int = 16, h: Int = 12): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w) {
-      val v = x * 255 / (w - 1)
-      img.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
-
-  test("multimodal: REAL PNG decode — true dimensions + luminance histogram") {
-    val png = pngFixture()
-    val (w, h, hist) = Multimodal.decodeImage(png).get
-    assert(w == 16 && h == 12)
-    // gradient spans all 8 luminance bins; histogram sums to 1
-    assert(hist.length == 8 && hist.forall(_ > 0f))
-    assert(math.abs(hist.sum - 1f) < 1e-5)
-    // byte streams ImageIO does not recognize are not images
-    assert(Multimodal.decodeImage("hello world".getBytes("UTF-8")).isEmpty)
-    assert(Multimodal.decodeImage(null).isEmpty)
-  }
-
-  /** Like [[pngFixture]] but the gradient runs top→bottom — same pixel
-    * value multiset, perceptually different layout. */
-  private def pngVerticalFixture(w: Int = 32, h: Int = 32): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w) {
-      val v = y * 255 / (h - 1)
-      img.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
-
-  test("image aHash: pure function of the raster (re-encode invariant), " +
-    "a one-pixel edit stays within the near-dup radius, a transposed " +
-    "layout does not, sub-8x8 and non-image payloads hash to None") {
-    val grad = pngFixture(32, 32)
-    // decode → re-encode: different PNG bytes, same raster, same hash
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(grad))
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    val reenc = bos.toByteArray
-    assert(Multimodal.aHash64(grad) == Multimodal.aHash64(reenc))
-    // one-pixel edit: a near-dup, not an exact dup — tiny hamming
-    val img2 = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(grad))
-    img2.setRGB(0, 0, 0xFFFFFF)
-    val bos2 = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img2, "png", bos2)
-    val near = bos2.toByteArray
-    val hGrad = Multimodal.aHash64(grad).get
-    val hNear = Multimodal.aHash64(near).get
-    assert(java.lang.Long.bitCount(hGrad ^ hNear) <= 3)
-    // transposed gradient: far outside the radius
-    val vert = pngVerticalFixture(32, 32)
-    val hVert = Multimodal.aHash64(vert).get
-    assert(java.lang.Long.bitCount(hGrad ^ hVert) > 3)
-    // degenerate payloads
-    assert(Multimodal.aHash64(null).isEmpty)
-    assert(Multimodal.aHash64("not an image".getBytes).isEmpty)
-    assert(Multimodal.aHash64(pngFixture(4, 4)).isEmpty) // sub-8x8
-  }
-
-  test("imageNearDups: banded hamming join finds exactly the brute-force " +
-    "pairs over the perceptual hashes; undecodable payloads drop out") {
-    val grad = pngFixture(32, 32)
-    val img2 = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(grad))
-    img2.setRGB(0, 0, 0xFFFFFF)
-    val bos2 = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img2, "png", bos2)
-    val media = Seq(
-      (1L, grad), (2L, bos2.toByteArray), (3L, pngVerticalFixture(32, 32)),
-      (4L, "text payload, not an image".getBytes)
-    ).toDF("media_id", "payload")
-    val hashes = Multimodal.imageHashes(media)
-      .as[(Long, Long)].collect().toMap
-    assert(hashes.keySet == Set(1L, 2L, 3L)) // 4 dropped
-    val brute = (for {
-      a <- hashes.keys; b <- hashes.keys if a < b
-      d = java.lang.Long.bitCount(hashes(a) ^ hashes(b)) if d <= 3
-    } yield (a, b, d.toLong)).toSet
-    val got = Multimodal.imageNearDups(media, maxHamming = 3)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(got == brute && got.map(p => (p._1, p._2)) == Set((1L, 2L)))
   }
 
   test("tfIdfTopTerms scores match hand-computed tf*ln(N/df)") {
@@ -772,17 +663,6 @@ class OpsSpec extends AnyFunSuite {
     val base = Sampling.stratifiedByHash(df.drop("__skey"), Seq("g"), "id", 4)
       .collect().map(_.getLong(0)).sorted
     assert(rows.map(_.getLong(0)).sorted.sameElements(base))
-  }
-
-  test("bernoulliByHash: deterministic, rate-proportional, no shuffle") {
-    val df = TestSpark.spark.range(2000).withColumnRenamed("id", "k")
-    val kept = Sampling.bernoulliByHash(df, "k", 1, 4)
-    val n = kept.count()
-    assert(n > 350 && n < 650, s"expected ~500 of 2000, got $n") // rate 0.25
-    assert(kept.collect().map(_.getLong(0)).sorted
-      .sameElements(Sampling.bernoulliByHash(df.repartition(7), "k", 1, 4)
-        .collect().map(_.getLong(0)).sorted))
-    assert(!kept.queryExecution.executedPlan.toString.contains("Exchange"))
   }
 
   test("asOfJoinForward attaches the FIRST right row at-or-after; nulls when none") {

@@ -6,8 +6,8 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-/** Scale-machinery behavior: salting equivalence, bucketed shuffle-free
-  * joins, embedding near-dups, random-tie-break compat op, permissive CSV. */
+/** Scale-machinery behavior: salting equivalence, LSH and banding
+  * completeness against exact sweeps, embedding near-dups, components. */
 class ScaleOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -31,24 +31,6 @@ class ScaleOpsSpec extends AnyFunSuite {
         merge = Seq(sum($"s").as("s"), sum($"c").as("c")))
       .orderBy("k").collect().map(_.toString)
     assert(salted.sameElements(plain))
-  }
-
-  test("bucketed join of co-bucketed tables plans no shuffle exchange") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val a = (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "av")
-      val b = (1 to 1000).map(i => (i.toLong, s"b$i")).toDF("k", "bv")
-      Bucketing.writeBucketed(a, "bkt_a", "k", 4)
-      Bucketing.writeBucketed(b, "bkt_b", "k", 4)
-      val joined = Bucketing.read(spark, "bkt_a")
-        .join(Bucketing.read(spark, "bkt_b"), Seq("k"))
-      assert(joined.count() == 1000)
-      assert(Bucketing.isShuffleFree(joined),
-        s"expected no Exchange:\n${joined.queryExecution.executedPlan}")
-      // contrast: the same join over plain (unbucketed) data shuffles
-      val plain = a.join(b, Seq("k"))
-      assert(!Bucketing.isShuffleFree(plain))
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("minHashNearDups == raw jaccardPairs sweep on the testdata corpus") {
@@ -322,14 +304,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(r47.sum / r47.size >= 0.9, s"q47 mean recall@5 = ${r47.sum / r47.size}")
   }
 
-  test("rankRandomTieBreak is a strict permutation among equal keys (W1 compat)") {
-    val df = Seq((1L, "2020-01-01"), (1L, "2020-01-01"), (1L, "2020-01-01"))
-      .toDF("id", "d")
-    val ranks = Windows.rankRandomTieBreak(df, "rk", Seq($"id"), $"d", seed = 1)
-      .select("rk").as[Int].collect().sorted
-    assert(ranks.sameElements(Array(1, 2, 3))) // no ties, full permutation
-  }
-
   test("FIPS-style zero-padded partition values survive hive round-trip") {
     val dir = Files.createTempDirectory("fips_part").toString
     val df = Seq(("01001", 1L), ("36061", 2L)).toDF("FIPS", "v")
@@ -371,47 +345,5 @@ class ScaleOpsSpec extends AnyFunSuite {
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(banded == brute,
       s"missing=${(brute -- banded).take(5)} extra=${(banded -- brute).take(5)}")
-  }
-
-  test("orc round-trip preserves data; textLines reads raw lines") {
-    val dir = Files.createTempDirectory("orc_rt").toString + "/t"
-    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
-    val back = Sources.sinkOrc(df, dir)
-    assert(back.orderBy("id").collect().map(_.toString)
-      .sameElements(df.orderBy("id").collect().map(_.toString)))
-    val tdir = Files.createTempDirectory("txt")
-    Files.writeString(tdir.resolve("x.txt"), "line one\nline two\n")
-    assert(Sources.textLines(TestSpark.spark, tdir.resolve("x.txt").toString)
-      .count() == 2)
-  }
-
-  test("jsonLines: explicit schema, malformed rows nulled") {
-    val dir = Files.createTempDirectory("jsonl")
-    Files.writeString(dir.resolve("t.json"),
-      """{"id": 1, "v": 10.5}
-        |{"id": 2, "v": "oops"}
-        |{"id": 3}
-        |""".stripMargin)
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("v", DoubleType)))
-    val got = Sources.jsonLines(spark, schema, dir.resolve("t.json").toString)
-      .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
-    assert(got.size == 3)
-    assert(got.contains((Some(1L), Some(10.5))))   // clean row
-    assert(got.contains((Some(3L), None)))         // missing field -> null
-    // the type-mismatched row survives as a row (PERMISSIVE, not dropped)
-  }
-
-  test("csvPipe: explicit schema, PERMISSIVE nulls bad cells, pipe sep") {
-    val dir = Files.createTempDirectory("csv_pipe")
-    Files.writeString(dir.resolve("t.csv"),
-      "id|amt|d\n1|100|20200101\n2|xx|20200202\n3|300|bad\n")
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("amt", LongType), StructField("d", StringType)))
-    val got = Sources.csvPipe(spark, schema, dir.resolve("t.csv").toString)
-      .orderBy("id")
-      .collect().map(r => (r.getLong(0), Option(r.get(1)), r.getString(2)))
-    assert(got.sameElements(Array((1L, Some(100L), "20200101"),
-      (2L, None, "20200202"), (3L, Some(300L), "bad"))))
   }
 }

@@ -4,64 +4,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-/** Sketch error-bound contracts on real testdata: HLL within its
-  * configured standard error, CMS never under-counting and a superset of
-  * the true heavy hitters. */
+/** Bounded-memory percentile and winsorizing contracts on fixtures and
+  * real testdata. */
 class SketchesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private lazy val events = graft.ops.Events.load(spark, "/root/testdata/sf0.01")
-
-  test("approxDistinct within ~3 standard errors of exact distinct") {
-    val exact = events.select("user_id").distinct().count()
-    val est = Sketches.approxDistinct(events, "user_id", lgConfigK = 12)
-    // lgConfigK=12 => ~1.6% RSE; allow 3 sigma
-    assert(math.abs(est - exact).toDouble / exact < 0.05,
-      s"est=$est exact=$exact")
-  }
-
-  test("heavyHitters: never under-counts, superset of true heavy set") {
-    val exact = events.groupBy(col("event_type").cast("string").as("k"))
-      .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val n = exact.values.sum
-    val minCount = n / 20 // keys above 5% of the stream
-    val got = Sketches.heavyHitters(events, "event_type", minCount,
-        eps = 0.001, confidence = 0.99)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val trueHeavy = exact.filter(_._2 >= minCount).keySet
-    // CMS guarantees estimate >= true count...
-    got.foreach { case (k, est) =>
-      assert(est >= exact(k), s"under-count for $k: est=$est true=${exact(k)}")
-      // ...and with high probability est <= true + eps * N
-      assert(est <= exact(k) + (0.001 * n).toLong + 1,
-        s"over-bound for $k: est=$est true=${exact(k)}")
-    }
-    // recall 1: every true heavy hitter surfaces
-    assert(trueHeavy.subsetOf(got.keySet), s"missing=${trueHeavy -- got.keySet}")
-  }
-
-  test("approxPercentile: rank error within the accuracy bound, grouped + global") {
-    import org.apache.spark.sql.functions._
-    val n = 20000
-    val df = spark.range(n).select(
-      (col("id") % 2).cast("string").as("g"), col("id").cast("double").as("v"))
-    val probs = Seq(0.1, 0.5, 0.9)
-    val accuracy = 1000 // rank error <= n/accuracy = 20 ranks
-    val got = Sketches.approxPercentile(df, "v", Seq("g"), probs, accuracy)
-      .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
-    for (g <- Seq("0", "1"); (p, i) <- probs.zipWithIndex) {
-      // group g holds every other id: value at rank r is ~2r (+ parity)
-      val groupN = n / 2
-      val exact = 2.0 * p * (groupN - 1)
-      val tol = 2.0 * (groupN.toDouble / accuracy + 1)
-      assert(math.abs(got(g)(i) - exact) <= 2 * tol,
-        s"g=$g p=$p got=${got(g)(i)} exact~$exact tol=$tol")
-    }
-    val global = Sketches.approxPercentile(df, "v", Nil, Seq(0.5), accuracy)
-      .collect()(0).getSeq[Double](0)(0)
-    assert(math.abs(global - (n - 1) / 2.0) <= 2 * (n.toDouble / accuracy + 1))
-  }
 
   test("binnedPercentile: exact on a fixture; within binWidth/2 of the " +
     "exact nearest-rank value on lineitem (the q67 contract)") {

@@ -1,6 +1,6 @@
 #!/bin/bash
 # CI gate: unit/spec suite + correctness vs DuckDB oracle + stress budgets
-# + FA pipeline scale gate + both gated perfbench workloads.
+# + both gated perfbench workloads (fa_etl is the FA end-to-end gate).
 # Any failure exits nonzero. From /root/repo:
 #   bash tools/ci.sh
 set -euo pipefail
@@ -26,11 +26,6 @@ python3 tools/check.py /root/testdata/sf0.001 "$out2/verify"
 # back-to-back JVMs (r9 PLANS.md tail) — the corpus is 40× sf0.1 and
 # the machine has 128 GiB, so headroom is the cheap fix.
 SPARK_DRIVER_MEM=14g sbt -batch "runMain graft.tools.Stress /root/testdata/sf0.1 40"
-
-# FA pipeline gate (8 synthetic counties end-to-end): pinned panel rows,
-# calibrated wall budget, PHYSICAL partition-pruning check (scan numFiles
-# == one county's files), no nested-loop/cartesian in the merged plan
-sbt -batch "runMain graft.tools.FaScale 8 20000 --gate"
 
 # gated benchmark end to end: fa_etl also runs Pipeline.run over a corpus
 # with damaged Prop keys and checks its panel against DuckDB; the last
