@@ -704,19 +704,13 @@ object OracleGen {
        WHERE rn <= $k"""
   }
 
-  /** Oracle for `Similarity.retrievalEval` over the LSH run vs the
-    * brute-force truth (q165): MRR/NDCG@k with the DCG weights and
-    * their prefix sums taken from the ONE Scala definition
-    * (`Similarity.ndcgWeightMicros` — no engine computes a log at
-    * query time; the poissonThresholds constant-embedding precedent). */
-  def retrievalEvalSql(nBits: Int, dim: Int, k: Int,
-                       stride: Long): String = {
-    val w = graft.ops.Similarity.ndcgWeightMicros.take(k)
-    val prefix = w.scanLeft(0L)(_ + _).tail
-    val wts = w.zip(prefix).zipWithIndex
-      .map { case ((wm, pm), i) => s"(${i + 1}, $wm, $pm)" }
-      .mkString(", ")
-    s"""WITH run0 AS (SELECT query_id, cand_id, cos
+  /** The retrieval-eval CTE head shared by [[retrievalEvalSql]] and
+    * [[averagePrecisionSql]]: the LSH run `run`(query_id, cand_id,
+    * rnk), its brute-force truth `tru`(query_id, cand_id) over every
+    * `stride`-th query, and `marked`(query_id, rnk, rel). */
+  private def runTruthCtes(nBits: Int, dim: Int, k: Int,
+                           stride: Long): String =
+    s"""run0 AS (SELECT query_id, cand_id, cos
          FROM (${annLshSql(nBits, dim, k, queryStride = stride)})),
        run AS (SELECT query_id, cand_id,
            row_number() OVER (PARTITION BY query_id
@@ -733,11 +727,25 @@ object OracleGen {
            (SELECT *, row_number() OVER (PARTITION BY query_id
               ORDER BY cos DESC, cand_id ASC) AS rn FROM bp)
          WHERE rn <= $k),
-       wts(rnk, wm, pm) AS (VALUES $wts),
        marked AS (SELECT r.query_id, r.rnk,
            CASE WHEN t.cand_id IS NOT NULL THEN 1 ELSE 0 END AS rel
          FROM run r LEFT JOIN tru t ON t.query_id = r.query_id
-           AND t.cand_id = r.cand_id),
+           AND t.cand_id = r.cand_id)"""
+
+  /** Oracle for `Similarity.retrievalEval` over the LSH run vs the
+    * brute-force truth (q165): MRR/NDCG@k with the DCG weights and
+    * their prefix sums taken from the ONE Scala definition
+    * (`Similarity.ndcgWeightMicros` — no engine computes a log at
+    * query time; the poissonThresholds constant-embedding precedent). */
+  def retrievalEvalSql(nBits: Int, dim: Int, k: Int,
+                       stride: Long): String = {
+    val w = graft.ops.Similarity.ndcgWeightMicros.take(k)
+    val prefix = w.scanLeft(0L)(_ + _).tail
+    val wts = w.zip(prefix).zipWithIndex
+      .map { case ((wm, pm), i) => s"(${i + 1}, $wm, $pm)" }
+      .mkString(", ")
+    s"""WITH ${runTruthCtes(nBits, dim, k, stride)},
+       wts(rnk, wm, pm) AS (VALUES $wts),
        per AS (SELECT m.query_id,
            CAST(sum(rel) AS BIGINT) AS hits_at_k,
            min(CASE WHEN rel = 1 THEN m.rnk END) AS first_rel,
@@ -763,27 +771,7 @@ object OracleGen {
     * per-hit (1e6·tp)//rank summed and divided by min(k, n_rel). */
   def averagePrecisionSql(nBits: Int, dim: Int, k: Int,
                           stride: Long): String =
-    s"""WITH run0 AS (SELECT query_id, cand_id, cos
-         FROM (${annLshSql(nBits, dim, k, queryStride = stride)})),
-       run AS (SELECT query_id, cand_id,
-           row_number() OVER (PARTITION BY query_id
-             ORDER BY cos DESC, cand_id ASC) AS rnk
-         FROM run0),
-       e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-         FROM embeddings),
-       q AS (SELECT id AS query_id, v AS qv FROM e
-         WHERE id % $stride = 0),
-       bp AS (SELECT query_id, e.id AS cand_id,
-           ${cosSql("q.qv", "e.v")} AS cos
-         FROM e, q WHERE e.id <> query_id),
-       tru AS (SELECT query_id, cand_id FROM
-           (SELECT *, row_number() OVER (PARTITION BY query_id
-              ORDER BY cos DESC, cand_id ASC) AS rn FROM bp)
-         WHERE rn <= $k),
-       marked AS (SELECT r.query_id, r.rnk,
-           CASE WHEN t.cand_id IS NOT NULL THEN 1 ELSE 0 END AS rel
-         FROM run r LEFT JOIN tru t ON t.query_id = r.query_id
-           AND t.cand_id = r.cand_id),
+    s"""WITH ${runTruthCtes(nBits, dim, k, stride)},
        cum AS (SELECT query_id, rnk, rel,
            CAST(sum(rel) OVER (PARTITION BY query_id ORDER BY rnk ASC
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -939,18 +927,18 @@ object OracleGen {
        SELECT asg.id AS vec_id, asg.cent_id, (dom.id IS NULL) AS kept
        FROM asg LEFT JOIN dom ON asg.id = dom.id"""
 
-  /** Oracle for `Similarity.ivfTopK` (q35): deterministic centroids (first
-    * nCentroids ids), nProbe-cell assignment by round-6 cosine with cent_id
-    * tie-break, cell-join search, top-k per query. */
-  def ivfSql(k: Int, nCentroids: Int, nProbe: Int, queryStride: Long): String =
-    s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-         FROM embeddings),
-       cent AS (SELECT id AS cent_id, v AS cv FROM e ORDER BY id LIMIT $nCentroids),
-       asg AS (SELECT id, v, cent_id FROM
+  /** The IVF probe-and-rank tail shared by [[ivfSql]] and
+    * [[ivfTrainedSql]], over `e` and the centroid CTE `cent`(cent_id,
+    * cv): each vector joins its `nProbe` nearest centroids, every
+    * `queryStride`-th vector is scored against the vectors sharing one,
+    * top-`k` by (cos DESC, cand_id ASC). */
+  private def ivfProbeSql(cent: String, k: Int, nProbe: Int,
+                          queryStride: Long): String =
+    s"""asg AS (SELECT id, v, cent_id FROM
          (SELECT e.id, e.v, c.cent_id,
             row_number() OVER (PARTITION BY e.id
               ORDER BY ${cosSql("e.v", "c.cv", 6)} DESC, c.cent_id ASC) AS rn
-          FROM e, cent c) WHERE rn <= $nProbe),
+          FROM e, $cent c) WHERE rn <= $nProbe),
        q AS (SELECT cent_id, id AS query_id, v AS qv FROM asg
          WHERE id % $queryStride = 0),
        p AS (SELECT DISTINCT query_id, a.id AS cand_id,
@@ -960,6 +948,15 @@ object OracleGen {
          (SELECT *, row_number() OVER (PARTITION BY query_id
             ORDER BY cos DESC, cand_id ASC) AS rn FROM p)
        WHERE rn <= $k"""
+
+  /** Oracle for `Similarity.ivfTopK` (q35): deterministic centroids (first
+    * nCentroids ids), nProbe-cell assignment by round-6 cosine with cent_id
+    * tie-break, cell-join search, top-k per query. */
+  def ivfSql(k: Int, nCentroids: Int, nProbe: Int, queryStride: Long): String =
+    s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
+         FROM embeddings),
+       cent AS (SELECT id AS cent_id, v AS cv FROM e ORDER BY id LIMIT $nCentroids),
+       ${ivfProbeSql("cent", k, nProbe, queryStride)}"""
 
   /** Oracle for `Similarity.ivfOperatingCurve` (q309): one max-probe
     * assignment with probe ranks kept, pmin per pair, the VALUES-list
@@ -1177,20 +1174,7 @@ object OracleGen {
          FROM embeddings),
        c0 AS (SELECT id AS cent_id, v AS cv FROM e ORDER BY id LIMIT $nCentroids),
        ${lloydRoundCtes(trainIters, dim)},
-       asg AS (SELECT id, v, cent_id FROM
-         (SELECT e.id, e.v, c.cent_id,
-            row_number() OVER (PARTITION BY e.id
-              ORDER BY ${cosSql("e.v", "c.cv", 6)} DESC, c.cent_id ASC) AS rn
-          FROM e, $cent c) WHERE rn <= $nProbe),
-       q AS (SELECT cent_id, id AS query_id, v AS qv FROM asg
-         WHERE id % $queryStride = 0),
-       p AS (SELECT DISTINCT query_id, a.id AS cand_id,
-           ${cosSql("q.qv", "a.v")} AS cos
-         FROM q JOIN asg a ON q.cent_id = a.cent_id AND a.id <> q.query_id)
-       SELECT query_id, cand_id, cos FROM
-         (SELECT *, row_number() OVER (PARTITION BY query_id
-            ORDER BY cos DESC, cand_id ASC) AS rn FROM p)
-       WHERE rn <= $k"""
+       ${ivfProbeSql(cent, k, nProbe, queryStride)}"""
   }
 
   /** Unrolled scaled-integer PageRank over the events transition graph —
@@ -1318,7 +1302,7 @@ object OracleGen {
     * Expects nothing in scope; leaves `e`, `enc`, `qd` available. */
   private def pqCoreCtes(m: Int, k: Int, trainIters: Int,
                          queryStride: Long, dim: Int,
-                         trainStride: Long = 1): String = {
+                         trainStride: Long): String = {
     val sub = dim / m
     s"""e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
          FROM embeddings),
@@ -1473,6 +1457,20 @@ object OracleGen {
        FROM dist GROUP BY 1"""
   }
 
+  /** The seeded IVF cells shared by the IVF-PQ oracles, over `e`:
+    * `cent` = the first `nCentroids` vectors by id, `rankedc`(id,
+    * cent_id, rn) = each vector's centroid rank by (cos DESC, cent_id
+    * ASC), and `cells`(cent_id, id) = its nearest centroid. */
+  private def ivfCellCtes(nCentroids: Int): String =
+    s"""cent AS (SELECT id AS cent_id, v AS cv FROM e
+         ORDER BY id LIMIT $nCentroids),
+       rankedc AS (SELECT e.id, c.cent_id,
+           row_number() OVER (PARTITION BY e.id
+             ORDER BY ${cosSql("e.v", "c.cv", 6)} DESC,
+               c.cent_id ASC) AS rn
+         FROM e, cent c),
+       cells AS (SELECT cent_id, id FROM rankedc WHERE rn = 1)"""
+
   /** Oracle for `Similarity.ivfPqTopK` (q129): the [[pqCoreCtes]] codes
     * scored ONLY inside the query's `nProbe` IVF-routed cells (round-6
     * cosine routing, the [[ivfSql]] coarse quantizer). */
@@ -1480,14 +1478,7 @@ object OracleGen {
                nProbe: Int, topK: Int, queryStride: Long,
                dim: Int, trainStride: Long = 1): String =
     s"""WITH ${pqCoreCtes(m, k, trainIters, queryStride, dim, trainStride)},
-       cent AS (SELECT id AS cent_id, v AS cv FROM e
-         ORDER BY id LIMIT $nCentroids),
-       rankedc AS (SELECT e.id, c.cent_id,
-           row_number() OVER (PARTITION BY e.id
-             ORDER BY ${cosSql("e.v", "c.cv", 6)} DESC,
-               c.cent_id ASC) AS rn
-         FROM e, cent c),
-       cells AS (SELECT cent_id, id FROM rankedc WHERE rn = 1),
+       ${ivfCellCtes(nCentroids)},
        probes AS (SELECT cent_id, id AS query_id FROM rankedc
          WHERE rn <= $nProbe AND id % $queryStride = 0),
        cand AS (SELECT DISTINCT p.query_id, cl.id
@@ -1572,14 +1563,7 @@ object OracleGen {
     s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
          FROM embeddings WHERE vec_id % $stride <> 0),
        ${pqTrainCtes(m, k, trainIters, trainStride, dim, "e")},
-       cent AS (SELECT id AS cent_id, v AS cv FROM e
-         ORDER BY id LIMIT $nCentroids),
-       rankedc AS (SELECT e.id, c.cent_id,
-           row_number() OVER (PARTITION BY e.id
-             ORDER BY ${cosSql("e.v", "c.cv", 6)} DESC,
-               c.cent_id ASC) AS rn
-         FROM e, cent c),
-       cells AS (SELECT cent_id, id FROM rankedc WHERE rn = 1),
+       ${ivfCellCtes(nCentroids)},
        bt AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
          FROM embeddings WHERE vec_id % $stride = 0),
        probes AS (SELECT cent_id, id AS batch_id FROM
@@ -1620,14 +1604,7 @@ object OracleGen {
     val sub = dim / m
     s"""WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
          FROM embeddings),
-       cent AS (SELECT id AS cent_id, v AS cv FROM e
-         ORDER BY id LIMIT $nCentroids),
-       rankedc AS (SELECT e.id, c.cent_id,
-           row_number() OVER (PARTITION BY e.id
-             ORDER BY ${cosSql("e.v", "c.cv", 6)} DESC,
-               c.cent_id ASC) AS rn
-         FROM e, cent c),
-       cells AS (SELECT cent_id, id FROM rankedc WHERE rn = 1),
+       ${ivfCellCtes(nCentroids)},
        probes AS (SELECT cent_id, id AS query_id FROM rankedc
          WHERE rn <= $nProbe AND id % $queryStride = 0),
        resid AS (SELECT e.id,
@@ -1782,7 +1759,7 @@ object OracleGen {
     * [[graft.ops.Graph.hits]]' integer max-rescaled half-steps exactly,
     * unrolled as CTEs. */
   def hitsSql(iters: Int, microScale: Long = 1000000L): String = {
-    def half(i: Int, outName: String, prevName: String, prevCol: String,
+    def half(outName: String, prevName: String, prevCol: String,
              joinCol: String, emitCol: String, outEdgeCol: String): String =
       s"""${outName}raw AS (SELECT e.$outEdgeCol AS node,
            CAST(SUM(p.$prevCol * e.w) AS BIGINT) AS raw
@@ -1799,8 +1776,8 @@ object OracleGen {
     val steps = (1 to iters).flatMap { i =>
       val hPrev = if (i == 1) "h0" else s"h${i - 1}"
       Seq(
-        half(i, s"a$i", hPrev, "h", "src", "a", "dst"),
-        half(i, s"h$i", s"a$i", "a", "dst", "h", "src"))
+        half(s"a$i", hPrev, "h", "src", "a", "dst"),
+        half(s"h$i", s"a$i", "a", "dst", "h", "src"))
     }.mkString(",\n       ")
     s"""WITH ev AS (SELECT user_id, event_id,
          TRY_CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
@@ -2245,6 +2222,106 @@ object OracleGen {
        GROUP BY 1, 2"""
   }
 
+  /** `t` and `p`: the transition matrix over `pr`(from_type, to_type,
+    * n) as row-normalized integer micros — shared by every session
+    * Markov oracle. */
+  private val transitionMicrosCtes: String =
+    """t AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS tot FROM pr
+         GROUP BY 1),
+       p AS MATERIALIZED (SELECT pr.from_type, to_type,
+           (n * 1000000) // tot AS p_micros
+         FROM pr JOIN t ON pr.from_type = t.from_type)"""
+
+  /** Oracle for the session-Markov funnels `Events.sessionMarkovFunnel`
+    * (q257) and `sessionMarkovFunnel2` (q283): `pairCtes` ends in
+    * `pr`(from_type, to_type, n), the in-session transition counts with
+    * an absorbing 'purchase'; then the q220 unrolled 8-step absorption
+    * chain. Each step CTE is read twice (carry + increment join) ->
+    * MATERIALIZED (the q192 inlining hazard). */
+  def sessionMarkovFunnelSql(pairCtes: String): String = {
+    val stepCtes = (2 to 8).map { h =>
+      s"""s$h AS MATERIALIZED (SELECT pc.state,
+           pc.pconv + COALESCE(inc.i, 0) AS c,
+           pr.sacc + pr.c AS sacc
+         FROM pc JOIN s${h - 1} pr ON pr.state = pc.state
+         LEFT JOIN (SELECT q.from_type AS st,
+             CAST(sum((q.p_micros * cc.c) // 1000000) AS BIGINT) AS i
+           FROM q JOIN s${h - 1} cc ON cc.state = q.to_type
+           GROUP BY 1) inc ON inc.st = pc.state)"""
+    }.mkString(",\n       ")
+    s"""WITH $pairCtes,
+       $transitionMicrosCtes,
+       pc AS MATERIALIZED (SELECT from_type AS state,
+           COALESCE(max(CASE WHEN to_type = 'purchase'
+             THEN p_micros END), 0) AS pconv
+         FROM p GROUP BY 1),
+       q AS (SELECT from_type, to_type, p_micros FROM p
+         WHERE to_type <> 'purchase'),
+       s1 AS MATERIALIZED (SELECT state, pconv AS c,
+         CAST(0 AS BIGINT) AS sacc FROM pc),
+       $stepCtes
+       SELECT state, CAST(c AS BIGINT) AS conv_micros,
+         CASE WHEN c > 0
+           THEN CAST((1000000 * (8 * c - sacc)) // c AS BIGINT)
+         END AS exp_steps_cond_micros
+       FROM s8"""
+  }
+
+  /** The session-chain CTE head of the Markov removal oracles (q263,
+    * q267): in-session pairs within `gapSeconds` with an absorbing
+    * 'purchase', their micros matrix `p`, and `w`(state, n), each
+    * session's initial-state count. */
+  private def markovRemovalHead(gapSeconds: Long): String =
+    s"""seq AS (SELECT user_id, event_type AS from_type,
+         lead(event_type) OVER w2 AS to_type,
+         CAST(epoch(date_trunc('second', lead(ts) OVER w2)) AS BIGINT)
+           - CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS gap
+         FROM events
+         WINDOW w2 AS (PARTITION BY user_id
+           ORDER BY ts ASC, event_id ASC)),
+       pr AS (SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
+         FROM seq WHERE to_type IS NOT NULL AND gap <= $gapSeconds
+           AND from_type <> 'purchase' GROUP BY 1, 2),
+       $transitionMicrosCtes,
+       ini AS (SELECT event_type AS state,
+           CAST(epoch(date_trunc('second', ts)) AS BIGINT)
+             - CAST(epoch(date_trunc('second',
+                 lag(ts) OVER w3)) AS BIGINT) AS gap
+         FROM events
+         WINDOW w3 AS (PARTITION BY user_id
+           ORDER BY ts ASC, event_id ASC)),
+       w AS (SELECT state, CAST(count(*) AS BIGINT) AS n FROM ini
+         WHERE gap IS NULL OR gap > $gapSeconds GROUP BY 1)"""
+
+  /** One removal variant of the Markov removal oracles: the step chain
+    * over `p` without the from_type rows that `filt` (an `AND …` SQL
+    * suffix, empty for the full chain) excludes, scored as
+    * `p_$tag`(pm), the session-weighted conversion after `steps`. */
+  private def markovRemovalVariant(tag: String, filt: String,
+                                   steps: Int): String = {
+    val stepCtes = (2 to steps).map { h =>
+      s"""s${h}_$tag AS MATERIALIZED (SELECT pc.state,
+           pc.pconv + COALESCE(inc.i, 0) AS c
+         FROM pc_$tag pc
+         LEFT JOIN (SELECT q.from_type AS st,
+             CAST(sum((q.p_micros * cc.c) // 1000000) AS BIGINT) AS i
+           FROM q_$tag q JOIN s${h - 1}_$tag cc
+             ON cc.state = q.to_type
+           GROUP BY 1) inc ON inc.st = pc.state)"""
+    }.mkString(",\n       ")
+    s"""pc_$tag AS MATERIALIZED (SELECT from_type AS state,
+         COALESCE(max(CASE WHEN to_type = 'purchase'
+           THEN p_micros END), 0) AS pconv
+       FROM p WHERE TRUE$filt GROUP BY 1),
+     q_$tag AS (SELECT from_type, to_type, p_micros FROM p
+       WHERE to_type <> 'purchase'$filt),
+     s1_$tag AS MATERIALIZED (SELECT state, pconv AS c FROM pc_$tag),
+     $stepCtes,
+     p_$tag AS (SELECT CAST(sum(n * COALESCE(cc.c, 0)) // sum(n)
+         AS BIGINT) AS pm
+       FROM w LEFT JOIN s${steps}_$tag cc ON cc.state = w.state)"""
+  }
+
   /** Oracle for `Events.markovRemovalEffects` (q263): the q257
     * session-chain CTE head (transitions + session-initial weights),
     * then ONE unrolled step-chain family per variant (full + one per
@@ -2253,30 +2330,9 @@ object OracleGen {
     * conversion sum. Step CTEs are MATERIALIZED (read twice — q192). */
   def markovRemovalSql(removeStates: Seq[String], steps: Int,
                        gapSeconds: Long): String = {
-    def variant(tag: String, excl: Option[String]): String = {
-      val filt = excl.map(s => s" AND from_type <> '$s'").getOrElse("")
-      val stepCtes = (2 to steps).map { h =>
-        s"""s${h}_$tag AS MATERIALIZED (SELECT pc.state,
-             pc.pconv + COALESCE(inc.i, 0) AS c
-           FROM pc_$tag pc
-           LEFT JOIN (SELECT q.from_type AS st,
-               CAST(sum((q.p_micros * cc.c) // 1000000) AS BIGINT) AS i
-             FROM q_$tag q JOIN s${h - 1}_$tag cc
-               ON cc.state = q.to_type
-             GROUP BY 1) inc ON inc.st = pc.state)"""
-      }.mkString(",\n       ")
-      s"""pc_$tag AS MATERIALIZED (SELECT from_type AS state,
-           COALESCE(max(CASE WHEN to_type = 'purchase'
-             THEN p_micros END), 0) AS pconv
-         FROM p WHERE TRUE$filt GROUP BY 1),
-       q_$tag AS (SELECT from_type, to_type, p_micros FROM p
-         WHERE to_type <> 'purchase'$filt),
-       s1_$tag AS MATERIALIZED (SELECT state, pconv AS c FROM pc_$tag),
-       $stepCtes,
-       p_$tag AS (SELECT CAST(sum(n * COALESCE(cc.c, 0)) // sum(n)
-           AS BIGINT) AS pm
-         FROM w LEFT JOIN s${steps}_$tag cc ON cc.state = w.state)"""
-    }
+    def variant(tag: String, excl: Option[String]): String =
+      markovRemovalVariant(tag,
+        excl.map(s => s" AND from_type <> '$s'").getOrElse(""), steps)
     val variants = variant("full", None) +: removeStates.zipWithIndex
       .map { case (s, i) => variant(s"r$i", Some(s)) }
     val outs = removeStates.zipWithIndex.map { case (s, i) =>
@@ -2287,30 +2343,7 @@ object OracleGen {
            END AS removal_effect_micros
          FROM p_full f, p_r$i r"""
     }.mkString("\n       UNION ALL ")
-    s"""WITH seq AS (SELECT user_id, event_type AS from_type,
-         lead(event_type) OVER w2 AS to_type,
-         CAST(epoch(date_trunc('second', lead(ts) OVER w2)) AS BIGINT)
-           - CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS gap
-         FROM events
-         WINDOW w2 AS (PARTITION BY user_id
-           ORDER BY ts ASC, event_id ASC)),
-       pr AS (SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-         FROM seq WHERE to_type IS NOT NULL AND gap <= $gapSeconds
-           AND from_type <> 'purchase' GROUP BY 1, 2),
-       t AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS tot FROM pr
-         GROUP BY 1),
-       p AS MATERIALIZED (SELECT pr.from_type, to_type,
-           (n * 1000000) // tot AS p_micros
-         FROM pr JOIN t ON pr.from_type = t.from_type),
-       ini AS (SELECT event_type AS state,
-           CAST(epoch(date_trunc('second', ts)) AS BIGINT)
-             - CAST(epoch(date_trunc('second',
-                 lag(ts) OVER w3)) AS BIGINT) AS gap
-         FROM events
-         WINDOW w3 AS (PARTITION BY user_id
-           ORDER BY ts ASC, event_id ASC)),
-       w AS (SELECT state, CAST(count(*) AS BIGINT) AS n FROM ini
-         WHERE gap IS NULL OR gap > $gapSeconds GROUP BY 1),
+    s"""WITH ${markovRemovalHead(gapSeconds)},
        ${variants.mkString(",\n       ")}
        $outs"""
   }
@@ -2330,27 +2363,7 @@ object OracleGen {
       val filt = if (excl.isEmpty) ""
         else s" AND from_type NOT IN (${excl.map(s => s"'$s'")
           .mkString(", ")})"
-      val stepCtes = (2 to steps).map { h =>
-        s"""s${h}_$tag AS MATERIALIZED (SELECT pc.state,
-             pc.pconv + COALESCE(inc.i, 0) AS c
-           FROM pc_$tag pc
-           LEFT JOIN (SELECT q.from_type AS st,
-               CAST(sum((q.p_micros * cc.c) // 1000000) AS BIGINT) AS i
-             FROM q_$tag q JOIN s${h - 1}_$tag cc
-               ON cc.state = q.to_type
-             GROUP BY 1) inc ON inc.st = pc.state)"""
-      }.mkString(",\n       ")
-      s"""pc_$tag AS MATERIALIZED (SELECT from_type AS state,
-           COALESCE(max(CASE WHEN to_type = 'purchase'
-             THEN p_micros END), 0) AS pconv
-         FROM p WHERE TRUE$filt GROUP BY 1),
-       q_$tag AS (SELECT from_type, to_type, p_micros FROM p
-         WHERE to_type <> 'purchase'$filt),
-       s1_$tag AS MATERIALIZED (SELECT state, pconv AS c FROM pc_$tag),
-       $stepCtes,
-       p_$tag AS (SELECT CAST(sum(n * COALESCE(cc.c, 0)) // sum(n)
-           AS BIGINT) AS pm
-         FROM w LEFT JOIN s${steps}_$tag cc ON cc.state = w.state)"""
+      markovRemovalVariant(tag, filt, steps)
     }
     val variants = variant("full", Nil) +:
       (singles.map(s => variant(s"s${singleTag(s)}", Seq(s))) ++
@@ -2375,30 +2388,7 @@ object OracleGen {
          FROM p_full f, p_pr$i pr, p_s${singleTag(a)} sa,
            p_s${singleTag(b)} sb"""
     }.mkString("\n       UNION ALL ")
-    s"""WITH seq AS (SELECT user_id, event_type AS from_type,
-         lead(event_type) OVER w2 AS to_type,
-         CAST(epoch(date_trunc('second', lead(ts) OVER w2)) AS BIGINT)
-           - CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS gap
-         FROM events
-         WINDOW w2 AS (PARTITION BY user_id
-           ORDER BY ts ASC, event_id ASC)),
-       pr AS (SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-         FROM seq WHERE to_type IS NOT NULL AND gap <= $gapSeconds
-           AND from_type <> 'purchase' GROUP BY 1, 2),
-       t AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS tot FROM pr
-         GROUP BY 1),
-       p AS MATERIALIZED (SELECT pr.from_type, to_type,
-           (n * 1000000) // tot AS p_micros
-         FROM pr JOIN t ON pr.from_type = t.from_type),
-       ini AS (SELECT event_type AS state,
-           CAST(epoch(date_trunc('second', ts)) AS BIGINT)
-             - CAST(epoch(date_trunc('second',
-                 lag(ts) OVER w3)) AS BIGINT) AS gap
-         FROM events
-         WINDOW w3 AS (PARTITION BY user_id
-           ORDER BY ts ASC, event_id ASC)),
-       w AS (SELECT state, CAST(count(*) AS BIGINT) AS n FROM ini
-         WHERE gap IS NULL OR gap > $gapSeconds GROUP BY 1),
+    s"""WITH ${markovRemovalHead(gapSeconds)},
        ${variants.mkString(",\n       ")}
        $outs"""
   }
@@ -2455,6 +2445,14 @@ object OracleGen {
        GROUP BY 1"""
   }
 
+  /** The `daily`(`g`, day, y) CTE of the daily-series oracles: events
+    * per (event type, UTC calendar day), the event type aliased as `g`. */
+  private[graft] def dailyCte(g: String): String =
+    s"""daily AS (SELECT event_type AS $g,
+             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400 AS day,
+             CAST(count(*) AS BIGINT) AS y
+           FROM events GROUP BY 1, 2)"""
+
   /** Oracle for `Events.dailyPacf` (q258): the common-mean ACF in
     * HUGEINT (n·y − S devs, exact 128-bit moment sums), one mirrored
     * double division per ρ, then the Durbin–Levinson triangle unrolled
@@ -2496,10 +2494,7 @@ object OracleGen {
       s"""SELECT grp AS event_type, CAST($h AS BIGINT) AS lag,
            round(p${h}_$h, 4) + 0.0 AS pacf FROM $prev""")
       .mkString("\n       UNION ALL ")
-    s"""WITH daily AS (SELECT event_type AS grp,
-         CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400 AS day,
-         CAST(count(*) AS BIGINT) AS y
-         FROM events GROUP BY 1, 2),
+    s"""WITH ${dailyCte("grp")},
        st AS (SELECT grp, CAST(count(*) AS BIGINT) AS n,
            CAST(sum(y) AS BIGINT) AS s
          FROM daily GROUP BY 1),

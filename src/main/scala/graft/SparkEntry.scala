@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.ops._
@@ -1003,7 +1003,7 @@ object SparkEntry {
     * words, exact-division mean words, and the q83 quality-rule keep
     * count — the one-pass report a shipped training set carries. */
   private def qCorpusCard(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.corpusCard(t(s, dir, "documents"), "doc_id", "text",
+    TextAnalysis.corpusCard(t(s, dir, "documents"), "text",
       groupCols = Seq("lang", "source"), charsCol = "n_chars",
       minWords = 50, maxWords = 100000, stopWords = Seq("the", "a"),
       minStops = 2)
@@ -1683,6 +1683,15 @@ object SparkEntry {
     * DCG weights are build-time integer micros shared with the oracle;
     * the one float op is NDCG's round-4 division. */
   private def qRetrievalEval(s: SparkSession, dir: String): DataFrame = {
+    val (run, truth) = lshRunAndTruth(s, dir)
+    Similarity.retrievalEval(run, truth, k = 5)
+  }
+
+  /** The ranked LSH top-5 run (query_id, cand_id, rank) over every
+    * 100th embedding and its brute-force truth (query_id, cand_id) —
+    * the retrieval-eval inputs of q165 and q173. */
+  private def lshRunAndTruth(s: SparkSession,
+                             dir: String): (DataFrame, DataFrame) = {
     val emb = t(s, dir, "embeddings")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
@@ -1694,7 +1703,7 @@ object SparkEntry {
     val truth = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
         k = 5, stride = 100)
       .select("query_id", "cand_id")
-    Similarity.retrievalEval(run, truth, k = 5)
+    (run, truth)
   }
 
   /** Curriculum interleave: global training order that round-robins
@@ -1728,17 +1737,7 @@ object SparkEntry {
     * rank-sensitive eval beside q165's hits/MRR/NDCG triple. Same
     * run/truth derivation as q165. */
   private def qAveragePrecision(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
-    val run = Similarity.lshTopK(emb, "vec_id", "embedding", k = 5,
-        nBits = 16, dim = 64, queryStride = 100)
-      .withColumn("rank", row_number().over(w))
-      .select("query_id", "cand_id", "rank")
-    val truth = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
-        k = 5, stride = 100)
-      .select("query_id", "cand_id")
+    val (run, truth) = lshRunAndTruth(s, dir)
     Similarity.averagePrecision(run, truth, k = 5)
   }
 
@@ -1946,8 +1945,7 @@ object SparkEntry {
     * the automation screen: scripted clients sit near −1, organic
     * humans are bursty. */
   private def qBurstiness(s: SparkSession, dir: String): DataFrame =
-    Events.burstiness(Events.load(s, dir), "user_id", "ts",
-      minEvents = 5, idCol = "event_id")
+    Events.burstiness(Events.load(s, dir), "user_id", "ts", minEvents = 5)
 
   /** Peak concurrent 5-minute activity intervals per event type via
     * the exact sweep line — the provisioning number time-bucket
@@ -3506,6 +3504,214 @@ object SparkEntry {
         AND coalesce(top_bigram_frac <= 0.18, true)
         AND coalesce(dup_trigram_frac <= 0.5, true))"""
 
+  /** The survival SPELL CTEs shared by the survival oracles: `ev`, `st`
+    * = each user's first signup t0 (plus `stCols`), one CTE per
+    * (name, event type, column) of `ends` holding the first such event
+    * STRICTLY after t0, and `hz` = the horizon that censors a spell. */
+  private def spellCtes(ends: Seq[(String, String, String)],
+                        stCols: String = ""): String = {
+    val endCtes = ends.map { case (cte, tp, out) =>
+      s"""$cte AS (SELECT e.user_id, min(e.ts) AS $out
+           FROM ev e JOIN st ON st.user_id = e.user_id
+           WHERE e.event_type = '$tp' AND e.ts > st.t0 GROUP BY 1),"""
+    }.mkString("\n         ")
+    s"""ev AS (SELECT user_id, event_type,
+           CAST(ts AS TIMESTAMP) AS ts FROM events),
+         st AS (SELECT user_id, min(ts) AS t0$stCols FROM ev
+           WHERE event_type = 'signup' GROUP BY 1),
+         $endCtes
+         hz AS (SELECT max(ts) AS tmax FROM ev)"""
+  }
+
+  /** [[spellCtes]] ending at the first purchase, `fe`, plus
+    * `dur`(`keep` obs, d): obs = 1 when the purchase came, d = the
+    * spell in whole days, censored at the horizon. */
+  private def survivalCtes(stCols: String = "", keep: String = ""): String =
+    s"""${spellCtes(Seq(("fe", "purchase", "te")), stCols)},
+         dur AS (SELECT $keep
+             CASE WHEN te IS NOT NULL THEN 1 ELSE 0 END AS obs,
+             (epoch_us(COALESCE(te, tmax)) // 1000000
+               - epoch_us(t0) // 1000000) // 86400 AS d
+           FROM st LEFT JOIN fe USING (user_id) CROSS JOIN hz)"""
+
+  /** The Kaplan–Meier day table: [[survivalCtes]] rolled up per duration
+    * day, `byd`, and `r`(d, n_at, e_at, n_risk) with its risk sets. */
+  private val kmRiskCtes: String =
+    s"""${survivalCtes()},
+         byd AS (SELECT d, count(*) AS n_at,
+             CAST(sum(obs) AS BIGINT) AS e_at
+           FROM dur GROUP BY 1),
+         r AS (SELECT d, n_at, e_at,
+             CAST(sum(n_at) OVER (ORDER BY d ASC
+               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+               AS BIGINT) AS n_risk
+           FROM byd)"""
+
+  /** [[kmRiskCtes]] plus `lt`, each day's log step t = ln(1 − e/n). */
+  private val kmLogStepCtes: String =
+    s"""$kmRiskCtes,
+         lt AS (SELECT d, n_at, e_at, n_risk,
+             CASE WHEN e_at < n_risk
+               THEN ln(1.0 - CAST(e_at AS DOUBLE) / n_risk) END AS t
+           FROM r)"""
+
+  /** [[kmRiskCtes]] plus the Greenwood curve `c`(d, n_risk, e_at, sraw,
+    * gw) — shared by q262 and q310. */
+  private val greenwoodCtes: String =
+    s"""$kmRiskCtes,
+         g AS (SELECT d, e_at, n_risk,
+             CASE WHEN e_at < n_risk
+               THEN ln(1.0 - CAST(e_at AS DOUBLE) / n_risk) END AS t,
+             CASE WHEN e_at < n_risk
+               THEN CAST(e_at AS DOUBLE)
+                 / (CAST(n_risk AS DOUBLE) * (n_risk - e_at)) END AS gt
+           FROM r),
+         c AS (SELECT d, n_risk, e_at,
+             CASE WHEN e_at = n_risk THEN 0.0
+                  ELSE exp(sum(t) OVER wp) END AS sraw,
+             sum(gt) OVER wp AS gw
+           FROM g WINDOW wp AS (ORDER BY d ASC
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))"""
+
+  /** The competing-risks day table shared by q266 and q286: spells
+    * ending at the first purchase (`fa`) or error (`fb`), a tie going
+    * to the lexically smaller cause, rolled up per day with risk sets:
+    * `r`(d, n_at, ea, eb, e_all, n_risk). */
+  private val competingCtes: String =
+    s"""${spellCtes(Seq(("fa", "purchase", "ta"), ("fb", "error", "tb")))},
+         dur AS (SELECT
+             CASE WHEN ta IS NOT NULL AND (tb IS NULL OR ta < tb
+               OR (ta = tb AND FALSE)) THEN 1 ELSE 0 END AS oa,
+             CASE WHEN tb IS NOT NULL AND (ta IS NULL OR tb < ta
+               OR (ta = tb AND TRUE)) THEN 1 ELSE 0 END AS ob,
+             (epoch_us(COALESCE(LEAST(ta, tb), tmax)) // 1000000
+               - epoch_us(t0) // 1000000) // 86400 AS d
+           FROM st LEFT JOIN fa USING (user_id)
+             LEFT JOIN fb USING (user_id) CROSS JOIN hz),
+         byd AS (SELECT d, count(*) AS n_at,
+             CAST(sum(oa) AS BIGINT) AS ea,
+             CAST(sum(ob) AS BIGINT) AS eb
+           FROM dur GROUP BY 1),
+         r AS (SELECT d, n_at, ea, eb, ea + eb AS e_all,
+             CAST(sum(n_at) OVER (ORDER BY d ASC
+               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+               AS BIGINT) AS n_risk
+           FROM byd)"""
+
+  /** The 30-minute-gap sessionization shared by q19 and q44: `s`(user_id,
+    * ts, value, session_seq). */
+  private val sessionSeqCtes: String =
+    """ev AS (SELECT user_id, event_id,
+           CAST(ts AS TIMESTAMP) AS ts, value FROM events),
+         e AS (SELECT user_id, event_id, ts, value,
+           CASE WHEN lag(ts) OVER w IS NULL
+                OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
+                THEN 1 ELSE 0 END AS new_s
+           FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+         s AS (SELECT user_id, ts, value,
+           sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
+           FROM e)"""
+
+  /** The UniMax budget split shared by q94 and q95: per-language caps of
+    * 4 epochs over a 1400-doc budget; `f` ranks the caps, `k`(k, cumk, s)
+    * holds how many are saturated. */
+  private val unimaxCtes: String =
+    """c AS (SELECT lang, count(*) AS n_docs FROM documents
+           GROUP BY lang),
+         r AS (SELECT lang, n_docs,
+             CAST(n_docs AS DOUBLE) * 4.0 AS cap,
+             row_number() OVER (ORDER BY CAST(n_docs AS DOUBLE) * 4.0 ASC,
+               lang ASC) AS rk,
+             sum(CAST(n_docs AS DOUBLE) * 4.0) OVER (
+               ORDER BY CAST(n_docs AS DOUBLE) * 4.0 ASC, lang ASC
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+             count(*) OVER () AS s FROM c),
+         f AS (SELECT *, (cap * (s - rk) <= 1400.0 - cum) AS isc FROM r),
+         k AS (SELECT coalesce(max(CASE WHEN isc THEN rk END), 0) AS k,
+             coalesce(max(CASE WHEN isc THEN cum END), 0.0) AS cumk,
+             max(s) AS s FROM f)"""
+
+  /** Entity-resolution components shared by q133 and q159, over
+    * `p`(id, s, …): pairs within Levenshtein 2, and `comp`(id,
+    * entity_id) = each record's connected component by its least id. */
+  private val erComponentCtes: String =
+    """pr AS (SELECT a.id AS ia, b.id AS ib FROM p a JOIN p b ON a.id < b.id
+           WHERE abs(length(a.s) - length(b.s)) <= 2
+             AND levenshtein(a.s, b.s) <= 2),
+         edges AS (SELECT ia AS src, ib AS dst FROM pr
+           UNION ALL SELECT ib, ia FROM pr),
+         reach AS (
+           SELECT id, id AS r FROM p
+           UNION
+           SELECT e.dst AS id, reach.r AS r
+           FROM reach JOIN edges e ON e.src = reach.id),
+         comp AS (SELECT id, min(r) AS entity_id FROM reach GROUP BY id)"""
+
+  /** The Hill tail-index oracle shared by q223 and q251: `baseCtes`
+    * ends in `base`(grp, cents, id); the top 50 positive values per
+    * group against the 51st, as exact micros log sums. */
+  private def hillTailSql(baseCtes: String): String =
+    s"""WITH $baseCtes,
+         pos AS (SELECT * FROM base WHERE cents > 0),
+         rk AS (SELECT grp, cents, row_number() OVER (PARTITION BY grp
+             ORDER BY cents DESC, id ASC) AS rk FROM pos),
+         ref AS (SELECT grp, cents AS x_ref FROM rk WHERE rk = 51),
+         tm AS (SELECT r.grp, CAST(round(ln(CAST(r.cents AS DOUBLE)
+               / CAST(ref.x_ref AS DOUBLE)) * 1000000.0) AS BIGINT)
+               AS lm
+           FROM rk r JOIN ref ON ref.grp = r.grp WHERE r.rk <= 50),
+         a AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_top,
+             CAST(sum(lm) AS BIGINT) AS hill_sum_micros
+           FROM tm GROUP BY 1)
+         SELECT grp, CAST(50 AS BIGINT) AS k, hill_sum_micros,
+           CASE WHEN hill_sum_micros > 0
+             THEN round(50.0 * 1000000.0
+               / CAST(hill_sum_micros AS DOUBLE), 4) END AS alpha
+         FROM a WHERE n_top = 50"""
+
+  /** The additive weekly decomposition shared by q181 and q226 over the
+    * daily series: `t3`(g, day, dow, y, trend_micros, detr) with the
+    * centred 7-day trend, and `s2`(g, dow, seasonal_micros) = the
+    * truncated mean detrended value per weekday. */
+  private val seasonalCtes: String =
+    s"""${OracleGen.dailyCte("g")},
+         t AS (SELECT g, day, y,
+             CAST(count(*) OVER w7 AS BIGINT) AS n7,
+             CAST(sum(y) OVER w7 AS BIGINT) AS s7
+           FROM daily WINDOW w7 AS (PARTITION BY g ORDER BY day ASC
+             RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
+         t3 AS (SELECT g, day, day % 7 AS dow, y,
+             CASE WHEN n7 = 7 THEN (1000000 * s7) // 7 END
+               AS trend_micros,
+             1000000 * y - CASE WHEN n7 = 7 THEN (1000000 * s7) // 7 END
+               AS detr
+           FROM t),
+         seas AS (SELECT g, dow, CAST(sum(detr) AS BIGINT) AS sd,
+             CAST(count(*) AS BIGINT) AS nd
+           FROM t3 WHERE detr IS NOT NULL GROUP BY 1, 2),
+         s2 AS (SELECT g, dow,
+             CASE WHEN sd >= 0 THEN sd // nd ELSE -((-sd) // nd) END
+               AS seasonal_micros
+           FROM seas)"""
+
+  /** The per-stratum 2x2 `cells`(s, a, b, c, d) shared by q271 and
+    * q307: lineitem stratified by return flag, exposure discount > 0.05,
+    * outcome tax > 0.04. */
+  private val stratifiedCellsCte: String =
+    """cells AS (SELECT l_returnflag AS s,
+           CAST(sum(CASE WHEN l_discount > 0.05 AND l_tax > 0.04
+             THEN 1 ELSE 0 END) AS BIGINT) AS a,
+           CAST(sum(CASE WHEN l_discount > 0.05 AND NOT l_tax > 0.04
+             THEN 1 ELSE 0 END) AS BIGINT) AS b,
+           CAST(sum(CASE WHEN NOT l_discount > 0.05 AND l_tax > 0.04
+             THEN 1 ELSE 0 END) AS BIGINT) AS c,
+           CAST(sum(CASE WHEN NOT l_discount > 0.05
+             AND NOT l_tax > 0.04 THEN 1 ELSE 0 END) AS BIGINT) AS d
+         FROM lineitem
+         WHERE l_discount IS NOT NULL AND l_tax IS NOT NULL
+         GROUP BY 1)"""
+
   def oracleSql: Map[String, String] = Map(
     "q01_agg" ->
       """SELECT l_returnflag, l_linestatus,
@@ -3623,17 +3829,7 @@ object SparkEntry {
          event_type, count(*) AS n, round(sum(value), 2) AS sum_value
          FROM events GROUP BY 1, 2""",
     "q19_sessionize" ->
-      """WITH ev AS (SELECT user_id, event_id,
-           CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-         e AS (SELECT user_id, event_id, ts, value,
-           CASE WHEN lag(ts) OVER w IS NULL
-                OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-                THEN 1 ELSE 0 END AS new_s
-           FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         s AS (SELECT user_id, ts, value,
-           sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-           FROM e)
+      s"""WITH $sessionSeqCtes
          SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq, min(ts) AS session_start,
          count(*) AS n_events,
          sum(CAST(round(value * 100) AS BIGINT)) / 100.0 AS sum_value
@@ -3676,20 +3872,7 @@ object SparkEntry {
     "q93_grouped_split" ->
       OracleGen.groupedSplitSql(n = 2, threshold = 0.8, mod = 10, rem = 0),
     "q94_unimax_alloc" ->
-      """WITH c AS (SELECT lang, count(*) AS n_docs FROM documents
-           GROUP BY lang),
-         r AS (SELECT lang, n_docs,
-             CAST(n_docs AS DOUBLE) * 4.0 AS cap,
-             row_number() OVER (ORDER BY CAST(n_docs AS DOUBLE) * 4.0 ASC,
-               lang ASC) AS rk,
-             sum(CAST(n_docs AS DOUBLE) * 4.0) OVER (
-               ORDER BY CAST(n_docs AS DOUBLE) * 4.0 ASC, lang ASC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             count(*) OVER () AS s FROM c),
-         f AS (SELECT *, (cap * (s - rk) <= 1400.0 - cum) AS isc FROM r),
-         k AS (SELECT coalesce(max(CASE WHEN isc THEN rk END), 0) AS k,
-             coalesce(max(CASE WHEN isc THEN cum END), 0.0) AS cumk,
-             max(s) AS s FROM f)
+      s"""WITH $unimaxCtes
          SELECT lang, n_docs,
            round(CASE WHEN f.rk <= k.k OR k.k = k.s THEN cap
                  ELSE least(cap, (1400.0 - k.cumk)
@@ -3700,20 +3883,7 @@ object SparkEntry {
                / CAST(n_docs AS DOUBLE), 6) AS epochs
          FROM f, k""",
     "q95_epoch_expand" ->
-      """WITH c AS (SELECT lang, count(*) AS n_docs FROM documents
-           GROUP BY lang),
-         r AS (SELECT lang, n_docs,
-             CAST(n_docs AS DOUBLE) * 4.0 AS cap,
-             row_number() OVER (ORDER BY CAST(n_docs AS DOUBLE) * 4.0 ASC,
-               lang ASC) AS rk,
-             sum(CAST(n_docs AS DOUBLE) * 4.0) OVER (
-               ORDER BY CAST(n_docs AS DOUBLE) * 4.0 ASC, lang ASC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-             count(*) OVER () AS s FROM c),
-         f AS (SELECT *, (cap * (s - rk) <= 1400.0 - cum) AS isc FROM r),
-         k AS (SELECT coalesce(max(CASE WHEN isc THEN rk END), 0) AS k,
-             coalesce(max(CASE WHEN isc THEN cum END), 0.0) AS cumk,
-             max(s) AS s FROM f),
+      s"""WITH $unimaxCtes,
          a AS (SELECT lang,
              (CASE WHEN f.rk <= k.k OR k.k = k.s THEN cap
               ELSE least(cap, (1400.0 - k.cumk)
@@ -4483,17 +4653,7 @@ object SparkEntry {
          FROM orders
          WINDOW w AS (ORDER BY o_totalprice ASC, o_orderkey ASC)""",
     "q44_session_window" ->
-      """WITH ev AS (SELECT user_id, event_id,
-           CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-         e AS (SELECT user_id, event_id, ts, value,
-           CASE WHEN lag(ts) OVER w IS NULL
-                OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-                THEN 1 ELSE 0 END AS new_s
-           FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         s AS (SELECT user_id, ts, value,
-           sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-           FROM e)
+      s"""WITH $sessionSeqCtes
          SELECT user_id, min(ts) AS session_start,
          count(*) AS n_events,
          sum(CAST(round(value * 100) AS BIGINT)) / 100.0 AS sum_value
@@ -4527,22 +4687,12 @@ object SparkEntry {
       OracleGen.funnelTraceSql(Seq("view", "click", "purchase"),
         gapSeconds = Some(86400L)),
     "q133_entity_resolution" ->
-      """WITH RECURSIVE
+      s"""WITH RECURSIVE
          p AS (SELECT p_partkey AS id, p_name AS s,
              CAST(round(p_retailprice * 100) AS BIGINT) AS price_cents,
              p_brand
            FROM part WHERE p_partkey % 10 = 0),
-         pr AS (SELECT a.id AS ia, b.id AS ib FROM p a JOIN p b ON a.id < b.id
-           WHERE abs(length(a.s) - length(b.s)) <= 2
-             AND levenshtein(a.s, b.s) <= 2),
-         edges AS (SELECT ia AS src, ib AS dst FROM pr
-           UNION ALL SELECT ib, ia FROM pr),
-         reach AS (
-           SELECT id, id AS r FROM p
-           UNION
-           SELECT e.dst AS id, reach.r AS r
-           FROM reach JOIN edges e ON e.src = reach.id),
-         comp AS (SELECT id, min(r) AS entity_id FROM reach GROUP BY id),
+         $erComponentCtes,
          m AS (SELECT c.entity_id, p.id, p.s, p.price_cents, p.p_brand
            FROM comp c JOIN p ON c.id = p.id),
          canon AS (SELECT entity_id, s,
@@ -4557,21 +4707,11 @@ object SparkEntry {
            a.min_price_cents, a.n_brands
          FROM agg a JOIN canon c ON a.entity_id = c.entity_id AND c.rn = 1""",
     "q159_er_survivorship" ->
-      """WITH RECURSIVE
+      s"""WITH RECURSIVE
          p AS (SELECT p_partkey AS id, p_name AS s,
              CAST(p_size AS BIGINT) AS ver, p_brand AS src
            FROM part WHERE p_partkey % 10 = 0),
-         pr AS (SELECT a.id AS ia, b.id AS ib FROM p a JOIN p b ON a.id < b.id
-           WHERE abs(length(a.s) - length(b.s)) <= 2
-             AND levenshtein(a.s, b.s) <= 2),
-         edges AS (SELECT ia AS src, ib AS dst FROM pr
-           UNION ALL SELECT ib, ia FROM pr),
-         reach AS (
-           SELECT id, id AS r FROM p
-           UNION
-           SELECT e.dst AS id, reach.r AS r
-           FROM reach JOIN edges e ON e.src = reach.id),
-         comp AS (SELECT id, min(r) AS entity_id FROM reach GROUP BY id),
+         $erComponentCtes,
          m AS (SELECT c.entity_id, p.id, p.s, p.ver, p.src
            FROM comp c JOIN p ON c.id = p.id),
          compl AS (SELECT entity_id, s,
@@ -4740,10 +4880,7 @@ object SparkEntry {
          JOIN sizes za ON za.s = sa
          JOIN sizes zb ON zb.s = sb""",
     "q168_block_bootstrap" ->
-      """WITH daily AS (SELECT event_type AS g,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400 AS day,
-             CAST(count(*) AS BIGINT) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${OracleGen.dailyCte("g")},
          series AS (SELECT g,
              CAST(row_number() OVER (PARTITION BY g ORDER BY day ASC)
                AS BIGINT) - 1 AS pos, y
@@ -5260,10 +5397,7 @@ object SparkEntry {
     "q170_mmr_rerank" -> OracleGen.mmrSql(candK = 20, k = 5, stride = 100),
     "q172_bpe_train" -> OracleGen.bpeSql(merges = 6),
     "q171_cusum_drift" ->
-      """WITH daily AS (SELECT event_type AS g,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400 AS day,
-             CAST(count(*) AS BIGINT) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${OracleGen.dailyCte("g")},
          start AS (SELECT g, MIN(day) AS d0 FROM daily GROUP BY 1),
          tgt AS (SELECT d.g,
              CAST(SUM(d.y) * 1000000 AS BIGINT) // COUNT(*) AS target
@@ -5363,28 +5497,7 @@ object SparkEntry {
          SELECT l_returnflag, l_orderkey, l_linenumber, price_cents, qty
          FROM w WHERE (mprev IS NULL OR mprev < qty) AND meq = qty""",
     "q181_seasonal_decompose" ->
-      """WITH daily AS (SELECT event_type AS g,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400
-               AS day, CAST(count(*) AS BIGINT) AS y
-           FROM events GROUP BY 1, 2),
-         t AS (SELECT g, day, y,
-             CAST(count(*) OVER w7 AS BIGINT) AS n7,
-             CAST(sum(y) OVER w7 AS BIGINT) AS s7
-           FROM daily WINDOW w7 AS (PARTITION BY g ORDER BY day ASC
-             RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-         t3 AS (SELECT g, day, day % 7 AS dow, y,
-             CASE WHEN n7 = 7 THEN (1000000 * s7) // 7 END
-               AS trend_micros,
-             1000000 * y - CASE WHEN n7 = 7 THEN (1000000 * s7) // 7 END
-               AS detr
-           FROM t),
-         seas AS (SELECT g, dow, CAST(sum(detr) AS BIGINT) AS sd,
-             CAST(count(*) AS BIGINT) AS nd
-           FROM t3 WHERE detr IS NOT NULL GROUP BY 1, 2),
-         s2 AS (SELECT g, dow,
-             CASE WHEN sd >= 0 THEN sd // nd ELSE -((-sd) // nd) END
-               AS seasonal_micros
-           FROM seas)
+      s"""WITH $seasonalCtes
          SELECT t3.g AS event_type, t3.day, t3.dow, t3.y,
            t3.trend_micros, s2.seasonal_micros,
            t3.detr - s2.seasonal_micros AS resid_micros
@@ -5715,10 +5828,7 @@ object SparkEntry {
          UNION ALL SELECT 3, CAST((SELECT count(*) FROM r3) AS BIGINT)
          UNION ALL SELECT 4, CAST((SELECT count(*) FROM r4) AS BIGINT)""",
     "q197_binseg_changepoint" ->
-      """WITH daily AS (SELECT event_type AS grp,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400 AS day,
-             CAST(count(*) AS BIGINT) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${OracleGen.dailyCte("grp")},
          c AS (SELECT grp, day,
              CAST(count(*) OVER wc AS BIGINT) AS nl,
              CAST(sum(y) OVER wc AS BIGINT) AS sl,
@@ -5794,10 +5904,7 @@ object SparkEntry {
              + (pc - lc) * (pc - lc)), 6) + 0.0 AS diff_hi
          FROM b2""",
     "q199_forecast_backtest" ->
-      """WITH daily AS (SELECT event_type AS grp,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400 AS day,
-             CAST(count(*) AS BIGINT) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${OracleGen.dailyCte("grp")},
          n1 AS (SELECT a.grp, CAST(count(*) AS BIGINT) AS n_naive,
              (1000000 * CAST(sum(abs(a.y - b.y)) AS BIGINT))
                // CAST(count(*) AS BIGINT) AS mae_naive_micros,
@@ -6084,27 +6191,7 @@ object SparkEntry {
              AS twap_micros
          FROM m WHERE dsum > 0""",
     "q212_nelson_aalen" ->
-      """WITH ev AS (SELECT user_id, event_type,
-           CAST(ts AS TIMESTAMP) AS ts FROM events),
-         st AS (SELECT user_id, min(ts) AS t0 FROM ev
-           WHERE event_type = 'signup' GROUP BY 1),
-         fe AS (SELECT e.user_id, min(e.ts) AS te
-           FROM ev e JOIN st ON st.user_id = e.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > st.t0 GROUP BY 1),
-         hz AS (SELECT max(ts) AS tmax FROM ev),
-         dur AS (SELECT
-             CASE WHEN te IS NOT NULL THEN 1 ELSE 0 END AS obs,
-             (epoch_us(COALESCE(te, tmax)) // 1000000
-               - epoch_us(t0) // 1000000) // 86400 AS d
-           FROM st LEFT JOIN fe USING (user_id) CROSS JOIN hz),
-         byd AS (SELECT d, count(*) AS n_at,
-             CAST(sum(obs) AS BIGINT) AS e_at
-           FROM dur GROUP BY 1),
-         r AS (SELECT d, n_at, e_at,
-             CAST(sum(n_at) OVER (ORDER BY d ASC
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-               AS BIGINT) AS n_risk
-           FROM byd),
+      s"""WITH $kmRiskCtes,
          h AS (SELECT d, n_risk, e_at,
              (1000000 * e_at) // n_risk AS hazard_micros
            FROM r)
@@ -6230,20 +6317,9 @@ object SparkEntry {
              END AS nmi
          FROM mi, ha, hb, nt""",
     "q219_log_rank" ->
-      """WITH ev AS (SELECT user_id, event_type,
-           CAST(ts AS TIMESTAMP) AS ts FROM events),
-         st AS (SELECT user_id, min(ts) AS t0,
-             max(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS g
-           FROM ev WHERE event_type = 'signup' GROUP BY 1),
-         fe AS (SELECT e.user_id, min(e.ts) AS te
-           FROM ev e JOIN st ON st.user_id = e.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > st.t0 GROUP BY 1),
-         hz AS (SELECT max(ts) AS tmax FROM ev),
-         dur AS (SELECT st.g,
-             CASE WHEN te IS NOT NULL THEN 1 ELSE 0 END AS obs,
-             (epoch_us(COALESCE(te, tmax)) // 1000000
-               - epoch_us(t0) // 1000000) // 86400 AS d
-           FROM st LEFT JOIN fe USING (user_id) CROSS JOIN hz),
+      s"""WITH ${survivalCtes(
+           stCols = ", max(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS g",
+           keep = "st.g,")},
          byd AS (SELECT d, CAST(count(*) AS BIGINT) AS n_at,
              CAST(sum(obs) AS BIGINT) AS e_at,
              CAST(sum(g) AS BIGINT) AS n1_at,
@@ -6279,26 +6355,15 @@ object SparkEntry {
                / (1000.0 * sqrt(CAST(v_micros AS DOUBLE))), 4) + 0.0
              END AS z
          FROM agg, tot""",
-    // q302: mirrors Events.logRankKSample — q219's duration relation
+    // q302: mirrors Events.logRankKSample — `survivalCtes` durations
     // labelled with 3 cohorts x 2 strata, within-stratum reverse-
     // cumulative risk sets, the day-ladder non-equi join for per-group
     // at-risk counts, q219's staged floor chain with n1t -> ngt.
     "q302_log_rank_k" ->
-      """WITH ev AS (SELECT user_id, event_type,
-           CAST(ts AS TIMESTAMP) AS ts FROM events),
-         st AS (SELECT user_id, min(ts) AS t0,
-             max(CAST(user_id % 3 AS VARCHAR)) AS grp,
-             max(CAST((user_id // 3) % 2 AS VARCHAR)) AS str
-           FROM ev WHERE event_type = 'signup' GROUP BY 1),
-         fe AS (SELECT e.user_id, min(e.ts) AS te
-           FROM ev e JOIN st ON st.user_id = e.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > st.t0 GROUP BY 1),
-         hz AS (SELECT max(ts) AS tmax FROM ev),
-         dur AS (SELECT grp, str,
-             CASE WHEN te IS NOT NULL THEN 1 ELSE 0 END AS obs,
-             (epoch_us(COALESCE(te, tmax)) // 1000000
-               - epoch_us(t0) // 1000000) // 86400 AS d
-           FROM st LEFT JOIN fe USING (user_id) CROSS JOIN hz),
+      s"""WITH ${survivalCtes(
+           stCols = ", max(CAST(user_id % 3 AS VARCHAR)) AS grp," +
+             " max(CAST((user_id // 3) % 2 AS VARCHAR)) AS str",
+           keep = "grp, str,")},
          byd AS (SELECT str, d, CAST(count(*) AS BIGINT) AS n_at,
              CAST(sum(obs) AS BIGINT) AS e_at
            FROM dur GROUP BY 1, 2),
@@ -6409,27 +6474,11 @@ object SparkEntry {
              * abs(f2_est - CAST(f2x AS BIGINT)))
              // CAST(f2x AS BIGINT) END AS rel_err_micros
          FROM ex, es""",
-    "q223_hill_tail" ->
-      """WITH base AS (SELECT o_orderpriority AS grp,
+    "q223_hill_tail" -> hillTailSql(
+      """base AS (SELECT o_orderpriority AS grp,
              CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
              o_orderkey AS id
-           FROM orders),
-         pos AS (SELECT * FROM base WHERE cents > 0),
-         rk AS (SELECT grp, cents, row_number() OVER (PARTITION BY grp
-             ORDER BY cents DESC, id ASC) AS rk FROM pos),
-         ref AS (SELECT grp, cents AS x_ref FROM rk WHERE rk = 51),
-         tm AS (SELECT r.grp, CAST(round(ln(CAST(r.cents AS DOUBLE)
-               / CAST(ref.x_ref AS DOUBLE)) * 1000000.0) AS BIGINT)
-               AS lm
-           FROM rk r JOIN ref ON ref.grp = r.grp WHERE r.rk <= 50),
-         a AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_top,
-             CAST(sum(lm) AS BIGINT) AS hill_sum_micros
-           FROM tm GROUP BY 1)
-         SELECT grp, CAST(50 AS BIGINT) AS k, hill_sum_micros,
-           CASE WHEN hill_sum_micros > 0
-             THEN round(50.0 * 1000000.0
-               / CAST(hill_sum_micros AS DOUBLE), 4) END AS alpha
-         FROM a WHERE n_top = 50""",
+           FROM orders)"""),
     "q225_nn_matching" ->
       """WITH per AS (SELECT user_id AS u, CAST(count(*) AS BIGINT)
              AS cov,
@@ -6459,28 +6508,7 @@ object SparkEntry {
                // count(*) AS BIGINT) AS att_micros
          FROM j""",
     "q226_seasonal_strength" ->
-      """WITH daily AS (SELECT event_type AS g,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400
-               AS day, CAST(count(*) AS BIGINT) AS y
-           FROM events GROUP BY 1, 2),
-         t AS (SELECT g, day, y,
-             CAST(count(*) OVER w7 AS BIGINT) AS n7,
-             CAST(sum(y) OVER w7 AS BIGINT) AS s7
-           FROM daily WINDOW w7 AS (PARTITION BY g ORDER BY day ASC
-             RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-         t3 AS (SELECT g, day, day % 7 AS dow, y,
-             CASE WHEN n7 = 7 THEN (1000000 * s7) // 7 END
-               AS trend_micros,
-             1000000 * y - CASE WHEN n7 = 7 THEN (1000000 * s7) // 7 END
-               AS detr
-           FROM t),
-         seas AS (SELECT g, dow, CAST(sum(detr) AS BIGINT) AS sd,
-             CAST(count(*) AS BIGINT) AS nd
-           FROM t3 WHERE detr IS NOT NULL GROUP BY 1, 2),
-         s2 AS (SELECT g, dow,
-             CASE WHEN sd >= 0 THEN sd // nd ELSE -((-sd) // nd) END
-               AS seasonal_micros
-           FROM seas),
+      s"""WITH $seasonalCtes,
          comp AS (SELECT t3.g,
              1000000 * t3.y - t3.trend_micros AS dt,
              t3.detr - s2.seasonal_micros AS r
@@ -6570,10 +6598,7 @@ object SparkEntry {
                / sqrt((vt + vc) / 2.0), 4) + 0.0 END AS smd
          FROM v""",
     "q230_mann_kendall" ->
-      """WITH daily AS (SELECT event_type AS grp,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400
-               AS day, CAST(count(*) AS BIGINT) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${OracleGen.dailyCte("grp")},
          p AS (SELECT a.grp, CAST(sum(sign(b.y - a.y)) AS BIGINT) AS s
            FROM daily a JOIN daily b ON a.grp = b.grp
              AND a.day < b.day GROUP BY 1),
@@ -6703,10 +6728,7 @@ object SparkEntry {
              AS p_micros
          FROM tb, obst o GROUP BY 1, 2, 3, 4""",
     "q255_iqr_outlier_days" ->
-      """WITH daily AS (SELECT event_type AS grp,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400
-               AS day, CAST(count(*) AS BIGINT) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${OracleGen.dailyCte("grp")},
          nn AS (SELECT grp, CAST(count(*) AS BIGINT) AS n
            FROM daily GROUP BY 1),
          rk AS (SELECT grp, day, y,
@@ -6925,41 +6947,13 @@ object SparkEntry {
       OracleGen.trussCommunitiesSql(k = 4, rounds = 3),
     "q265_truss_hierarchy" ->
       OracleGen.trussHierarchySql(maxK = 5, rounds = 3),
-    // q266: mirrors Events.competingRisks exactly — q120's day protocol,
+    // q266: mirrors Events.competingRisks exactly — `competingCtes`,
     // the EXCLUSIVE-prior ln/exp chain for S(d-) (coalesce(sum,0) so day
     // 0 sees S=1; a saturated prior day forces 0.0), tie at ta = tb goes
     // to cause B ('error' < 'purchase' by the type-name-asc contract,
     // hence the literal FALSE/TRUE tie arms).
     "q266_competing_risks" ->
-      """WITH ev AS (SELECT user_id, event_type,
-           CAST(ts AS TIMESTAMP) AS ts FROM events),
-         st AS (SELECT user_id, min(ts) AS t0 FROM ev
-           WHERE event_type = 'signup' GROUP BY 1),
-         fa AS (SELECT e.user_id, min(e.ts) AS ta
-           FROM ev e JOIN st ON st.user_id = e.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > st.t0 GROUP BY 1),
-         fb AS (SELECT e.user_id, min(e.ts) AS tb
-           FROM ev e JOIN st ON st.user_id = e.user_id
-           WHERE e.event_type = 'error' AND e.ts > st.t0 GROUP BY 1),
-         hz AS (SELECT max(ts) AS tmax FROM ev),
-         dur AS (SELECT
-             CASE WHEN ta IS NOT NULL AND (tb IS NULL OR ta < tb
-               OR (ta = tb AND FALSE)) THEN 1 ELSE 0 END AS oa,
-             CASE WHEN tb IS NOT NULL AND (ta IS NULL OR tb < ta
-               OR (ta = tb AND TRUE)) THEN 1 ELSE 0 END AS ob,
-             (epoch_us(COALESCE(LEAST(ta, tb), tmax)) // 1000000
-               - epoch_us(t0) // 1000000) // 86400 AS d
-           FROM st LEFT JOIN fa USING (user_id)
-             LEFT JOIN fb USING (user_id) CROSS JOIN hz),
-         byd AS (SELECT d, count(*) AS n_at,
-             CAST(sum(oa) AS BIGINT) AS ea,
-             CAST(sum(ob) AS BIGINT) AS eb
-           FROM dur GROUP BY 1),
-         r AS (SELECT d, n_at, ea, eb, ea + eb AS e_all,
-             CAST(sum(n_at) OVER (ORDER BY d ASC
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-               AS BIGINT) AS n_risk
-           FROM byd),
+      s"""WITH $competingCtes,
          g AS (SELECT d, ea, eb, e_all, n_risk,
              CASE WHEN e_all < n_risk
                THEN ln(1.0 - CAST(e_all AS DOUBLE) / n_risk) END AS lt,
@@ -7015,40 +7009,12 @@ object SparkEntry {
     "q285_mutual_pair_purity" ->
       OracleGen.mutualPairPurityRoutedSql(stride = 10L,
         nCentroids = 16, nProbe = 4),
-    // q286: mirrors Events.causeSpecificHazards — q266's duration
-    // protocol and risk-set window, per-day integer-micros hazard
+    // q286: mirrors Events.causeSpecificHazards — q266's `competingCtes`
+    // day table and risk sets, per-day integer-micros hazard
     // floors, one pooled TOTAL row (NULL day) with person-day rates,
     // the Sa/Sb rate ratio, and the closed-form log-rank z.
     "q286_cause_hazards" ->
-      """WITH ev AS (SELECT user_id, event_type,
-           CAST(ts AS TIMESTAMP) AS ts FROM events),
-         st AS (SELECT user_id, min(ts) AS t0 FROM ev
-           WHERE event_type = 'signup' GROUP BY 1),
-         fa AS (SELECT e.user_id, min(e.ts) AS ta
-           FROM ev e JOIN st ON st.user_id = e.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > st.t0 GROUP BY 1),
-         fb AS (SELECT e.user_id, min(e.ts) AS tb
-           FROM ev e JOIN st ON st.user_id = e.user_id
-           WHERE e.event_type = 'error' AND e.ts > st.t0 GROUP BY 1),
-         hz AS (SELECT max(ts) AS tmax FROM ev),
-         dur AS (SELECT
-             CASE WHEN ta IS NOT NULL AND (tb IS NULL OR ta < tb
-               OR (ta = tb AND FALSE)) THEN 1 ELSE 0 END AS oa,
-             CASE WHEN tb IS NOT NULL AND (ta IS NULL OR tb < ta
-               OR (ta = tb AND TRUE)) THEN 1 ELSE 0 END AS ob,
-             (epoch_us(COALESCE(LEAST(ta, tb), tmax)) // 1000000
-               - epoch_us(t0) // 1000000) // 86400 AS d
-           FROM st LEFT JOIN fa USING (user_id)
-             LEFT JOIN fb USING (user_id) CROSS JOIN hz),
-         byd AS (SELECT d, count(*) AS n_at,
-             CAST(sum(oa) AS BIGINT) AS ea,
-             CAST(sum(ob) AS BIGINT) AS eb
-           FROM dur GROUP BY 1),
-         r AS (SELECT d, ea, eb,
-             CAST(sum(n_at) OVER (ORDER BY d ASC
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-               AS BIGINT) AS n_risk
-           FROM byd),
+      s"""WITH $competingCtes,
          p AS (SELECT CAST(sum(n_risk) AS BIGINT) AS pd,
              CAST(sum(ea) AS BIGINT) AS sa,
              CAST(sum(eb) AS BIGINT) AS sb
@@ -7124,12 +7090,11 @@ object SparkEntry {
                / CAST(3 * sr - sr2 AS DOUBLE) END, 4) AS q_stat
          FROM a"""
     },
-    // q283: mirrors Events.sessionMarkovFunnel2 — the q257 step chain
+    // q283: mirrors Events.sessionMarkovFunnel2 — q257's step chain
     // over bigram states (in-session triples, absorbing state encoded
     // under the plain conversion name).
-    "q283_session_markov2" -> {
-      val head =
-        """seq AS (SELECT user_id, event_type AS t0,
+    "q283_session_markov2" -> OracleGen.sessionMarkovFunnelSql(
+      """seq AS (SELECT user_id, event_type AS t0,
              lead(event_type, 1) OVER w AS t1,
              lead(event_type, 2) OVER w AS t2,
              CAST(epoch(date_trunc('second', lead(ts, 1) OVER w))
@@ -7148,38 +7113,7 @@ object SparkEntry {
              CAST(count(*) AS BIGINT) AS n
            FROM seq WHERE t1 IS NOT NULL AND t2 IS NOT NULL
              AND g1 <= 1800 AND g2 <= 1800 AND t1 <> 'purchase'
-           GROUP BY 1, 2),
-         t AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS tot FROM pr
-           GROUP BY 1),
-         p AS MATERIALIZED (SELECT pr.from_type, to_type,
-             (n * 1000000) // tot AS p_micros
-           FROM pr JOIN t ON pr.from_type = t.from_type),
-         pc AS MATERIALIZED (SELECT from_type AS state,
-             COALESCE(max(CASE WHEN to_type = 'purchase'
-               THEN p_micros END), 0) AS pconv
-           FROM p GROUP BY 1),
-         q AS (SELECT from_type, to_type, p_micros FROM p
-           WHERE to_type <> 'purchase'),
-         s1 AS MATERIALIZED (SELECT state, pconv AS c,
-           CAST(0 AS BIGINT) AS sacc FROM pc)"""
-      val stepCtes = (2 to 8).map { h =>
-        s"""s$h AS MATERIALIZED (SELECT pc.state,
-             pc.pconv + COALESCE(inc.i, 0) AS c,
-             pr.sacc + pr.c AS sacc
-           FROM pc JOIN s${h - 1} pr ON pr.state = pc.state
-           LEFT JOIN (SELECT q.from_type AS st,
-               CAST(sum((q.p_micros * cc.c) // 1000000) AS BIGINT) AS i
-             FROM q JOIN s${h - 1} cc ON cc.state = q.to_type
-             GROUP BY 1) inc ON inc.st = pc.state)"""
-      }.mkString(",\n         ")
-      s"""WITH $head,
-         $stepCtes
-         SELECT state, CAST(c AS BIGINT) AS conv_micros,
-           CASE WHEN c > 0
-             THEN CAST((1000000 * (8 * c - sacc)) // c AS BIGINT)
-           END AS exp_steps_cond_micros
-         FROM s8"""
-    },
+           GROUP BY 1, 2)"""),
     // q281: mirrors Graph.richClub — q169's und edge canonicalization,
     // exact degree/edge counts, HUGEINT-floored density per degree bar.
     "q281_rich_club" ->
@@ -7441,18 +7375,7 @@ object SparkEntry {
     // psi, the hypergeometric quadratic with identical float
     // parenthesization, per-stratum micros rounding, exact long sum.
     "q307_breslow_day" ->
-      """WITH cells AS (SELECT l_returnflag AS s,
-           CAST(sum(CASE WHEN l_discount > 0.05 AND l_tax > 0.04
-             THEN 1 ELSE 0 END) AS BIGINT) AS a,
-           CAST(sum(CASE WHEN l_discount > 0.05 AND NOT l_tax > 0.04
-             THEN 1 ELSE 0 END) AS BIGINT) AS b,
-           CAST(sum(CASE WHEN NOT l_discount > 0.05 AND l_tax > 0.04
-             THEN 1 ELSE 0 END) AS BIGINT) AS c,
-           CAST(sum(CASE WHEN NOT l_discount > 0.05
-             AND NOT l_tax > 0.04 THEN 1 ELSE 0 END) AS BIGINT) AS d
-         FROM lineitem
-         WHERE l_discount IS NOT NULL AND l_tax IS NOT NULL
-         GROUP BY 1),
+      s"""WITH $stratifiedCellsCte,
        p AS (SELECT round(CASE WHEN den > 0
              THEN CAST(num AS DOUBLE) / CAST(den AS DOUBLE) END, 4)
              AS psi
@@ -7512,18 +7435,7 @@ object SparkEntry {
     // per-term micros floor on the HUGEINT ladder, one mirrored double
     // division each for pooled and crude OR.
     "q271_cmh_odds_ratio" ->
-      """WITH cells AS (SELECT l_returnflag AS s,
-           CAST(sum(CASE WHEN l_discount > 0.05 AND l_tax > 0.04
-             THEN 1 ELSE 0 END) AS BIGINT) AS a,
-           CAST(sum(CASE WHEN l_discount > 0.05 AND NOT l_tax > 0.04
-             THEN 1 ELSE 0 END) AS BIGINT) AS b,
-           CAST(sum(CASE WHEN NOT l_discount > 0.05 AND l_tax > 0.04
-             THEN 1 ELSE 0 END) AS BIGINT) AS c,
-           CAST(sum(CASE WHEN NOT l_discount > 0.05
-             AND NOT l_tax > 0.04 THEN 1 ELSE 0 END) AS BIGINT) AS d
-         FROM lineitem
-         WHERE l_discount IS NOT NULL AND l_tax IS NOT NULL
-         GROUP BY 1),
+      s"""WITH $stratifiedCellsCte,
        p AS (SELECT CAST(count(*) AS BIGINT) AS n_strata,
            sum((CAST(a AS HUGEINT) * d * 1000000) // (a + b + c + d))
              AS num,
@@ -7579,35 +7491,11 @@ object SparkEntry {
              / (sqrt(CAST(c0.cxx AS DOUBLE)) * sqrt(CAST(c0.cyy
                  AS DOUBLE))) END, 4) + 0.0 AS ccf
        FROM l LEFT JOIN ch ON ch.lag = l.lag CROSS JOIN c0""",
-    // q269: mirrors Events.rmst — q120's day relation and ln/exp chain,
+    // q269: mirrors Events.rmst — `kmLogStepCtes`' ln/exp chain,
     // step-function integral over ordered windows, last row by max_by
     // on the unique day key, tau = 30.
     "q269_rmst" ->
-      """WITH ev AS (SELECT user_id, event_type,
-           CAST(ts AS TIMESTAMP) AS ts FROM events),
-         st AS (SELECT user_id, min(ts) AS t0 FROM ev
-           WHERE event_type = 'signup' GROUP BY 1),
-         fe AS (SELECT e.user_id, min(e.ts) AS te
-           FROM ev e JOIN st ON st.user_id = e.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > st.t0 GROUP BY 1),
-         hz AS (SELECT max(ts) AS tmax FROM ev),
-         dur AS (SELECT
-             CASE WHEN te IS NOT NULL THEN 1 ELSE 0 END AS obs,
-             (epoch_us(COALESCE(te, tmax)) // 1000000
-               - epoch_us(t0) // 1000000) // 86400 AS d
-           FROM st LEFT JOIN fe USING (user_id) CROSS JOIN hz),
-         byd AS (SELECT d, count(*) AS n_at,
-             CAST(sum(obs) AS BIGINT) AS e_at
-           FROM dur GROUP BY 1),
-         r AS (SELECT d, n_at, e_at,
-             CAST(sum(n_at) OVER (ORDER BY d ASC
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-               AS BIGINT) AS n_risk
-           FROM byd),
-         lt AS (SELECT d, n_at, e_at, n_risk,
-             CASE WHEN e_at < n_risk
-               THEN ln(1.0 - CAST(e_at AS DOUBLE) / n_risk) END AS t
-           FROM r),
+      s"""WITH $kmLogStepCtes,
          c AS (SELECT d, n_at,
              CASE WHEN e_at = n_risk THEN 0.0
                ELSE exp(sum(t) OVER wi) END AS surv
@@ -7895,35 +7783,11 @@ object SparkEntry {
            (round(CAST(excess_sum_tenk AS DOUBLE) / 500000.0, 4)
              + 0.0) <= 0.7 AS reliable
          FROM ex CROSS JOIN n WHERE n_top = 50""",
-    // q298: mirrors Events.weibullFit — the q269 KM prefix, the
+    // q298: mirrors Events.weibullFit — the `kmLogStepCtes` KM prefix, the
     // ln/ln(-ln) transform over its day knots, ordered-window OLS
     // moments (the q262 sequential-sum discipline), closed-form tail.
     "q298_weibull_fit" ->
-      """WITH ev AS (SELECT user_id, event_type,
-           CAST(ts AS TIMESTAMP) AS ts FROM events),
-         st AS (SELECT user_id, min(ts) AS t0 FROM ev
-           WHERE event_type = 'signup' GROUP BY 1),
-         fe AS (SELECT e.user_id, min(e.ts) AS te
-           FROM ev e JOIN st ON st.user_id = e.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > st.t0 GROUP BY 1),
-         hz AS (SELECT max(ts) AS tmax FROM ev),
-         dur AS (SELECT
-             CASE WHEN te IS NOT NULL THEN 1 ELSE 0 END AS obs,
-             (epoch_us(COALESCE(te, tmax)) // 1000000
-               - epoch_us(t0) // 1000000) // 86400 AS d
-           FROM st LEFT JOIN fe USING (user_id) CROSS JOIN hz),
-         byd AS (SELECT d, count(*) AS n_at,
-             CAST(sum(obs) AS BIGINT) AS e_at
-           FROM dur GROUP BY 1),
-         r AS (SELECT d, n_at, e_at,
-             CAST(sum(n_at) OVER (ORDER BY d ASC
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-               AS BIGINT) AS n_risk
-           FROM byd),
-         lt AS (SELECT d, e_at, n_risk,
-             CASE WHEN e_at < n_risk
-               THEN ln(1.0 - CAST(e_at AS DOUBLE) / n_risk) END AS t
-           FROM r),
+      s"""WITH $kmLogStepCtes,
          c AS (SELECT d,
              CASE WHEN e_at = n_risk THEN 0.0
                ELSE exp(sum(t) OVER wi) END AS surv
@@ -7963,23 +7827,11 @@ object SparkEntry {
            CASE WHEN n >= 2 AND denx > 0 AND deny > 0
              THEN round(num * num / (denx * deny), 4) + 0.0 END AS r2
          FROM j2""",
-    // q295: mirrors Events.rmstDiff — the q269 KM/RMST chain per
-    // (jackknife block, arm), round-4 RMSTs to exact micros, exact
-    // jackknife moments, one mirrored se/CI expression.
+    // q295: mirrors Events.rmstDiff — `survivalCtes` durations, the q269
+    // KM/RMST chain per (jackknife block, arm), round-4 RMSTs to exact
+    // micros, exact jackknife moments, one mirrored se/CI expression.
     "q295_rmst_diff" ->
-      """WITH ev AS (SELECT user_id, event_type,
-           CAST(ts AS TIMESTAMP) AS ts FROM events),
-         st AS (SELECT user_id, min(ts) AS t0 FROM ev
-           WHERE event_type = 'signup' GROUP BY 1),
-         fe AS (SELECT e.user_id, min(e.ts) AS te
-           FROM ev e JOIN st ON st.user_id = e.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > st.t0 GROUP BY 1),
-         hz AS (SELECT max(ts) AS tmax FROM ev),
-         dur AS (SELECT (user_id % 2 = 1) AS arm,
-             CASE WHEN te IS NOT NULL THEN 1 ELSE 0 END AS obs,
-             (epoch_us(COALESCE(te, tmax)) // 1000000
-               - epoch_us(t0) // 1000000) // 86400 AS d
-           FROM st LEFT JOIN fe USING (user_id) CROSS JOIN hz),
+      s"""WITH ${survivalCtes(keep = "(user_id % 2 = 1) AS arm,")},
          byd AS (SELECT arm, d, count(*) AS n_at,
              CAST(sum(obs) AS BIGINT) AS e_at
            FROM dur GROUP BY 1, 2),
@@ -8117,40 +7969,7 @@ object SparkEntry {
       channels = Seq("click", "error", "signup", "view"),
       gapSeconds = 1800L),
     "q262_km_greenwood" ->
-      """WITH ev AS (SELECT user_id, event_type,
-           CAST(ts AS TIMESTAMP) AS ts FROM events),
-         st AS (SELECT user_id, min(ts) AS t0 FROM ev
-           WHERE event_type = 'signup' GROUP BY 1),
-         fe AS (SELECT e.user_id, min(e.ts) AS te
-           FROM ev e JOIN st ON st.user_id = e.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > st.t0 GROUP BY 1),
-         hz AS (SELECT max(ts) AS tmax FROM ev),
-         dur AS (SELECT
-             CASE WHEN te IS NOT NULL THEN 1 ELSE 0 END AS obs,
-             (epoch_us(COALESCE(te, tmax)) // 1000000
-               - epoch_us(t0) // 1000000) // 86400 AS d
-           FROM st LEFT JOIN fe USING (user_id) CROSS JOIN hz),
-         byd AS (SELECT d, count(*) AS n_at,
-             CAST(sum(obs) AS BIGINT) AS e_at
-           FROM dur GROUP BY 1),
-         r AS (SELECT d, n_at, e_at,
-             CAST(sum(n_at) OVER (ORDER BY d ASC
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-               AS BIGINT) AS n_risk
-           FROM byd),
-         g AS (SELECT d, e_at, n_risk,
-             CASE WHEN e_at < n_risk
-               THEN ln(1.0 - CAST(e_at AS DOUBLE) / n_risk) END AS t,
-             CASE WHEN e_at < n_risk
-               THEN CAST(e_at AS DOUBLE)
-                 / (CAST(n_risk AS DOUBLE) * (n_risk - e_at)) END AS gt
-           FROM r),
-         c AS (SELECT d, n_risk, e_at,
-             CASE WHEN e_at = n_risk THEN 0.0
-                  ELSE exp(sum(t) OVER wp) END AS sraw,
-             sum(gt) OVER wp AS gw
-           FROM g WINDOW wp AS (ORDER BY d ASC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+      s"""WITH $greenwoodCtes
          SELECT d AS duration_days, n_risk, e_at AS n_events,
            round(sraw, 4) AS surv,
            CASE WHEN e_at < n_risk
@@ -8162,44 +7981,11 @@ object SparkEntry {
              THEN round(LEAST(1.0,
                sraw + 1.959964 * (sraw * sqrt(gw))), 4) END AS ci_hi
          FROM c""",
-    // q310: mirrors Events.kmMedian — q262's CTEs verbatim, threshold
+    // q310: mirrors Events.kmMedian — q262's `greenwoodCtes`, threshold
     // tests on the ROUND-4 curve/band columns, integer day mins, the
     // saturated day counted via its surv = 0.
     "q310_km_median" ->
-      """WITH ev AS (SELECT user_id, event_type,
-           CAST(ts AS TIMESTAMP) AS ts FROM events),
-         st AS (SELECT user_id, min(ts) AS t0 FROM ev
-           WHERE event_type = 'signup' GROUP BY 1),
-         fe AS (SELECT e.user_id, min(e.ts) AS te
-           FROM ev e JOIN st ON st.user_id = e.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > st.t0 GROUP BY 1),
-         hz AS (SELECT max(ts) AS tmax FROM ev),
-         dur AS (SELECT
-             CASE WHEN te IS NOT NULL THEN 1 ELSE 0 END AS obs,
-             (epoch_us(COALESCE(te, tmax)) // 1000000
-               - epoch_us(t0) // 1000000) // 86400 AS d
-           FROM st LEFT JOIN fe USING (user_id) CROSS JOIN hz),
-         byd AS (SELECT d, count(*) AS n_at,
-             CAST(sum(obs) AS BIGINT) AS e_at
-           FROM dur GROUP BY 1),
-         r AS (SELECT d, n_at, e_at,
-             CAST(sum(n_at) OVER (ORDER BY d ASC
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-               AS BIGINT) AS n_risk
-           FROM byd),
-         g AS (SELECT d, e_at, n_risk,
-             CASE WHEN e_at < n_risk
-               THEN ln(1.0 - CAST(e_at AS DOUBLE) / n_risk) END AS t,
-             CASE WHEN e_at < n_risk
-               THEN CAST(e_at AS DOUBLE)
-                 / (CAST(n_risk AS DOUBLE) * (n_risk - e_at)) END AS gt
-           FROM r),
-         c AS (SELECT d, n_risk, e_at,
-             CASE WHEN e_at = n_risk THEN 0.0
-                  ELSE exp(sum(t) OVER wp) END AS sraw,
-             sum(gt) OVER wp AS gw
-           FROM g WINDOW wp AS (ORDER BY d ASC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+      s"""WITH $greenwoodCtes,
          fin AS (SELECT d, n_risk, e_at, round(sraw, 4) AS surv,
              CASE WHEN e_at < n_risk
                THEN round(GREATEST(0.0,
@@ -8242,14 +8028,10 @@ object SparkEntry {
            vocab + CAST((CAST(n1 AS HUGEINT) * (n1 - 1))
              // (2 * (n2 + 1)) AS BIGINT) AS chao1
          FROM g""",
-    "q257_session_markov_funnel" -> {
-      // the q220 unrolled-step shape over SESSION-LOCAL pairs with an
-      // absorbing 'purchase'; epoch(date_trunc('second', ts)) mirrors
-      // Spark's flooring unix_timestamp at ROW level (q246 idiom).
-      // Each step CTE is read twice (carry + increment join) ->
-      // MATERIALIZED (the q192 inlining hazard).
-      val head =
-        """seq AS (SELECT user_id, event_type AS from_type,
+    // q257: epoch(date_trunc('second', ts)) mirrors Spark's flooring
+    // unix_timestamp at ROW level (q246 idiom).
+    "q257_session_markov_funnel" -> OracleGen.sessionMarkovFunnelSql(
+      """seq AS (SELECT user_id, event_type AS from_type,
              lead(event_type) OVER w AS to_type,
              CAST(epoch(date_trunc('second', lead(ts) OVER w)) AS BIGINT)
                - CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS gap
@@ -8258,40 +8040,9 @@ object SparkEntry {
              ORDER BY ts ASC, event_id ASC)),
          pr AS (SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
            FROM seq WHERE to_type IS NOT NULL AND gap <= 1800
-             AND from_type <> 'purchase' GROUP BY 1, 2),
-         t AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS tot FROM pr
-           GROUP BY 1),
-         p AS MATERIALIZED (SELECT pr.from_type, to_type,
-             (n * 1000000) // tot AS p_micros
-           FROM pr JOIN t ON pr.from_type = t.from_type),
-         pc AS MATERIALIZED (SELECT from_type AS state,
-             COALESCE(max(CASE WHEN to_type = 'purchase'
-               THEN p_micros END), 0) AS pconv
-           FROM p GROUP BY 1),
-         q AS (SELECT from_type, to_type, p_micros FROM p
-           WHERE to_type <> 'purchase'),
-         s1 AS MATERIALIZED (SELECT state, pconv AS c,
-           CAST(0 AS BIGINT) AS sacc FROM pc)"""
-      val stepCtes = (2 to 8).map { h =>
-        s"""s$h AS MATERIALIZED (SELECT pc.state,
-             pc.pconv + COALESCE(inc.i, 0) AS c,
-             pr.sacc + pr.c AS sacc
-           FROM pc JOIN s${h - 1} pr ON pr.state = pc.state
-           LEFT JOIN (SELECT q.from_type AS st,
-               CAST(sum((q.p_micros * cc.c) // 1000000) AS BIGINT) AS i
-             FROM q JOIN s${h - 1} cc ON cc.state = q.to_type
-             GROUP BY 1) inc ON inc.st = pc.state)"""
-      }.mkString(",\n         ")
-      s"""WITH $head,
-         $stepCtes
-         SELECT state, CAST(c AS BIGINT) AS conv_micros,
-           CASE WHEN c > 0
-             THEN CAST((1000000 * (8 * c - sacc)) // c AS BIGINT)
-           END AS exp_steps_cond_micros
-         FROM s8"""
-    },
-    "q251_degree_powerlaw" ->
-      """WITH ev AS (SELECT user_id, event_id,
+             AND from_type <> 'purchase' GROUP BY 1, 2)"""),
+    "q251_degree_powerlaw" -> hillTailSql(
+      """ev AS (SELECT user_id, event_id,
              TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
            FROM events),
          tr AS (SELECT lag(k) OVER (PARTITION BY user_id
@@ -8299,25 +8050,9 @@ object SparkEntry {
            FROM ev WHERE k IS NOT NULL),
          edges AS (SELECT src, dst FROM tr WHERE src IS NOT NULL
            GROUP BY 1, 2),
-         deg AS (SELECT 'out_degree' AS grp,
+         base AS (SELECT 'out_degree' AS grp,
              CAST(count(*) AS BIGINT) * 100 AS cents, src AS id
-           FROM edges GROUP BY src),
-         pos AS (SELECT * FROM deg WHERE cents > 0),
-         rk AS (SELECT grp, cents, row_number() OVER (PARTITION BY grp
-             ORDER BY cents DESC, id ASC) AS rk FROM pos),
-         ref AS (SELECT grp, cents AS x_ref FROM rk WHERE rk = 51),
-         tm AS (SELECT r.grp, CAST(round(ln(CAST(r.cents AS DOUBLE)
-               / CAST(ref.x_ref AS DOUBLE)) * 1000000.0) AS BIGINT)
-               AS lm
-           FROM rk r JOIN ref ON ref.grp = r.grp WHERE r.rk <= 50),
-         a AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_top,
-             CAST(sum(lm) AS BIGINT) AS hill_sum_micros
-           FROM tm GROUP BY 1)
-         SELECT grp, CAST(50 AS BIGINT) AS k, hill_sum_micros,
-           CASE WHEN hill_sum_micros > 0
-             THEN round(50.0 * 1000000.0
-               / CAST(hill_sum_micros AS DOUBLE), 4) END AS alpha
-         FROM a WHERE n_top = 50""",
+           FROM edges GROUP BY src)"""),
     "q252_new_vs_returning" ->
       """WITH pres AS (SELECT user_id AS u,
              CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400
@@ -8431,10 +8166,7 @@ object SparkEntry {
       val ws = Events.ewmaWeightsMicros(0.3, 14)
       val terms = ws.zipWithIndex.map { case (wk, k) =>
         s"$wk * lag(y, ${k + 1}) OVER w" }.mkString(" + ")
-      s"""WITH daily AS (SELECT event_type AS grp,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400
-               AS day, CAST(count(*) AS BIGINT) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${OracleGen.dailyCte("grp")},
          fc AS (SELECT grp, y,
              CAST(row_number() OVER w AS BIGINT) AS rk,
              CAST($terms AS BIGINT) AS f_micros
@@ -8471,10 +8203,7 @@ object SparkEntry {
                AS BIGINT) END AS stickiness_micros
          FROM fan GROUP BY 1""",
     "q244_hodges_lehmann" ->
-      """WITH daily AS (SELECT event_type AS grp,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400
-               AS day, CAST(count(*) AS BIGINT) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${OracleGen.dailyCte("grp")},
          pairs AS (SELECT a.grp, a.day AS d1, b.day AS d2,
              a.y + b.y AS w2
            FROM daily a JOIN daily b ON a.grp = b.grp
@@ -8496,10 +8225,7 @@ object SparkEntry {
            250000 * hl_x4 AS hl_micros
          FROM mid JOIN nd ON nd.grp = mid.grp""",
     "q245_runs_test" ->
-      """WITH daily AS (SELECT event_type AS grp,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400
-               AS day, CAST(count(*) AS BIGINT) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${OracleGen.dailyCte("grp")},
          nd AS (SELECT grp, CAST(count(*) AS BIGINT) AS nd
            FROM daily GROUP BY 1),
          rk AS (SELECT grp, y, day,
@@ -8644,10 +8370,7 @@ object SparkEntry {
              END AS r2
          FROM d""",
     "q239_overdispersion" ->
-      """WITH daily AS (SELECT event_type AS grp,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) // 86400
-               AS day, CAST(count(*) AS BIGINT) AS y
-           FROM events GROUP BY 1, 2),
+      s"""WITH ${OracleGen.dailyCte("grp")},
          m AS (SELECT grp, CAST(count(*) AS BIGINT) AS n,
              CAST(sum(y) AS BIGINT) AS sy,
              sum(CAST(y AS HUGEINT) * y) AS syy
@@ -8983,31 +8706,7 @@ object SparkEntry {
            - (m_c_post_micros - m_c_pre_micros) AS did_micros
          FROM piv""",
     "q120_kaplan_meier" ->
-      """WITH ev AS (SELECT user_id, event_type,
-           CAST(ts AS TIMESTAMP) AS ts FROM events),
-         st AS (SELECT user_id, min(ts) AS t0 FROM ev
-           WHERE event_type = 'signup' GROUP BY 1),
-         fe AS (SELECT e.user_id, min(e.ts) AS te
-           FROM ev e JOIN st ON st.user_id = e.user_id
-           WHERE e.event_type = 'purchase' AND e.ts > st.t0 GROUP BY 1),
-         hz AS (SELECT max(ts) AS tmax FROM ev),
-         dur AS (SELECT
-             CASE WHEN te IS NOT NULL THEN 1 ELSE 0 END AS obs,
-             (epoch_us(COALESCE(te, tmax)) // 1000000
-               - epoch_us(t0) // 1000000) // 86400 AS d
-           FROM st LEFT JOIN fe USING (user_id) CROSS JOIN hz),
-         byd AS (SELECT d, count(*) AS n_at,
-             CAST(sum(obs) AS BIGINT) AS e_at
-           FROM dur GROUP BY 1),
-         r AS (SELECT d, n_at, e_at,
-             CAST(sum(n_at) OVER (ORDER BY d ASC
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-               AS BIGINT) AS n_risk
-           FROM byd),
-         lt AS (SELECT d, e_at, n_risk,
-             CASE WHEN e_at < n_risk
-               THEN ln(1.0 - CAST(e_at AS DOUBLE) / n_risk) END AS t
-           FROM r)
+      s"""WITH $kmLogStepCtes
          SELECT d AS duration_days, n_risk, e_at AS n_events,
            CASE WHEN e_at = n_risk THEN 0.0
                 ELSE round(exp(sum(t) OVER (ORDER BY d ASC

@@ -123,10 +123,14 @@ object Stages {
     * inner), drop helper columns.
     *
     * Scale: prop is the dimension side (unique on PropertyID) →
-    * broadcastable per county, but national-scale prop exceeds broadcast —
-    * all four tables share the PropertyID shuffle key, so Catalyst plans
-    * one Exchange per side and reuses the fact side's partitioning across
-    * the three joins (verified in PLANS.md).
+    * broadcastable per county, but national-scale prop exceeds broadcast.
+    * Without broadcast the plan has SIX exchanges, not one per side:
+    * prop is shuffled twice on PropertyID, once for the m:1 guard's
+    * window and once for the join, because the guard's `CASE WHEN`
+    * rewrites the key column; ranked_valhist is shuffled for the prop
+    * join; and the joined fact side is shuffled again on (PropertyID,
+    * Year) for the deed and taxhist joins, each of whose right sides is
+    * shuffled once on its (PropertyID, year) keys.
     *
     * The prop join enforces the reference's `validate='m:1'` intent
     * (fa-etl.py:464): a duplicated PropertyID in prop would silently fan

@@ -52,7 +52,6 @@ object DataQuality {
     * order (stable output for golden checks). */
   def check(df: DataFrame, constraints: Seq[Constraint]): DataFrame = {
     require(constraints.nonEmpty, "need at least one constraint")
-    val spark = df.sparkSession
     val rowLocal = constraints.collect {
       case c: NotNull => c.name -> col(c.col).isNull
       case c: RangeIn =>
@@ -361,12 +360,7 @@ object DataQuality {
     * two combinable aggs. */
   def mannKendall(events: DataFrame, groupCol: String, tsCol: String)
       : DataFrame = {
-    val daily = events
-      .select(col(groupCol).as("grp"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .groupBy(col("grp"), col("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = Events.dailyCounts(events, col(groupCol).as("grp"), tsCol)
       .localCheckpoint(eager = false)
     val pairs = daily.select(col("grp"), col("day").as("d1"),
         col("y").as("y1"))
@@ -622,12 +616,7 @@ object DataQuality {
     * per-group moment agg — output is |groups| rows. */
   def overdispersion(events: DataFrame, groupCol: String,
                      tsCol: String): DataFrame = {
-    val daily = events
-      .select(col(groupCol).as("grp"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .groupBy(col("grp"), col("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = Events.dailyCounts(events, col(groupCol).as("grp"), tsCol)
     val m = daily.groupBy(col("grp")).agg(
       count(lit(1)).as("n"), sum(col("y")).as("sy"),
       sum(expr("cast(y as decimal(38,0)) * y")).as("syy"))
@@ -664,8 +653,7 @@ object DataQuality {
                  tsCol: String): DataFrame = {
     val daily = events
       .select(col(groupCol).as("grp"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"), col(userCol).as("u"))
+        Events.dayIndex(tsCol).as("day"), col(userCol).as("u"))
       .groupBy(col("grp"), col("day"))
       .agg(count(lit(1)).as("x"), count_distinct(col("u")).as("y"))
       .localCheckpoint(eager = false)
@@ -716,12 +704,7 @@ object DataQuality {
     * window over each group's pairs. */
   def hodgesLehmann(events: DataFrame, groupCol: String, tsCol: String)
       : DataFrame = {
-    val daily = events
-      .select(col(groupCol).as("grp"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .groupBy(col("grp"), col("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = Events.dailyCounts(events, col(groupCol).as("grp"), tsCol)
       .localCheckpoint(eager = false)
     val pairs = daily.select(col("grp"), col("day").as("d1"),
         col("y").as("y1"))
@@ -766,12 +749,7 @@ object DataQuality {
     * over per-group DAILY rows (the q153 tiny-partition class). */
   def runsTest(events: DataFrame, groupCol: String, tsCol: String)
       : DataFrame = {
-    val daily = events
-      .select(col(groupCol).as("grp"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .groupBy(col("grp"), col("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = Events.dailyCounts(events, col(groupCol).as("grp"), tsCol)
       .localCheckpoint(eager = false)
     val wMed = org.apache.spark.sql.expressions.Window
       .partitionBy(col("grp"))
@@ -931,12 +909,7 @@ object DataQuality {
     * one combinable flag agg. */
   def iqrOutlierDays(events: DataFrame, groupCol: String,
                      tsCol: String): DataFrame = {
-    val daily = events
-      .select(col(groupCol).as("grp"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .groupBy(col("grp"), col("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = Events.dailyCounts(events, col(groupCol).as("grp"), tsCol)
       .localCheckpoint(eager = false)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("grp")).orderBy(col("y").asc, col("day").asc)
@@ -2332,12 +2305,7 @@ object DataQuality {
     require(baselineDays >= 1, "baselineDays must be >= 1")
     require(slackMicros >= 0 && thresholdMicros >= 0,
       "slack and threshold must be >= 0")
-    val daily = events
-      .select(col(groupCol).as("g"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .groupBy(col("g"), col("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = Events.dailyCounts(events, col(groupCol).as("g"), tsCol)
     val start = daily.groupBy(col("g")).agg(min(col("day")).as("d0"))
     val target = daily.join(start, Seq("g"))
       .filter(col("day") < col("d0") + baselineDays)

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, Observation}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SimHash64.simhash64
 
@@ -1463,29 +1462,22 @@ object Dedup {
     * exceed) instead of the full O(len²) table.
     *
     * Scale notes: length blocking alone is weak on fixed-format corpora
-    * (all same length ⇒ one bucket = all-pairs); pass `extraBlocking`
-    * (e.g. a prefix, a phonetic key, a rare-q-gram key) to subdivide —
-    * it must itself be edit-distance-stable for completeness. For long
+    * (all same length ⇒ one bucket = all-pairs);
+    * [[editDistancePairsSegmented]] subdivides by content. For long
     * TEXT near-dup use the jaccard/minhash family instead; edit distance
     * is the short-key tool (names, addresses, ids). */
   def editDistancePairs(df: DataFrame, idCol: String, strCol: String,
-                        maxDist: Int,
-                        extraBlocking: Option[Column] = None): DataFrame = {
+                        maxDist: Int): DataFrame = {
     require(maxDist >= 0, "maxDist must be >= 0")
-    val blockCol = extraBlocking.getOrElse(lit(0))
     val base = df.select(col(idCol).as("id"), col(strCol).as("s"),
-      blockCol.as("blk"))
+      lit(0).as("blk"))
     val replicated = base.select(col("id"), col("s"), col("blk"),
       explode(sequence(length(col("s")),
         length(col("s")) + lit(maxDist))).as("len_key"))
     val probes = base.select(col("id").as("id_r"), col("s").as("s_r"),
       col("blk").as("blk_r"), length(col("s")).as("len_key_r"))
-    // blk uses NULL-SAFE equality: a blocking expression that returns
-    // null (phonetic key of an empty string, prefix of a null) must still
-    // pair those rows with each other, or recall silently drops and the
-    // completeness claim breaks. (Null STRINGS produce no pairs either
-    // way — levenshtein over null is null — which is the documented
-    // behavior for missing keys.)
+    // null STRINGS produce no pairs — levenshtein over null is null —
+    // which is the documented behavior for missing keys
     // verify before deduplicating — see [[editDistancePairsSegmented]]
     // (r17): the distinct exchange then carries only verified pairs.
     replicated.join(probes,
@@ -2235,7 +2227,7 @@ object Dedup {
       .join(keptPerDoc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_windows"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(array_join(filter(col("t"), (word, i) =>
+        coalesce(array_join(filter(col("t"), (_, i) =>
           exists(col("starts"), st =>
             st <= i.cast("long") &&
               i.cast("long") < st + spanWords)), " "), lit(""))

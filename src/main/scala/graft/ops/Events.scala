@@ -38,6 +38,20 @@ object Events {
   def jsonField(c: Column, path: String, as: DataType = LongType): Column =
     get_json_object(c, path).try_cast(as)
 
+  /** The calendar-day index of `tsCol`: days since the epoch of its
+    * day in the session timezone — the day key of every daily series. */
+  private[ops] def dayIndex(tsCol: String): Column =
+    expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
+
+  /** The daily event-count series: one row per (`group`, day) with y =
+    * the events on that day. `group` is a column of `events`, aliased
+    * as the caller names it. */
+  private[ops] def dailyCounts(events: DataFrame, group: Column,
+                               tsCol: String): DataFrame = {
+    val byDay = events.select(group, dayIndex(tsCol).as("day"))
+    byDay.groupBy(byDay.columns.map(col): _*).agg(count(lit(1)).as("y"))
+  }
+
   /** Tumbling-window aggregation over event time (the built-in
     * `window()` grouping). */
   def hourlyAgg(events: DataFrame): DataFrame =
@@ -153,18 +167,16 @@ object Events {
     * The as-of composition ([[Joins.asOfJoinBackward]]) remains the form
     * for NON-tiling right sides. */
   def pointInTimeJoin(facts: DataFrame, history: DataFrame,
-                      keys: Seq[String], factTs: String,
-                      validFrom: String = "valid_from",
-                      validTo: String = "valid_to"): DataFrame = {
+                      keys: Seq[String], factTs: String): DataFrame = {
     val renamed = keys.foldLeft(history)((df, k) =>
       df.withColumnRenamed(k, s"__pit_$k"))
     facts.join(renamed,
         keys.map(k => facts(k) === renamed(s"__pit_$k")).reduce(_ && _) &&
-          col(validFrom) <= col(factTs) &&
-          (col(validTo).isNull || col(factTs) < col(validTo)),
+          col("valid_from") <= col(factTs) &&
+          (col("valid_to").isNull || col(factTs) < col("valid_to")),
         "left")
       .drop(keys.map(k => s"__pit_$k"): _*)
-      .drop(validFrom, validTo)
+      .drop("valid_from", "valid_to")
   }
 
   /** ROBUST OUTLIERS via Median Absolute Deviation — the heavy-tail-safe
@@ -220,12 +232,7 @@ object Events {
     * subsample days — the standard Theil–Sen scale moves. */
   def theilSenTrend(events: DataFrame, groupCol: String, tsCol: String)
       : DataFrame = {
-    val daily = events
-      .select(col(groupCol),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .groupBy(col(groupCol), col("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyCounts(events, col(groupCol), tsCol)
     val a = daily.select(col(groupCol), col("day").as("d1"), col("y").as("y1"))
     val b = daily.select(col(groupCol), col("day").as("d2"), col("y").as("y2"))
     a.join(b, groupCol)
@@ -332,6 +339,22 @@ object Events {
           (col("m_c_post_micros") - col("m_c_pre_micros")))
   }
 
+  /** Per-stratum arm cells of [[stratifiedAte]] and [[commonSupport]]:
+    * (stratum, n_t, n_c, s_t, s_c) = event counts and cent sums of the
+    * treated (odd user id) and control arms, null for a missing arm. */
+  private def stratumArms(events: DataFrame, stratCol: String,
+                          userCol: String, valCol: String): DataFrame =
+    events.select(col(stratCol).as("stratum"),
+        (col(userCol) % 2 === 1).as("treated"),
+        round(col(valCol) * 100).cast(LongType).as("cents"))
+      .groupBy(col("stratum"), col("treated"))
+      .agg(count(lit(1)).as("cn"), sum(col("cents")).as("cs"))
+      .groupBy(col("stratum"))
+      .agg(max(when(col("treated"), col("cn"))).as("n_t"),
+        max(when(!col("treated"), col("cn"))).as("n_c"),
+        max(when(col("treated"), col("cs"))).as("s_t"),
+        max(when(!col("treated"), col("cs"))).as("s_c"))
+
   /** STRATIFIED (blocked / post-stratified) ATE estimator — the
     * propensity-stratification workhorse (Imbens & Rubin 2015 ch. 17;
     * with strata as propensity-score blocks this is Rosenbaum & Rubin
@@ -362,16 +385,7 @@ object Events {
     * the first agg. */
   def stratifiedAte(events: DataFrame, stratCol: String, userCol: String,
                     valCol: String): DataFrame = {
-    val per = events.select(col(stratCol).as("stratum"),
-        (col(userCol) % 2 === 1).as("treated"),
-        round(col(valCol) * 100).cast(LongType).as("cents"))
-      .groupBy(col("stratum"), col("treated"))
-      .agg(count(lit(1)).as("cn"), sum(col("cents")).as("cs"))
-      .groupBy(col("stratum"))
-      .agg(max(when(col("treated"), col("cn"))).as("n_t"),
-        max(when(!col("treated"), col("cn"))).as("n_c"),
-        max(when(col("treated"), col("cs"))).as("s_t"),
-        max(when(!col("treated"), col("cs"))).as("s_c"))
+    val per = stratumArms(events, stratCol, userCol, valCol)
       .select(col("stratum"),
         (coalesce(col("n_t"), lit(0L)) + coalesce(col("n_c"), lit(0L)))
           .as("n"),
@@ -419,16 +433,7 @@ object Events {
   def commonSupport(events: DataFrame, stratCol: String, userCol: String,
                     valCol: String,
                     minRatioMicros: Long = 100000L): DataFrame = {
-    val per = events.select(col(stratCol).as("stratum"),
-        (col(userCol) % 2 === 1).as("treated"),
-        round(col(valCol) * 100).cast(LongType).as("cents"))
-      .groupBy(col("stratum"), col("treated"))
-      .agg(count(lit(1)).as("cn"), sum(col("cents")).as("cs"))
-      .groupBy(col("stratum"))
-      .agg(max(when(col("treated"), col("cn"))).as("n_t"),
-        max(when(!col("treated"), col("cn"))).as("n_c"),
-        max(when(col("treated"), col("cs"))).as("s_t"),
-        max(when(!col("treated"), col("cs"))).as("s_c"))
+    val per = stratumArms(events, stratCol, userCol, valCol)
       .select(lit("stratum").as("scope"), col("stratum"),
         (coalesce(col("n_t"), lit(0L)) + coalesce(col("n_c"), lit(0L)))
           .as("n"),
@@ -788,17 +793,11 @@ object Events {
     * window, no join. */
   def dailyTrend(events: DataFrame, groupCol: String,
                  tsCol: String): DataFrame = {
-    val daily = events
-      .select(col(groupCol),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("x"))
-      .groupBy(col(groupCol), col("x"))
-      .agg(count(lit(1)).as("y"))
     val den = col("n") * col("sxx") - col("sx") * col("sx")
-    daily.groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-        sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"))
+    dailyCounts(events, col(groupCol), tsCol).groupBy(col(groupCol))
+      .agg(count(lit(1)).as("n"), sum(col("day")).as("sx"),
+        sum(col("y")).as("sy"), sum(col("day") * col("y")).as("sxy"),
+        sum(col("day") * col("day")).as("sxx"))
       .select(col(groupCol), col("n").as("n_days"),
         when(den =!= 0,
           round((col("n") * col("sxy") - col("sx") * col("sy"))
@@ -814,12 +813,7 @@ object Events {
                            tsCol: String, maxLag: Int = 3): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val daily = events
-      .select(col(groupCol),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .groupBy(col(groupCol), col("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyCounts(events, col(groupCol), tsCol)
     val lags = daily.crossJoin(
       broadcast(Seq.range(1, maxLag + 1).toDF("lag")))
     // b's group column is renamed: lags and b both derive from daily, so
@@ -880,12 +874,7 @@ object Events {
   def dailyPacf(events: DataFrame, groupCol: String, tsCol: String,
                 maxLag: Int = 4): DataFrame = {
     require(maxLag >= 1 && maxLag <= 6, "need 1 <= maxLag <= 6")
-    val daily = events
-      .select(col(groupCol).as("grp"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .groupBy(col("grp"), col("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyCounts(events, col(groupCol).as("grp"), tsCol)
     val st = daily.groupBy(col("grp"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("s"))
     val dev = daily.join(broadcast(st), Seq("grp"))
@@ -964,8 +953,7 @@ object Events {
     val daily = events
       .filter(col(typeCol).isin(typeX, typeY))
       .select(
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"),
+        dayIndex(tsCol).as("day"),
         (col(typeCol) === typeX).cast("long").as("ix"),
         (col(typeCol) === typeY).cast("long").as("iy"))
       .groupBy(col("day"))
@@ -1033,8 +1021,7 @@ object Events {
            idCol: String, valCol: String): DataFrame = {
     val base = events.select(col(groupCol).as("grp"),
       expr(s"unix_timestamp(date_trunc('second', $tsCol))").as("t"),
-      expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-        .as("day"),
+      dayIndex(tsCol).as("day"),
       col(idCol).as("eid"),
       round(col(valCol) * 100).cast("long").as("cents"))
     val w = org.apache.spark.sql.expressions.Window
@@ -1079,9 +1066,7 @@ object Events {
                       tsCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("u")).orderBy(col("day").asc)
-    val islands = events.select(col(userCol).as("u"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
+    val islands = events.select(col(userCol).as("u"), dayIndex(tsCol).as("day"))
       .distinct()
       .withColumn("isl", col("day") - dense_rank().over(w).cast("long"))
     val runs = islands.groupBy(col("u"), col("isl"))
@@ -1114,9 +1099,7 @@ object Events {
   def stickiness(events: DataFrame, userCol: String, tsCol: String,
                  windowDays: Int = 28): DataFrame = {
     require(windowDays >= 1, "windowDays must be >= 1")
-    val pairs = events.select(col(userCol).as("u"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
+    val pairs = events.select(col(userCol).as("u"), dayIndex(tsCol).as("day"))
       .distinct()
       .localCheckpoint(eager = false)
     val dau = pairs.groupBy(col("day")).agg(count(lit(1)).as("dau"))
@@ -1148,19 +1131,18 @@ object Events {
     * total gap (all same second) emit NULL, never NaN.
     *
     * Scale shape: one per-user lag window + one combinable moment
-    * agg. Output one row per qualifying user. `idCol` is the same-second
-    * ordering tie-break (any unique event key — the twap contract; gaps
-    * between same-second events are zero whichever tied event leads, so
-    * the moment sums are tie-insensitive). */
+    * agg. Output one row per qualifying user. `event_id` is the
+    * same-second ordering tie-break (any unique event key — the twap
+    * contract; gaps between same-second events are zero whichever tied
+    * event leads, so the moment sums are tie-insensitive). */
   def burstiness(events: DataFrame, userCol: String, tsCol: String,
-                 minEvents: Int = 5, idCol: String = "event_id")
-      : DataFrame = {
+                 minEvents: Int = 5): DataFrame = {
     require(minEvents >= 3, "minEvents must be >= 3")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("u")).orderBy(col("t").asc, col("eid").asc)
     val gaps = events.select(col(userCol).as("u"),
         expr(s"unix_timestamp(date_trunc('second', $tsCol))").as("t"),
-        col(idCol).as("eid"))
+        col("event_id").as("eid"))
       .withColumn("g", col("t") - lag(col("t"), 1).over(w))
       .filter(col("g").isNotNull)
     gaps.groupBy(col("u"))
@@ -1246,12 +1228,7 @@ object Events {
     * aggs, one group join. */
   def forecastBacktest(events: DataFrame, groupCol: String,
                        tsCol: String): DataFrame = {
-    val daily = events
-      .select(col(groupCol).as("grp"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .groupBy(col("grp"), col("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyCounts(events, col(groupCol).as("grp"), tsCol)
       .localCheckpoint(eager = false)
     def baseline(lagDays: Int, tag: String): DataFrame =
       daily.join(daily.select(col("grp"),
@@ -1298,12 +1275,7 @@ object Events {
     * precedent), one combinable argmax. */
   def binsegChangepoint(events: DataFrame, groupCol: String,
                         tsCol: String): DataFrame = {
-    val daily = events
-      .select(col(groupCol).as("grp"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .groupBy(col("grp"), col("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyCounts(events, col(groupCol).as("grp"), tsCol)
     val wCum = org.apache.spark.sql.expressions.Window
       .partitionBy(col("grp")).orderBy(col("day").asc)
       .rowsBetween(
@@ -1368,12 +1340,7 @@ object Events {
     * combinable (group, dow) agg broadcast back. */
   def seasonalDecompose(events: DataFrame, groupCol: String,
                         tsCol: String): DataFrame = {
-    val daily = events
-      .select(col(groupCol),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .groupBy(col(groupCol), col("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyCounts(events, col(groupCol), tsCol)
     val w7 = org.apache.spark.sql.expressions.Window
       .partitionBy(col(groupCol)).orderBy(col("day").asc)
       .rangeBetween(-3, 3)
@@ -1612,9 +1579,7 @@ object Events {
       "need segments >= 1 and 0 < p0 < p1 < 1")
     val (c1, c2, ua, lb) = sprtConstants(p0, p1, alpha, beta)
     val byDay = events
-      .select((col(userCol) % segments).as("seg"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"),
+      .select((col(userCol) % segments).as("seg"), dayIndex(tsCol).as("day"),
         when(col(typeCol) === convType, 1L).otherwise(0L).as("y"))
       .groupBy(col("seg"), col("day"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("k"))
@@ -1693,9 +1658,7 @@ object Events {
                       userCol: String, tsCol: String, success: Column,
                       looks: Int = 5, c: Double = 2.040): DataFrame = {
     val byDay = events
-      .select(col(groupCol).as("grp"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"),
+      .select(col(groupCol).as("grp"), dayIndex(tsCol).as("day"),
         (col(userCol) % 2 === 1).as("treated"),
         when(success, 1L).otherwise(0L).as("y"))
       .groupBy(col("grp"), col("day"), col("treated"))
@@ -1814,8 +1777,7 @@ object Events {
       : DataFrame = {
     val cents = round(col(valCol) * 100).cast("long")
     val byDay = events
-      .select(expr(s"unix_timestamp(date_trunc('day', $tsCol))" +
-        " div 86400").as("day"), cents.as("c"))
+      .select(dayIndex(tsCol).as("day"), cents.as("c"))
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n_d"), sum(col("c")).as("s_d"))
     val g = byDay
@@ -1867,13 +1829,7 @@ object Events {
     require(k >= 1 && k <= 1000 && p > 0 && p < 1,
       "need 1 <= k <= 1000 and 0 < p < 1")
     val weights = rboWeightsMicros(k, p)
-    val base = events.select(col(idCol).as("id"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .localCheckpoint(eager = false)
-    val bounds = base
-      .agg(min(col("day")).as("dmin"), max(col("day")).as("dmax"))
-      .select(expr("(dmin + dmax) div 2").as("mid"))
+    val (base, bounds) = halfSplit(events, idCol, tsCol)
     val counts = base.crossJoin(broadcast(bounds))
       .groupBy(col("id"), (col("day") <= col("mid")).as("p1"))
       .agg(count(lit(1)).as("c"))
@@ -1902,6 +1858,19 @@ object Events {
         coalesce(col("rbo"), lit(0L)).as("rbo_micros"))
   }
 
+  /** The two-halves split of [[topKRankChurn]] and [[captureRecapture]]:
+    * `base`(id, day), checkpointed, and the 1-row `bounds`(mid) whose
+    * day `mid` ends the first half of the observed day range. */
+  private def halfSplit(events: DataFrame, idCol: String,
+                        tsCol: String): (DataFrame, DataFrame) = {
+    val base = events.select(col(idCol).as("id"), dayIndex(tsCol).as("day"))
+      .localCheckpoint(eager = false)
+    val bounds = base
+      .agg(min(col("day")).as("dmin"), max(col("day")).as("dmax"))
+      .select(expr("(dmin + dmax) div 2").as("mid"))
+    (base, bounds)
+  }
+
   /** CAPTURE–RECAPTURE population estimate (Chapman 1951's
     * bias-corrected Lincoln–Petersen): treat the two window halves as
     * two independent "captures" of the user population; from
@@ -1922,13 +1891,7 @@ object Events {
     * q238 half-split bounds broadcast. */
   def captureRecapture(events: DataFrame, idCol: String, tsCol: String)
       : DataFrame = {
-    val base = events.select(col(idCol).as("id"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .localCheckpoint(eager = false)
-    val bounds = base
-      .agg(min(col("day")).as("dmin"), max(col("day")).as("dmax"))
-      .select(expr("(dmin + dmax) div 2").as("mid"))
+    val (base, bounds) = halfSplit(events, idCol, tsCol)
     val nhat = "cast(cast(na + 1 as decimal(38,0)) * (nb + 1)" +
       " div (m + 1) as bigint) - 1"
     base.crossJoin(broadcast(bounds)).groupBy(col("id"))
@@ -2033,12 +1996,7 @@ object Events {
     require(alpha > 0 && alpha < 1 && window >= 2,
       "need 0 < alpha < 1 and window >= 2")
     val ws = ewmaWeightsMicros(alpha, window)
-    val daily = events
-      .select(col(groupCol).as("grp"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .groupBy(col("grp"), col("day"))
-      .agg(count(lit(1)).as("y"))
+    val daily = dailyCounts(events, col(groupCol).as("grp"), tsCol)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("grp")).orderBy(col("day").asc)
     val fc = ws.zipWithIndex.map { case (wk, k) =>
@@ -2074,9 +2032,7 @@ object Events {
   def rollingActiveUsers(events: DataFrame, userCol: String,
                          tsCol: String): DataFrame = {
     val pres = events
-      .select(col(userCol).as("u"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
+      .select(col(userCol).as("u"), dayIndex(tsCol).as("day"))
       .distinct()
       .localCheckpoint(eager = false)
     val maxDay = pres.agg(max(col("day")).as("dmax"))
@@ -2115,9 +2071,7 @@ object Events {
   def newVsReturning(events: DataFrame, userCol: String, tsCol: String)
       : DataFrame = {
     val pres = events
-      .select(col(userCol).as("u"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
+      .select(col(userCol).as("u"), dayIndex(tsCol).as("day"))
       .groupBy(col("u"), col("day"))
       .agg(count(lit(1)).as("n_ev"))
       .localCheckpoint(eager = false)
@@ -2167,8 +2121,7 @@ object Events {
                            tsCol: String, valCol: String): DataFrame = {
     val cents = round(col(valCol) * 100).cast("long")
     val base = events.select(col(groupCol).as("seg"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"), cents.as("c"))
+        dayIndex(tsCol).as("day"), cents.as("c"))
       .localCheckpoint(eager = false)
     val bounds = base
       .agg(min(col("day")).as("dmin"), max(col("day")).as("dmax"))
@@ -2287,9 +2240,7 @@ object Events {
     val spark = events.sparkSession
     import spark.implicits._
     val perDay = events
-      .select(col(userCol),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
+      .select(col(userCol), dayIndex(tsCol).as("day"))
       .groupBy(col(userCol), col("day"))
       .agg(count(lit(1)).as("n"))
     val ref = perDay.agg(max(col("day")).as("ref"))
@@ -2422,41 +2373,68 @@ object Events {
   def centSum(money: Column): Column =
     sum(round(money * 100).cast(LongType)) / 100.0
 
-  /** KAPLAN–MEIER survival curve (Kaplan & Meier 1958) over the event
-    * log — the churn/conversion-lag statistic retention dashboards are
-    * built on: time-to-`eventType` from each user's first `startType`,
-    * with users who never convert CENSORED at the corpus horizon (the
-    * estimator's whole point — dropping them would bias survival down).
-    * Output: one row per distinct duration day,
-    * (duration_days, n_risk, n_events, surv) with
-    * `surv = Π_{d' ≤ d} (1 − events(d')/risk(d'))`.
-    *
-    * Determinism: durations are integer day counts (truncating division
-    * of exact epoch seconds); n_risk/n_events are exact counts; the
-    * product runs as exp(Σ ln(1 − e/n)) over an ORDERED cumulative
-    * frame (both engines accumulate in frame order), each term one ln
-    * of an integer-derived double — round(·,4) absorbs the ulp (the
-    * q85 ln-chain precedent). A risk set fully consumed by events
-    * (e = n, only possible at the last duration) short-circuits to
-    * surv = 0 rather than routing a −∞ through exp.
-    *
-    * Scale shape: two combinable per-user aggregations + one broadcast
-    * horizon; only the DISTINCT-DURATION table (≤ observation window in
-    * days — tiny by construction) goes through the single-partition
-    * ordered window (the q61 bucket-total precedent).
-    *
-    * TIMEZONE CONTRACT: the day-duration division assumes a fixed-offset
-    * session timezone (`spark.sql.session.timeZone=UTC`, as the
-    * deterministic-oracle pipeline pins). In a DST timezone a day
-    * spanning a transition is 86400±3600 s of epoch time and the
-    * truncating division mis-buckets the duration by one. */
+  /** The survival SPELL relation shared by the survival operators:
+    * one row per user with a `startType` event, holding t0 = the first
+    * start (plus `startAggs` over the start rows), one column per
+    * (type, name) of `ends` = the first event of that type STRICTLY
+    * after t0 (null when none came), and the corpus horizon tmax =
+    * max(ts), where a spell with no end is censored. */
+  private def survivalSpells(events: DataFrame, userCol: String,
+                             tsCol: String, typeCol: String,
+                             startType: String, ends: Seq[(String, String)],
+                             startAggs: Seq[Column] = Nil): DataFrame = {
+    val starts = events.filter(col(typeCol) === startType)
+      .groupBy(col(userCol)).agg(min(col(tsCol)).as("t0"), startAggs: _*)
+    ends.foldLeft(starts) { case (acc, (tp, out)) =>
+      acc.join(events.filter(col(typeCol) === tp)
+        .join(starts.select(col(userCol), col("t0")), Seq(userCol))
+        .filter(col(tsCol) > col("t0"))
+        .groupBy(col(userCol)).agg(min(col(tsCol)).as(out)),
+        Seq(userCol), "left")
+    }.join(broadcast(events.agg(max(col(tsCol)).as("tmax"))), lit(true))
+  }
+
+  /** [[survivalSpells]] with one end, `eventType`, as (`keep`, obs, d):
+    * obs = 1 when the event came, d = the spell in whole days up to
+    * the event or, censored, up to the horizon (see [[kaplanMeier]]'s
+    * TIMEZONE CONTRACT). */
+  private def survivalDurations(events: DataFrame, userCol: String,
+                                tsCol: String, typeCol: String,
+                                startType: String, eventType: String,
+                                startAggs: Seq[Column] = Nil,
+                                keep: Seq[Column] = Nil): DataFrame =
+    survivalSpells(events, userCol, tsCol, typeCol, startType,
+      Seq(eventType -> "te"), startAggs)
+      .select(keep ++ Seq(
+        when(col("te").isNotNull, lit(1L)).otherwise(lit(0L)).as("obs"),
+        expr("(unix_timestamp(coalesce(te, tmax)) - unix_timestamp(t0))" +
+          " div 86400").as("d")): _*)
+
+  /** The Kaplan–Meier day table over [[survivalDurations]]: one row per
+    * distinct duration day, (d, n_at, e_at, n_risk, __lt) with n_risk =
+    * the spells lasting at least d days and __lt = ln(1 − e_at/n_risk),
+    * the curve's log step (null on a saturated day, e_at = n_risk). */
+  private def kmSteps(events: DataFrame, userCol: String, tsCol: String,
+                      typeCol: String, startType: String,
+                      eventType: String): DataFrame =
+    survivalDurations(events, userCol, tsCol, typeCol, startType,
+      eventType)
+      .groupBy(col("d")).agg(count(lit(1)).as("n_at"),
+        sum(col("obs")).as("e_at"))
+      .withColumn("n_risk", sum(col("n_at")).over(
+        Window.orderBy(col("d").asc)
+          .rowsBetween(Window.currentRow, Window.unboundedFollowing)))
+      .withColumn("__lt",
+        when(col("e_at") < col("n_risk"),
+          log(lit(1.0) - col("e_at").cast("double") / col("n_risk"))))
+
   /** LOG-RANK TEST (Mantel 1966) — "do two cohorts convert/churn at
     * the same rate?" answered on the FULL survival curves, censoring
     * included, where a mean-duration t-test silently drops every user
     * who hasn't converted yet. Cohorts come from `cohortCol` (boolean:
-    * true = group 1); the relation under test is exactly the
-    * q120/q212 duration relation (first `startType` → first
-    * `eventType`, censored at the horizon). Output one row:
+    * true = group 1); the relation under test is
+    * [[survivalDurations]] (first `startType` → first `eventType`,
+    * censored at the horizon). Output one row:
     * (n1, n0, o1, e1_micros, v_micros, z) — O−E over the pooled
     * per-day risk sets, z = (O1 − E1)/√V, |z| ≳ 1.96 rejects equal
     * hazards.
@@ -2476,20 +2454,10 @@ object Events {
   def logRankTest(events: DataFrame, userCol: String, tsCol: String,
                   typeCol: String, startType: String, eventType: String,
                   cohortCol: Column): DataFrame = {
-    val starts = events.filter(col(typeCol) === startType)
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("t0"),
-        max(when(cohortCol, 1L).otherwise(0L)).as("g"))
-    val firstEv = events.filter(col(typeCol) === eventType)
-      .join(starts.select(col(userCol), col("t0")), Seq(userCol))
-      .filter(col(tsCol) > col("t0"))
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("te"))
-    val horizon = events.agg(max(col(tsCol)).as("tmax"))
-    val dur = starts.join(firstEv, Seq(userCol), "left")
-      .join(broadcast(horizon), lit(true))
-      .select(col("g"),
-        when(col("te").isNotNull, lit(1L)).otherwise(lit(0L)).as("obs"),
-        expr("(unix_timestamp(coalesce(te, tmax)) - unix_timestamp(t0))" +
-          " div 86400").as("d"))
+    val dur = survivalDurations(events, userCol, tsCol, typeCol,
+      startType, eventType,
+      startAggs = Seq(max(when(cohortCol, 1L).otherwise(0L)).as("g")),
+      keep = Seq(col("g")))
     val byD = dur.groupBy(col("d"))
       .agg(count(lit(1)).as("n_at"), sum(col("obs")).as("e_at"),
         sum(col("g")).as("n1_at"),
@@ -2534,8 +2502,9 @@ object Events {
     * expectations are formed WITHIN each stratum (a stratum-specific
     * baseline hazard is allowed to differ), then each group's
     * observed/expected/variance terms are summed across strata.
-    * Duration relation = exactly [[logRankTest]]'s (q219): first
-    * `startType` → first `eventType`, censored at the corpus horizon.
+    * Duration relation = [[survivalDurations]], as in [[logRankTest]]
+    * (q219): first `startType` → first `eventType`, censored at the
+    * corpus horizon.
     * Output one row per group: (grp, n_users, o_events, e_micros,
     * v_micros, z) with z_g = (O_g − E_g)/√V_g — the per-group
     * direction readout; for k = 2 and one stratum, group "1"'s row
@@ -2562,21 +2531,11 @@ object Events {
                      eventType: String, groupCol: Column,
                      strataCol: Column): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val starts = events.filter(col(typeCol) === startType)
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("t0"),
-        max(groupCol.cast("string")).as("grp"),
-        max(strataCol.cast("string")).as("str"))
-    val firstEv = events.filter(col(typeCol) === eventType)
-      .join(starts.select(col(userCol), col("t0")), Seq(userCol))
-      .filter(col(tsCol) > col("t0"))
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("te"))
-    val horizon = events.agg(max(col(tsCol)).as("tmax"))
-    val dur = starts.join(firstEv, Seq(userCol), "left")
-      .join(broadcast(horizon), lit(true))
-      .select(col("grp"), col("str"),
-        when(col("te").isNotNull, lit(1L)).otherwise(lit(0L)).as("obs"),
-        expr("(unix_timestamp(coalesce(te, tmax)) - unix_timestamp(t0))" +
-          " div 86400").as("d"))
+    val dur = survivalDurations(events, userCol, tsCol, typeCol,
+      startType, eventType,
+      startAggs = Seq(max(groupCol.cast("string")).as("grp"),
+        max(strataCol.cast("string")).as("str")),
+      keep = Seq(col("grp"), col("str")))
     val w = W.partitionBy(col("str")).orderBy(col("d").asc)
       .rowsBetween(W.currentRow, W.unboundedFollowing)
     val deathDays = dur.groupBy(col("str"), col("d"))
@@ -3280,41 +3239,45 @@ object Events {
         col("pair_effect_micros") - col("single_sum_micros"))
   }
 
+  /** KAPLAN–MEIER survival curve (Kaplan & Meier 1958) over the event
+    * log — the churn/conversion-lag statistic retention dashboards are
+    * built on: time-to-`eventType` from each user's first `startType`,
+    * with users who never convert CENSORED at the corpus horizon (the
+    * estimator's whole point — dropping them would bias survival down).
+    * Output: one row per distinct duration day,
+    * (duration_days, n_risk, n_events, surv) with
+    * `surv = Π_{d' ≤ d} (1 − events(d')/risk(d'))`.
+    *
+    * Determinism: durations are integer day counts (truncating division
+    * of exact epoch seconds); n_risk/n_events are exact counts; the
+    * product runs as exp(Σ ln(1 − e/n)) over an ORDERED cumulative
+    * frame (both engines accumulate in frame order), each term one ln
+    * of an integer-derived double — round(·,4) absorbs the ulp (the
+    * q85 ln-chain precedent). A risk set fully consumed by events
+    * (e = n, only possible at the last duration) short-circuits to
+    * surv = 0 rather than routing a −∞ through exp.
+    *
+    * Scale shape: two combinable per-user aggregations + one broadcast
+    * horizon; only the DISTINCT-DURATION table (≤ observation window in
+    * days — tiny by construction) goes through the single-partition
+    * ordered window (the q61 bucket-total precedent).
+    *
+    * TIMEZONE CONTRACT: the day-duration division assumes a fixed-offset
+    * session timezone (`spark.sql.session.timeZone=UTC`, as the
+    * deterministic-oracle pipeline pins). In a DST timezone a day
+    * spanning a transition is 86400±3600 s of epoch time and the
+    * truncating division mis-buckets the duration by one. */
   def kaplanMeier(events: DataFrame, userCol: String, tsCol: String,
                   typeCol: String, startType: String,
-                  eventType: String): DataFrame = {
-    val starts = events.filter(col(typeCol) === startType)
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("t0"))
-    val firstEv = events.filter(col(typeCol) === eventType)
-      .join(starts, Seq(userCol))
-      .filter(col(tsCol) > col("t0"))
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("te"))
-    val horizon = events.agg(max(col(tsCol)).as("tmax"))
-    val dur = starts.join(firstEv, Seq(userCol), "left")
-      .join(broadcast(horizon), lit(true))
-      .select(
-        when(col("te").isNotNull, lit(1L)).otherwise(lit(0L)).as("obs"),
-        expr("(unix_timestamp(coalesce(te, tmax)) - unix_timestamp(t0))" +
-          " div 86400").as("d"))
-    val byD = dur.groupBy(col("d")).agg(count(lit(1)).as("n_at"),
-      sum(col("obs")).as("e_at"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("d").asc)
-    byD
-      .withColumn("n_risk", sum(col("n_at")).over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window.currentRow,
-          org.apache.spark.sql.expressions.Window.unboundedFollowing)))
-      .withColumn("__lt",
-        when(col("e_at") < col("n_risk"),
-          log(lit(1.0) - col("e_at").cast("double") / col("n_risk"))))
+                  eventType: String): DataFrame =
+    kmSteps(events, userCol, tsCol, typeCol, startType, eventType)
       .withColumn("surv",
         when(col("e_at") === col("n_risk"), lit(0.0))
           .otherwise(round(exp(sum(col("__lt")).over(
-            w.rowsBetween(
-              org.apache.spark.sql.expressions.Window.unboundedPreceding,
-              org.apache.spark.sql.expressions.Window.currentRow))), 4)))
+            Window.orderBy(col("d").asc).rowsBetween(
+              Window.unboundedPreceding, Window.currentRow))), 4)))
       .select(col("d").as("duration_days"), col("n_risk"),
         col("e_at").as("n_events"), col("surv"))
-  }
 
   /** KAPLAN–MEIER with GREENWOOD confidence bands (Greenwood 1926) —
     * q120's survival curve plus the uncertainty a reader needs before
@@ -3338,33 +3301,10 @@ object Events {
   def kaplanMeierCi(events: DataFrame, userCol: String, tsCol: String,
                     typeCol: String, startType: String,
                     eventType: String): DataFrame = {
-    val starts = events.filter(col(typeCol) === startType)
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("t0"))
-    val firstEv = events.filter(col(typeCol) === eventType)
-      .join(starts, Seq(userCol))
-      .filter(col(tsCol) > col("t0"))
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("te"))
-    val horizon = events.agg(max(col(tsCol)).as("tmax"))
-    val dur = starts.join(firstEv, Seq(userCol), "left")
-      .join(broadcast(horizon), lit(true))
-      .select(
-        when(col("te").isNotNull, lit(1L)).otherwise(lit(0L)).as("obs"),
-        expr("(unix_timestamp(coalesce(te, tmax)) - unix_timestamp(t0))" +
-          " div 86400").as("d"))
-    val byD = dur.groupBy(col("d")).agg(count(lit(1)).as("n_at"),
-      sum(col("obs")).as("e_at"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("d").asc)
-    val wPrev = w.rowsBetween(
-      org.apache.spark.sql.expressions.Window.unboundedPreceding,
-      org.apache.spark.sql.expressions.Window.currentRow)
+    val wPrev = Window.orderBy(col("d").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val z = lit(1.959964)
-    val c = byD
-      .withColumn("n_risk", sum(col("n_at")).over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window.currentRow,
-          org.apache.spark.sql.expressions.Window.unboundedFollowing)))
-      .withColumn("__lt",
-        when(col("e_at") < col("n_risk"),
-          log(lit(1.0) - col("e_at").cast("double") / col("n_risk"))))
+    val c = kmSteps(events, userCol, tsCol, typeCol, startType, eventType)
       .withColumn("__gt",
         when(col("e_at") < col("n_risk"),
           col("e_at").cast("double") /
@@ -3451,33 +3391,10 @@ object Events {
            typeCol: String, startType: String, eventType: String,
            tauDays: Int): DataFrame = {
     require(tauDays >= 1, "need tauDays >= 1")
-    val starts = events.filter(col(typeCol) === startType)
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("t0"))
-    val firstEv = events.filter(col(typeCol) === eventType)
-      .join(starts, Seq(userCol))
-      .filter(col(tsCol) > col("t0"))
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("te"))
-    val horizon = events.agg(max(col(tsCol)).as("tmax"))
-    val dur = starts.join(firstEv, Seq(userCol), "left")
-      .join(broadcast(horizon), lit(true))
-      .select(
-        when(col("te").isNotNull, lit(1L)).otherwise(lit(0L)).as("obs"),
-        expr("(unix_timestamp(coalesce(te, tmax)) - unix_timestamp(t0))" +
-          " div 86400").as("d"))
-    val byD = dur.groupBy(col("d")).agg(count(lit(1)).as("n_at"),
-      sum(col("obs")).as("e_at"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("d").asc)
-    val wIncl = w.rowsBetween(
-      org.apache.spark.sql.expressions.Window.unboundedPreceding,
-      org.apache.spark.sql.expressions.Window.currentRow)
+    val w = Window.orderBy(col("d").asc)
+    val wIncl = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tau = lit(tauDays.toLong)
-    val c = byD
-      .withColumn("n_risk", sum(col("n_at")).over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window.currentRow,
-          org.apache.spark.sql.expressions.Window.unboundedFollowing)))
-      .withColumn("__lt",
-        when(col("e_at") < col("n_risk"),
-          log(lit(1.0) - col("e_at").cast("double") / col("n_risk"))))
+    val c = kmSteps(events, userCol, tsCol, typeCol, startType, eventType)
       .withColumn("surv",
         when(col("e_at") === col("n_risk"), lit(0.0))
           .otherwise(exp(sum(col("__lt")).over(wIncl))))
@@ -3538,20 +3455,9 @@ object Events {
                typeCol: String, startType: String, eventType: String,
                tauDays: Int): DataFrame = {
     require(tauDays >= 1, "need tauDays >= 1")
-    val starts = events.filter(col(typeCol) === startType)
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("t0"))
-    val firstEv = events.filter(col(typeCol) === eventType)
-      .join(starts, Seq(userCol))
-      .filter(col(tsCol) > col("t0"))
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("te"))
-    val horizon = events.agg(max(col(tsCol)).as("tmax"))
-    val dur = starts.join(firstEv, Seq(userCol), "left")
-      .join(broadcast(horizon), lit(true))
-      .select((col(userCol) % 2 === 1).as("arm"),
-        when(col("te").isNotNull, lit(1L)).otherwise(lit(0L)).as("obs"),
-        expr("(unix_timestamp(coalesce(te, tmax)) - unix_timestamp(t0))" +
-          " div 86400").as("d"))
-    val byD = dur.groupBy(col("arm"), col("d"))
+    val byD = survivalDurations(events, userCol, tsCol, typeCol,
+      startType, eventType, keep = Seq((col(userCol) % 2 === 1).as("arm")))
+      .groupBy(col("arm"), col("d"))
       .agg(count(lit(1)).as("n_at"), sum(col("obs")).as("e_at"))
       .localCheckpoint(eager = false)
     // jackknife blocks = every observed duration day; the -1 sentinel
@@ -3658,32 +3564,9 @@ object Events {
   def weibullFit(events: DataFrame, userCol: String, tsCol: String,
                  typeCol: String, startType: String, eventType: String)
       : DataFrame = {
-    val starts = events.filter(col(typeCol) === startType)
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("t0"))
-    val firstEv = events.filter(col(typeCol) === eventType)
-      .join(starts, Seq(userCol))
-      .filter(col(tsCol) > col("t0"))
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("te"))
-    val horizon = events.agg(max(col(tsCol)).as("tmax"))
-    val dur = starts.join(firstEv, Seq(userCol), "left")
-      .join(broadcast(horizon), lit(true))
-      .select(
-        when(col("te").isNotNull, lit(1L)).otherwise(lit(0L)).as("obs"),
-        expr("(unix_timestamp(coalesce(te, tmax)) - unix_timestamp(t0))" +
-          " div 86400").as("d"))
-    val byD = dur.groupBy(col("d")).agg(count(lit(1)).as("n_at"),
-      sum(col("obs")).as("e_at"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("d").asc)
-    val wIncl = w.rowsBetween(
-      org.apache.spark.sql.expressions.Window.unboundedPreceding,
-      org.apache.spark.sql.expressions.Window.currentRow)
-    val km = byD
-      .withColumn("n_risk", sum(col("n_at")).over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window.currentRow,
-          org.apache.spark.sql.expressions.Window.unboundedFollowing)))
-      .withColumn("__lt",
-        when(col("e_at") < col("n_risk"),
-          log(lit(1.0) - col("e_at").cast("double") / col("n_risk"))))
+    val wIncl = Window.orderBy(col("d").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val km = kmSteps(events, userCol, tsCol, typeCol, startType, eventType)
       .withColumn("surv",
         when(col("e_at") === col("n_risk"), lit(0.0))
           .otherwise(exp(sum(col("__lt")).over(wIncl))))
@@ -3740,36 +3623,15 @@ object Events {
     * duration rollup, one suffix window over DAYS. */
   def nelsonAalen(events: DataFrame, userCol: String, tsCol: String,
                   typeCol: String, startType: String,
-                  eventType: String): DataFrame = {
-    val starts = events.filter(col(typeCol) === startType)
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("t0"))
-    val firstEv = events.filter(col(typeCol) === eventType)
-      .join(starts, Seq(userCol))
-      .filter(col(tsCol) > col("t0"))
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("te"))
-    val horizon = events.agg(max(col(tsCol)).as("tmax"))
-    val dur = starts.join(firstEv, Seq(userCol), "left")
-      .join(broadcast(horizon), lit(true))
-      .select(
-        when(col("te").isNotNull, lit(1L)).otherwise(lit(0L)).as("obs"),
-        expr("(unix_timestamp(coalesce(te, tmax)) - unix_timestamp(t0))" +
-          " div 86400").as("d"))
-    val byD = dur.groupBy(col("d")).agg(count(lit(1)).as("n_at"),
-      sum(col("obs")).as("e_at"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("d").asc)
-    byD
-      .withColumn("n_risk", sum(col("n_at")).over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window.currentRow,
-          org.apache.spark.sql.expressions.Window.unboundedFollowing)))
+                  eventType: String): DataFrame =
+    kmSteps(events, userCol, tsCol, typeCol, startType, eventType)
       .withColumn("hazard_micros", expr("(1000000L * e_at) div n_risk"))
       .withColumn("cum_hazard_micros",
-        sum(col("hazard_micros")).over(w.rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)))
+        sum(col("hazard_micros")).over(Window.orderBy(col("d").asc)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select(col("d").as("duration_days"), col("n_risk"),
         col("e_at").as("n_events"), col("hazard_micros"),
         col("cum_hazard_micros"))
-  }
 
   /** COMPETING-RISKS cumulative incidence (Aalen–Johansen, the
     * two-cause case) — the survival family's answer when a user can
@@ -3845,18 +3707,8 @@ object Events {
     require(causeA != causeB && causeA != startType &&
       causeB != startType, "causes must be distinct from start")
     val tieWinsA = causeA <= causeB
-    val starts = events.filter(col(typeCol) === startType)
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("t0"))
-    def firstOf(tp: String, out: String): DataFrame =
-      events.filter(col(typeCol) === tp)
-        .join(starts, Seq(userCol))
-        .filter(col(tsCol) > col("t0"))
-        .groupBy(col(userCol)).agg(min(col(tsCol)).as(out))
-    val horizon = events.agg(max(col(tsCol)).as("tmax"))
-    val dur = starts
-      .join(firstOf(causeA, "ta"), Seq(userCol), "left")
-      .join(firstOf(causeB, "tb"), Seq(userCol), "left")
-      .join(broadcast(horizon), lit(true))
+    val dur = survivalSpells(events, userCol, tsCol, typeCol, startType,
+        Seq(causeA -> "ta", causeB -> "tb"))
       .select(
         when(col("ta").isNotNull && (col("tb").isNull ||
           col("ta") < col("tb") ||
@@ -4020,6 +3872,28 @@ object Events {
       .select(col(userCol), col(ordCol).as("conv_id"), col("touch_id"))
   }
 
+  /** The journey binding of the multi-touch attributions: each
+    * `touchType` event with the id (conv_id) and time (conv_ts) of the
+    * user's NEXT `convType` event under the (ts, ord) total order;
+    * touches with no later conversion drop. */
+  private def boundTouches(events: DataFrame, userCol: String,
+                           tsCol: String, ordCol: String, typeCol: String,
+                           touchType: String,
+                           convType: String): DataFrame = {
+    val wNext = Window.partitionBy(col(userCol))
+      .orderBy(col(tsCol).asc, col(ordCol).asc)
+      .rowsBetween(1, Window.unboundedFollowing)
+    events.select(col(userCol), col(ordCol), col(tsCol), col(typeCol))
+      .filter(col(typeCol).isin(touchType, convType))
+      .withColumn("conv_id",
+        first(when(col(typeCol) === convType, col(ordCol)),
+          ignoreNulls = true).over(wNext))
+      .withColumn("conv_ts",
+        first(when(col(typeCol) === convType, col(tsCol)),
+          ignoreNulls = true).over(wNext))
+      .filter(col(typeCol) === touchType && col("conv_id").isNotNull)
+  }
+
   /** LINEAR MULTI-TOUCH ATTRIBUTION — the other standard attribution
     * model ([[lastTouchAttribution]] is the degenerate 100%-to-last
     * case): every touch that precedes a conversion shares the credit
@@ -4044,16 +3918,8 @@ object Events {
   def linearAttribution(events: DataFrame, userCol: String,
                         tsCol: String, ordCol: String, typeCol: String,
                         touchType: String, convType: String): DataFrame = {
-    val wNext = Window.partitionBy(col(userCol))
-      .orderBy(col(tsCol).asc, col(ordCol).asc)
-      .rowsBetween(1, Window.unboundedFollowing)
-    val bound = events.select(col(userCol), col(ordCol), col(tsCol),
-        col(typeCol))
-      .filter(col(typeCol).isin(touchType, convType))
-      .withColumn("conv_id",
-        first(when(col(typeCol) === convType, col(ordCol)),
-          ignoreNulls = true).over(wNext))
-      .filter(col(typeCol) === touchType && col("conv_id").isNotNull)
+    val bound = boundTouches(events, userCol, tsCol, ordCol, typeCol,
+      touchType, convType)
     val wConv = Window.partitionBy(col(userCol), col("conv_id"))
     val wPos = wConv.orderBy(col(tsCol).asc, col(ordCol).asc)
     bound
@@ -4091,19 +3957,8 @@ object Events {
                            touchType: String, convType: String,
                            halfLifeSeconds: Long = 86400L): DataFrame = {
     require(halfLifeSeconds >= 1, "need halfLifeSeconds >= 1")
-    val wNext = Window.partitionBy(col(userCol))
-      .orderBy(col(tsCol).asc, col(ordCol).asc)
-      .rowsBetween(1, Window.unboundedFollowing)
-    val bound = events.select(col(userCol), col(ordCol), col(tsCol),
-        col(typeCol))
-      .filter(col(typeCol).isin(touchType, convType))
-      .withColumn("conv_id",
-        first(when(col(typeCol) === convType, col(ordCol)),
-          ignoreNulls = true).over(wNext))
-      .withColumn("conv_ts",
-        first(when(col(typeCol) === convType, col(tsCol)),
-          ignoreNulls = true).over(wNext))
-      .filter(col(typeCol) === touchType && col("conv_id").isNotNull)
+    val bound = boundTouches(events, userCol, tsCol, ordCol, typeCol,
+        touchType, convType)
       .withColumn("halvings",
         expr(s"(unix_timestamp(conv_ts) - unix_timestamp($tsCol))" +
           s" div ${halfLifeSeconds}L"))
@@ -4292,8 +4147,7 @@ object Events {
   def rollingAnomalies(events: DataFrame, groupCol: String, tsCol: String,
                        valueCol: String, windowSeconds: Long = 3600L,
                        sigmaNum: Long = 3L, sigmaDen: Long = 1L,
-                       minEvents: Long = 5L,
-                       idCol: String = "event_id"): DataFrame = {
+                       minEvents: Long = 5L): DataFrame = {
     require(windowSeconds > 0 && sigmaNum > 0 && sigmaDen > 0 &&
       minEvents >= 2,
       "need windowSeconds > 0, sigmaNum/sigmaDen > 0, minEvents >= 2")
@@ -4306,7 +4160,7 @@ object Events {
       .withColumn("n_window", count(lit(1)).over(w))
       .withColumn("__s1", sum(col("__x")).over(w))
       .withColumn("__s2", sum(col("__x") * col("__x")).over(w))
-      .select(col(idCol), col(groupCol), col(tsCol), col(valueCol),
+      .select(col("event_id"), col(groupCol), col(tsCol), col(valueCol),
         col("n_window"),
         (col("n_window") >= minEvents &&
           lit(sigmaDen * sigmaDen) *

@@ -905,7 +905,7 @@ object Graph {
   private def prImpl(edges: DataFrame, iters: Int, microScale: Long,
                      dampNum: Long, dampDen: Long, checkpointEvery: Int,
                      seed: Option[Column],
-                     danglingRedistribute: Boolean = false): DataFrame = {
+                     danglingRedistribute: Boolean): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     require(dampNum >= 0 && dampNum <= dampDen && dampDen > 0,
       "damping must satisfy 0 <= dampNum <= dampDen")
@@ -1060,8 +1060,6 @@ object Graph {
     * the sf0.001 graph. Raising m is one constant. */
   def hyperAnf(edges: DataFrame, maxHops: Int = 4): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    val spark = edges.sparkSession
-    import spark.implicits._
     val m = 32
     val two56 = 1L << 56
     val alphaNum = 0.697 * m * m * two56.toDouble

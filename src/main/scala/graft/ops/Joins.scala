@@ -15,9 +15,11 @@ import org.apache.spark.sql.functions._
   *    (maps the reference's `force_parallel=True` prop join,
   *    fa-etl.py:463-465, to a BroadcastHashJoin — no shuffle of the fact
   *    side).
-  *  - Repeated joins on the same key (the unified join chain, J3–J5)
-  *    reuse the fact side's hash partitioning: Catalyst inserts one
-  *    Exchange on PropertyID and the later same-key joins reuse it.
+  *  - The unified join chain (J3–J5) does not keep one partitioning:
+  *    the m:1 guard rewrites J3's right-side key, so that side is shuffled
+  *    twice, and J4/J5 join on (PropertyID, year), so the fact side is
+  *    shuffled again after J3 — six exchanges in all
+  *    (see `fa.Stages.unifiedJoin`).
   */
 object Joins {
 
@@ -90,8 +92,7 @@ object Joins {
     * nothing; the first action over the join raises on a contract
     * violation. NULL keys never match, so they never violate it. */
   def leftJoinValidated(left: DataFrame, right: DataFrame, keys: Seq[String],
-                        expect: String,
-                        broadcastRight: Boolean = false): DataFrame = {
+                        expect: String): DataFrame = {
     val (gl, gr) = expect match {
       case "m:1" => (left, withUniqueKeyGuard(right, keys, "right side of m:1 join"))
       case "1:m" => (withUniqueKeyGuard(left, keys, "left side of 1:m join"), right)
@@ -101,7 +102,7 @@ object Joins {
       case other => throw new IllegalArgumentException(
         s"expect must be one of m:1, 1:m, 1:1, m:m — got '$other'")
     }
-    leftJoin(gl, gr, keys, broadcastRight)
+    leftJoin(gl, gr, keys)
   }
 
   /** As-of join (backward): for each left row, attach the single right row

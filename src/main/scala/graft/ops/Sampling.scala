@@ -351,10 +351,7 @@ object Sampling {
                      replicates: Int = 50): DataFrame = {
     require(blockLen >= 1 && replicates >= 1,
       "need blockLen, replicates >= 1")
-    val daily = events.select(col(groupCol).as("g"),
-        expr(s"unix_timestamp(date_trunc('day', $tsCol)) div 86400")
-          .as("day"))
-      .groupBy(col("g"), col("day")).agg(count(lit(1)).as("y"))
+    val daily = Events.dailyCounts(events, col(groupCol).as("g"), tsCol)
     val wd = org.apache.spark.sql.expressions.Window
       .partitionBy(col("g")).orderBy(col("day").asc)
     val series = daily

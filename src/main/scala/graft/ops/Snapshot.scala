@@ -57,10 +57,11 @@ object Snapshot {
     * snapshot, last-write-wins (the batch face of Delta/Iceberg `MERGE
     * INTO`, and the inverse of [[diff]]: `applyCdc(old, diff-as-changes)`
     * reconstructs `new`). `changes` carries the base's key + value
-    * columns plus `seqCol` (change order within the batch) and `opCol`
-    * (`upsertOp` or `deleteOp`). Per key, only the HIGHEST-`seqCol`
-    * change applies: an upsert replaces the base row (or inserts a new
-    * one); a delete removes it. Untouched base rows pass through. Output:
+    * columns plus `seqCol` (change order within the batch) and `opCol`.
+    * Per key, only the HIGHEST-`seqCol` change applies: an `upsertOp`
+    * change replaces the base row (or inserts a new one); a change with
+    * any other op, such as "D", deletes it. Untouched base rows pass
+    * through. Output:
     * the merged snapshot with a `src` column (`base` = passed through
     * unchanged, `cdc` = inserted/replaced by the batch).
     *
@@ -78,7 +79,7 @@ object Snapshot {
     * with the base scan + the batch, not base × batch. */
   def applyCdc(base: DataFrame, changes: DataFrame, keys: Seq[String],
                seqCol: String, opCol: String,
-               upsertOp: String = "U", deleteOp: String = "D"): DataFrame = {
+               upsertOp: String = "U"): DataFrame = {
     require(keys.nonEmpty, "need at least one key column")
     // the provenance column is appended below — a base that already
     // carries one would pass the shape check (it lands in valueCols)

@@ -156,15 +156,6 @@ object TextAnalysis {
   def contentFingerprint(text: Column): Column =
     md5(array_join(array_sort(array_distinct(tokens(text))), " "))
 
-  /** Positions a packed (hash, pos) winnowing key can address: documents
-    * must have fewer than 2^20 token positions (a 1M-token doc is ~4 MB
-    * of text — chunk longer docs first, q51's operator). The packing
-    * keeps the window minimum a plain BIGINT `min` in both engines:
-    * h₁·S+p₁ < h₂·S+p₂ ⟺ h₁ < h₂ (or equal-h, smaller pos) since
-    * pos < S — so the struct-free frame min IS the (hash, leftmost-pos)
-    * winner. */
-  private val WinnowPosScale = 1048576L
-
   /** WINNOWED document fingerprints (Schleimer, Wilkerson & Aiken 2003 —
     * the MOSS algorithm): hash every word `k`-gram, slide a window of
     * `w` consecutive positions, keep each window's minimum hash. The
@@ -1053,7 +1044,7 @@ object TextAnalysis {
     * the card's keep rate is exactly what the filter would do.
     * `avg_words` divides two exact longs once (round 4) instead of
     * averaging doubles — no partial-sum order in the result. */
-  def corpusCard(df: DataFrame, idCol: String, textCol: String,
+  def corpusCard(df: DataFrame, textCol: String,
                  groupCols: Seq[String], charsCol: String,
                  minWords: Int = 50, maxWords: Int = 100000,
                  stopWords: Seq[String] = gopherStops,

@@ -169,7 +169,7 @@ class FaPipelineSpec extends AnyFunSuite {
     intercept[ZipException] { new Pipeline(spark, dir).run() }
     // the status tracker learns of job ends through the listener bus
     GraftTestBus.flush(spark.sparkContext)
-    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
     assert(!Thread.getAllStackTraces.keySet.asScala
       .exists(t => t.getName.startsWith("fa-pipeline-") && t.isAlive))
   }

@@ -511,7 +511,7 @@ class NewOpsPropertySpec extends AnyFunSuite {
     // reliably): measured 40/69 at nProbe=4, 58/69 at nProbe=8 (0.841),
     // 69/69 at nProbe=16. Gate at >= 0.8 so a routing regression shows.
     val bruteLeaked = brute.count(_._2 > 0)
-    val routedLeaked = routed.count { case (id, n) => n > 0 }
+    val routedLeaked = routed.count { case (_, n) => n > 0 }
     assert(bruteLeaked > 0, "corpus lost its leaked pairs — regen drift?")
     assert(routedLeaked.toDouble / bruteLeaked >= 0.8,
       s"recall ${routedLeaked.toDouble / bruteLeaked} below the 0.84 band")
@@ -736,6 +736,33 @@ class NewOpsPropertySpec extends AnyFunSuite {
         "signup", "purchase")
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(g1 == Seq((1L, 1L, 1L, 0.0)), g1)
+  }
+
+  test("survival day table: kaplanMeier, kaplanMeierCi and nelsonAalen " +
+    "agree on hand-computed (duration_days, n_risk, n_events) — a " +
+    "purchase AT or BEFORE signup ends nothing, no signup is no spell") {
+    val ev = Seq(
+      (1L, "signup", "2024-01-01 00:00:00"),
+      (1L, "purchase", "2024-01-01 00:00:00"),  // at signup: censored, dur 4
+      (2L, "purchase", "2024-01-01 06:00:00"),  // before signup:
+      (2L, "signup", "2024-01-02 00:00:00"),    //   censored, dur 3
+      (3L, "signup", "2024-01-01 00:00:00"),    // never buys: dur 4
+      (3L, "view", "2024-01-05 00:00:00"),      // the horizon
+      (4L, "signup", "2024-01-01 00:00:00"),
+      (4L, "purchase", "2024-01-03 01:00:00"),  // dur 2, observed
+      (5L, "signup", "2024-01-01 12:00:00"),
+      (5L, "purchase", "2024-01-03 20:00:00"),  // 2 d 8 h: dur 2, observed
+      (6L, "purchase", "2024-01-02 00:00:00")   // no signup: not at risk
+    ).toDF("user_id", "event_type", "ts_s")
+      .withColumn("ts", to_timestamp(col("ts_s")))
+    val want = Seq((2L, 5L, 2L), (3L, 3L, 0L), (4L, 2L, 0L))
+    Seq(Events.kaplanMeier _, Events.kaplanMeierCi _, Events.nelsonAalen _)
+      .foreach { op =>
+        val got = op(ev, "user_id", "ts", "event_type", "signup", "purchase")
+          .select("duration_days", "n_risk", "n_events")
+          .as[(Long, Long, Long)].collect().sorted.toSeq
+        assert(got == want, got)
+      }
   }
 
   test("sequenceSupport: strictly-before exists semantics; (a,a) counts " +
