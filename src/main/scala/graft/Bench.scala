@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR.
@@ -18,20 +17,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // drift-chasing knobs: SPARK_GRAFT_BENCH_ONLY=q29,q45 restricts to
     // name prefixes; SPARK_GRAFT_BENCH_RUNS=5 raises the per-query run
     // count (min still reported). Defaults reproduce the driver gate.
     val Runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark)
+    // local[SPARK_GRAFT_CPUS] with as many shuffle partitions
+    val spark = GraftSession()
     // Warm the session (executor startup, codegen, parquet footers) so the
     // first timed query doesn't absorb ~3s of one-time cost.
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -37,7 +37,7 @@ object GraftExtensions {
   /** Every SQL function graft exposes, as (name, usage, builder): the one
     * list both [[GraftExtensions.apply]] (build-time injection) and
     * [[register]] (an already-built session) install. */
-  private def functions: Seq[(String, String, Builder)] = Seq(
+  private[graft] def functions: Seq[(String, String, Builder)] = Seq(
     ("simhash64", "simhash64(array<string>) - 64-bit SimHash",
       args => SimHash64(args.head)),
     ("cosine_sim", "cosine_sim(array<double>, array<double>) - cosine similarity",
@@ -119,11 +119,15 @@ object GraftExtensions {
   }
 
   /** Register the same functions on an already-built session (extensions
-    * normally apply at build time; this covers driver-owned sessions). */
+    * normally apply at build time; this covers driver-owned sessions).
+    * Only names the session's registry lacks are registered, so calling
+    * this on every table load leaves the registry as the first call set
+    * it. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg: FunctionRegistry = spark.sessionState.functionRegistry
     functions.foreach { case (name, _, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
   }
 }

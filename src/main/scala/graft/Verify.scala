@@ -1,23 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // engine confs (ansi off, nanosAsLong, partition inference off, AQE)
-    // must hold for EVERY query — not only after some query's own loader
-    // happens to call tune() first (queries is an unordered Map)
-    GraftSession.tune(spark)
+    // local[SPARK_GRAFT_CPUS] with as many shuffle partitions; the engine
+    // confs (ansi off, nanosAsLong, partition inference off, AQE) must hold
+    // for EVERY query — not only after some query's own loader happens to
+    // call tune() first (queries is an unordered Map)
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // dev-only: SPARK_GRAFT_ONLY=q53,q54 restricts the dump (prefix
     // match); the driver never sets it, so its runs stay exhaustive

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.zip.ZipFile
 import scala.jdk.CollectionConverters._
@@ -13,12 +14,19 @@ import scala.jdk.CollectionConverters._
   */
 object Sources {
 
-  /** S4/S5 (fa-etl.py:84,107,419,482): snappy parquet sink, overwrite. */
+  /** S4/S5 (fa-etl.py:84,107,419,482): snappy parquet sink, overwrite.
+    * The output is read back with the schema just written, so the
+    * read-back runs no schema-inference job: the data columns, then the
+    * partition columns as strings (partition type inference is off in
+    * every graft session). */
   def sinkParquet(df: DataFrame, path: String,
                   partitionBy: Seq[String] = Nil): DataFrame = {
     val w = df.write.mode("overwrite").option("compression", "snappy")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-    df.sparkSession.read.parquet(path)
+    val written = StructType(
+      df.schema.filterNot(f => partitionBy.contains(f.name)) ++
+        partitionBy.map(StructField(_, StringType)))
+    df.sparkSession.read.schema(written).parquet(path)
   }
 
   /** S6 (fa-etl.py:44-47,...): idempotent stage — skip recompute if the

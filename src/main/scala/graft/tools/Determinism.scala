@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Flake hunter: run queries repeatedly across thread counts and print a
@@ -26,13 +25,9 @@ object Determinism {
         cpus <- Seq("32", "7")
         _ <- 1 to 2
       } yield {
-        val spark = SparkSession.builder().master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
+        val spark = graft.GraftSession(master = s"local[$cpus]",
+          shufflePartitions = Some(cpus.toInt))
         spark.sparkContext.setLogLevel("ERROR")
-        graft.GraftSession.tune(spark)
         val df = graft.SparkEntry.queries(name)(spark, sfDir)
         val cols = df.columns.sorted.map(c => col(c).cast("string"))
         val h = df.select(md5(concat_ws("|", cols.toIndexedSeq: _*)).as("r"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Calibration probe for the q45 scale path: is the banded MinHash-LSH
@@ -12,11 +11,9 @@ import org.apache.spark.sql.functions._
   * complete. */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession(master = "local[32]",
+      shufflePartitions = Some(32))
     spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.tune(spark)
     import spark.implicits._
     // probe-only rotation application (collect-rotate-recreate; the
     // production application is a per-row map like opqRotate)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SQL access to the native expressions via the extensions hook. */
@@ -95,6 +96,19 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // null-strict like every binary string function
     assert(spark.sql("SELECT jaro_winkler(CAST(NULL AS STRING), 'x') j")
       .collect()(0).isNullAt(0))
+  }
+
+  test("a second tune registers no function again") {
+    GraftSession.tune(spark)
+    val reg = spark.sessionState.functionRegistry
+    def infos = GraftExtensions.functions.map { case (name, _, _) =>
+      reg.lookupFunction(FunctionIdentifier(name)).get
+    }
+    val first = infos
+    GraftSession.tune(spark)
+    first.zip(infos).foreach { case (a, b) =>
+      assert(a eq b, s"${a.getName} was registered again")
+    }
   }
 
   test("withExtensions wires functions at session build") {

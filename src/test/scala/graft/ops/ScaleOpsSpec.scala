@@ -314,6 +314,41 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(back.filter(col("FIPS") === "01001").count() == 1)
   }
 
+  test("sinkParquet runs one job: the write, and no schema inference on read-back") {
+    val sc = TestSpark.spark.sparkContext
+    val df = Seq(("01001", 1L), ("36061", 2L)).toDF("FIPS", "v")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBus.flush(sc)
+    sc.addSparkListener(listener)
+    try for (partitionBy <- Seq(Nil, Seq("FIPS"))) {
+      val dir = Files.createTempDirectory("sink_jobs").toString
+      jobs.set(0)
+      Sources.sinkParquet(df, dir, partitionBy)
+      org.apache.spark.GraftTestBus.flush(sc)
+      assert(jobs.get() == 1, s"partitionBy=$partitionBy ran ${jobs.get()} jobs")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("sinkParquet reads back the schema that inference gives") {
+    // non-nullable long and array elements, and a non-string partition
+    // column: the read-back must match a plain inferred read of the files
+    val df = Seq((1001, 1L, Seq(1, 2)), (36061, 2L, Seq(3)))
+      .toDF("FIPS", "v", "xs")
+    for (partitionBy <- Seq(Nil, Seq("FIPS"))) {
+      val dir = Files.createTempDirectory("sink_schema").toString
+      val back = Sources.sinkParquet(df, dir, partitionBy)
+      val inferred = TestSpark.spark.read.parquet(dir)
+      assert(back.schema == inferred.schema, s"partitionBy=$partitionBy")
+      assert(back.orderBy("v").collect().toSeq ==
+        inferred.orderBy("v").collect().toSeq)
+    }
+  }
+
   test("guarded jaccardPairs keeps identical docs at 1.0 despite hot shingles") {
     // 12 docs share the hot gram universe of 'common common common ...';
     // docs 1 and 2 are identical and also contain unique material

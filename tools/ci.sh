@@ -8,8 +8,19 @@ cd "$(dirname "$0")/.."
 
 sbt -batch test
 
+# graft.Verify <sf dir> <out dir>, its output kept in <out dir>/verify.log:
+# a session registers each graft SQL function once, so Spark's warning
+# that a function replaced a registered one fails the step
+verify() {
+  sbt -batch "runMain graft.Verify $1 $2/verify" 2>&1 | tee "$2/verify.log"
+  if grep -q "replaced a previously registered function" "$2/verify.log"; then
+    echo "graft.Verify registered a function twice: $2/verify.log" >&2
+    exit 1
+  fi
+}
+
 out=$(mktemp -d)
-sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $out/verify"
+verify /root/testdata/sf0.01 "$out"
 python3 tools/check.py /root/testdata/sf0.01 "$out/verify"
 
 # cross-SCALE probe (the verify-skill gotcha): every query must also
@@ -17,7 +28,7 @@ python3 tools/check.py /root/testdata/sf0.01 "$out/verify"
 # (partition-count-sensitive float sums, rank ties that only collide at
 # one cardinality) that a single-scale gate cannot see
 out2=$(mktemp -d)
-sbt -batch "runMain graft.Verify /root/testdata/sf0.001 $out2/verify"
+verify /root/testdata/sf0.001 "$out2"
 python3 tools/check.py /root/testdata/sf0.001 "$out2/verify"
 
 # per-shape time budgets on the 200k-doc replicated corpus: catches
